@@ -5,8 +5,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 
 /** Dev tool: frontier-only trials at one parallelism level, for fast
-  * A/B of engine changes (e.g. GRAFT_NO_PIN) without the full Bench
-  * pass. Prints per-trial wall secs + the min.
+  * A/B of engine changes without the full Bench pass. Prints per-trial
+  * wall secs + the min.
   */
 object FBench {
   def main(args: Array[String]): Unit = {
@@ -32,7 +32,7 @@ object FBench {
       s
     }
     println(f"[fb] cpus=$cpus n=$n min=${secs.min}%6.2f s " +
-      f"(${n / secs.min / 1000}%.0fk urls/s) nopin=${sys.env.contains("GRAFT_NO_PIN")}")
+      f"(${n / secs.min / 1000}%.0fk urls/s)")
     spark.stop()
   }
 }

@@ -4,8 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Dev A/B harness for frontier experiments: runs the frontier slice at
   * two parallelism levels, interleaved per trial (same noise window per
-  * pair), printing per-trial walls. Knobs ride in via env (GRAFT_PIN_MODE
-  * etc.) so one binary compares engine variants.
+  * pair), printing per-trial walls.
   * Usage: runMain graft.FrontierAB [nRecords] [trials] [hiCores]
   */
 object FrontierAB {
@@ -24,7 +23,6 @@ object FrontierAB {
       }
     }
 
-    val mode = sys.env.getOrElse("GRAFT_PIN_MODE", "ckpt")
     (0 until trials).foreach { t =>
       val sHi = atLevel(hi) { s =>
         if (t == 0) Bench.frontierRun(s, n / 10, warm = false)
@@ -34,7 +32,7 @@ object FrontierAB {
         if (t == 0) Bench.frontierRun(s, n / 10, warm = false)
         Bench.frontierRun(s, n, warm = false)
       }
-      println(f"[ab] mode=$mode trial=$t hi[$hi]=$sHi%.2f s lo[8]=$sLo%.2f s eff=${sLo / sHi / (hi / 8.0)}%.3f")
+      println(f"[ab] trial=$t hi[$hi]=$sHi%.2f s lo[8]=$sLo%.2f s eff=${sLo / sHi / (hi / 8.0)}%.3f")
     }
   }
 }

@@ -42,12 +42,33 @@ object FrontierJob {
                fetchBatchSize: Long = 1000,
                dumpId: String = "batch",
                cacheIntermediates: Boolean = true): Result = {
-    // cacheIntermediates trades recompute for materialization. Default
-    // off: the scan->filter->agg chain stays inside whole-stage codegen
-    // and recomputation is CPU-parallel, which scales better than pushing
-    // the working set through the memory subsystem (cache write+read) —
-    // measured 8->32 cores on this class of hardware. Turn on when the
-    // upstream scan is genuinely expensive (e.g. remote object store).
+    // What is pinned, so that each chain with two consumers runs once:
+    //  - the gated winners, whenever the quota is effectively unbounded
+    //    (politenessRankByFile: its cum-count aggregate and its rank
+    //    window both read them). Always on; on the fast path (no robots,
+    //    unlimited quota) the written batches parquet then feeds the seen
+    //    delta, so `kept` is never pinned there.
+    //  - with cacheIntermediates, on the polite path (robots or a finite
+    //    quota): `kept` (the robots gate and the seen-delta write both
+    //    read it) and, for a small quota, the ranked frame out of
+    //    politenessRankEx (crawlOrderByWarc's per-warc window and per-warc
+    //    count both read it; unpinned, the robots gate and the salted
+    //    rank window ran once per consumer).
+    // Pins are localCheckpoint()s, not persist(): AQE may not coalesce a
+    // cached plan's output partitioning, so with a persisted `kept` every
+    // stage below it ran the url window's full shuffle partition count,
+    // each task deserializing a binary that carried the cached plan. A
+    // local checkpoint goes through AQE (coalesced partitions) and
+    // truncates lineage (small task binaries). Measured per polite batch
+    // on a 4-core box (15k lines, 400 hosts, quota 4, robots): 318 -> 28
+    // tasks, 4.2 -> 2.0 s executor CPU, and 4.9 -> 2.8 s for the pins,
+    // batches write and seen-delta write together.
+    //
+    // Failure semantics: a local checkpoint cannot be recomputed. If a
+    // pinned block is lost (its executor died), the batch fails loudly
+    // before its commit, and a rerun resumes from Snapshots.latest. It
+    // never returns different rows. With cacheIntermediates = false the
+    // polite path pins neither frame and each consumer recomputes.
     //
     // Two shuffle byte-diets were measured here (r3, min-of-3 A/B at 8M
     // URLs, local[32]) and REJECTED — recorded so they aren't re-tried:
@@ -102,14 +123,15 @@ object FrontierJob {
     val keptIsOrdered = robots.isEmpty && politenessQuota == Int.MaxValue
     // winners count rides as an Observation on the kept frame when the
     // robots/quota path can drop rows downstream — the metrics collect
-    // during the seen-delta write instead of a dedicated count job
+    // during the pin job (or, unpinned, the seen-delta write) instead of
+    // a dedicated count job
     val obsWin  = Observation()
     val kept0raw = UrlDedup.winnersKept(fresh, keep)
     val kept0 = if (keptIsOrdered) kept0raw
                 else kept0raw.observe(obsWin, count(lit(1)).as("n_winners"))
-    val kept = if (cacheIntermediates && !keptIsOrdered)
-      kept0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else kept0
+    val pinPolite = cacheIntermediates && !keptIsOrdered
+    val kept = if (pinPolite) phase("pin kept")(kept0.localCheckpoint())
+               else kept0
 
     // 4. J8 robots gate on (host_key, path)
     val gated = robots match {
@@ -124,8 +146,6 @@ object FrontierJob {
     }
 
     // 5. politeness waves (per-host quota), then O3 crawl order + batches.
-    // crawlOrder checkpoints its sorted input internally (its two
-    // consumers need identical partitioning), so no persist here.
     //
     // The frontier's priority IS (file_ord, line_ord), so the rank
     // decomposes per index file (politenessRankByFile): one hash
@@ -136,28 +156,14 @@ object FrontierJob {
     // the salted window path, which prunes losers before they shuffle.
     val useByFile = politenessQuota >= Int.MaxValue / 16 &&
       !sys.env.contains("GRAFT_POLITE_WINDOW")
-    // GRAFT_NO_PIN (measured experiment, kept as a knob): skip the
-    // checkpoint and let Catalyst's ReuseExchange share the winner-window
-    // shuffle files between the cum/rank/count consumers instead. On this
-    // box (4M URLs, local[32], min of 3 trials) no-pin is 24.3 s vs the
-    // pin's 14.9 s — the upstream parse→anti-join chain re-executes per
-    // consumer beyond what ReuseExchange covers, so the checkpoint's one
-    // block-manager pass is the cheaper trade. Default stays pinned.
-    val noPin = sys.env.contains("GRAFT_NO_PIN")
-    // GRAFT_PIN_MODE=persist: pin via the compressed in-memory COLUMNAR
-    // cache instead of localCheckpoint's raw UnsafeRow blocks — the
-    // string-heavy frame (url/warc/file) dictionary/RLE-compresses, so
-    // each consumer's re-read moves fewer bytes through the memory
-    // subsystem (the bandwidth-bound resource at high core counts).
-    val pinMode = sys.env.getOrElse("GRAFT_PIN_MODE", "ckpt")
-    def pin(df: DataFrame): DataFrame = pinMode match {
-      case "persist" =>
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      case _ => df.localCheckpoint()
-    }
+    // Measured alternatives to this pin, both slower: no pin, relying on
+    // ReuseExchange to share the winner-window shuffle (4M URLs,
+    // local[32], min of 3: 24.3 s vs the pin's 14.9 s, since the
+    // parse→anti-join chain re-executes per consumer), and persist()'s
+    // compressed columnar cache in place of the raw-row checkpoint.
     val (ranked, rankCache, warcCountSrc) = phase("politeness rank") {
       if (useByFile) {
-        val pinned = if (noPin) gated else pin(gated)
+        val pinned = gated.localCheckpoint()
         val r = Frontier.politenessRankByFile(pinned, "host_key")
         val limited =
           if (politenessQuota < Int.MaxValue)
@@ -167,17 +173,23 @@ object FrontierJob {
         // cannot drop rows — only then may the crawl-order count branch
         // read the pin instead of the ranked chain
         val cntSrc = if (politenessQuota < Int.MaxValue) None else Some(pinned)
-        (limited, if (noPin) Seq.empty else Seq(pinned), cntSrc)
+        (limited, Seq(pinned), cntSrc)
       } else {
         val (r, caches) = Frontier.politenessRankEx(
           gated, "host_key", Seq(asc("file_ord"), asc("line_ord")),
           politenessQuota)
-        (r, caches, None)
+        // crawlOrderByWarc reads its input twice (per-warc window and
+        // per-warc count); the salted pre-prune's row-id salt keeps the
+        // two from sharing an exchange, so pin the (quota-capped) rank
+        if (pinPolite) {
+          val pinned = r.localCheckpoint()
+          (pinned, caches :+ pinned, None)
+        } else (r, caches, None)
       }
     }
     // O3 without a range sort or checkpoint: ord decomposes per warc
     // (crawlOrderByWarc) and every downstream consumer reads the written
-    // parquet, so nothing needs pinning — the whole rank→order→batch
+    // parquet, so nothing past the rank needs pinning — the order→batch
     // chain materializes exactly once, in the batches write.
     val ordered =
       phase("order (df-native)")(UrlDedup.crawlOrderByWarc(ranked, warcCountSrc))
@@ -192,12 +204,8 @@ object FrontierJob {
     // the sort chain.
     val (snapId, dataDir, stateDir) = Snapshots.stage(tableDir)
     val batchesPath = dataDir.resolveSibling(s"snap-$snapId-batches").toString
-    // GRAFT_PARQUET_CODEC (measured experiment knob): the batch write is
-    // the one full-width materialization left per batch; if it is
-    // bandwidth-bound the codec's bytes-vs-cpu trade moves the wall.
-    val codec = sys.env.getOrElse("GRAFT_PARQUET_CODEC", "snappy")
     phase("write batches") {
-      batches0.write.mode("overwrite").option("compression", codec)
+      batches0.write.mode("overwrite").option("compression", "snappy")
         .parquet(batchesPath)
     }
     val batches = spark.read.parquet(batchesPath)
@@ -207,7 +215,7 @@ object FrontierJob {
     // exactly the winner set — the delta is a single-COLUMN re-read of it
     // (parquet prunes to `url`), not another full-width pass over the
     // sort checkpoint. Only the robots/quota path still pays a pass over
-    // `kept` (which also collects its Observation metrics).
+    // `kept` (its pin, when cacheIntermediates).
     val winnerSrc = if (keptIsOrdered) batches else kept
     phase("write seen delta") {
       winnerSrc.select("url").write.mode("overwrite").parquet(dataDir.toString)
@@ -263,7 +271,7 @@ object FrontierJob {
       if (keptIsOrdered) nKept
       else obsWin.get("n_winners").asInstanceOf[Long]
     rankCache.foreach(UrlDedup.releaseOrderCache)
-    if (cacheIntermediates && !keptIsOrdered) kept.unpersist()
+    if (pinPolite) UrlDedup.releaseOrderCache(kept)
     val metrics = Map(
       "n_new_entries" -> obsNew.get("n_new_entries").asInstanceOf[Long],
       "n_winners"     -> nWinners,

@@ -94,9 +94,14 @@ object LshDedup {
     // checkpoint loop (~6 jobs/iteration) with ONE job; above the
     // threshold the distributed min-label/pointer-jump loop runs.
     // Labels match the loop exactly: component = min member ord.
-    val nEdges = edges.count()
+    // The edges are pinned first: the size probe and either solve then
+    // read the pin instead of each re-running the edge chain. The local
+    // solve's lazy result still reads the pin, so it is left to the
+    // context cleaner there; the loop below releases it explicitly.
+    val pinned = edges.localCheckpoint()
+    val nEdges = pinned.count()
     if (nEdges <= localThreshold) {
-      return edges.select($"src", $"dst").as[(Long, Long)]
+      return pinned.select($"src", $"dst").as[(Long, Long)]
         .coalesce(1)
         .mapPartitions { it =>
           val parent = mutable.HashMap.empty[Long, Long]
@@ -124,8 +129,8 @@ object LshDedup {
         }
         .toDF("ord", "comp")
     }
-    val sym = edges.select($"src".as("a"), $"dst".as("b"))
-      .unionByName(edges.select($"dst".as("a"), $"src".as("b")))
+    val sym = pinned.select($"src".as("a"), $"dst".as("b"))
+      .unionByName(pinned.select($"dst".as("a"), $"src".as("b")))
       .persist(StorageLevel.MEMORY_AND_DISK)
     def checksum(df: DataFrame): java.math.BigDecimal =
       df.agg(sum($"comp".cast("decimal(38,0)"))).head().getDecimal(0)
@@ -160,6 +165,7 @@ object LshDedup {
       iter += 1
     }
     sym.unpersist()
+    UrlDedup.releaseOrderCache(pinned)
     // Non-convergence would mean WRONG components -> wrong dedup
     // survivors with no signal (the reference, single-process, cannot
     // have this failure mode). Fail loudly instead of shipping them:
