@@ -333,9 +333,17 @@ object Bench {
     }
   }
 
-  def main(args: Array[String]): Unit = {
+  /** Deployment settings shared with Probe: (the SF dir the queries read,
+    * the session's core count).
+    */
+  private[graft] def settings: (String, Int) = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    (sfDir, cpus)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val (sfDir, cpus) = settings
     // 8M URLs: large enough that per-batch fixed costs (driver planning,
     // sort-boundary sampling, snapshot commit) amortize — at 4M they are
     // ~30% of the 32-core wall and understate the rate at both levels
@@ -356,14 +364,8 @@ object Bench {
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}") }
       }
-      // queries persist/localCheckpoint intermediates for their own
-      // multi-consumer plans; drop them so blocks never skew later
-      // queries' timings. clearCache only covers cached Datasets —
-      // checkpoint blocks live in persistent RDDs and need the RDD-level
-      // unpersist (Dataset.unpersist is a no-op for them).
-      sHi.catalog.clearCache()
-      sHi.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      // queries pin intermediates for their own multi-consumer plans
+      Sessions.releasePins(sHi)
       name -> secs
     }
     sHi.stop()

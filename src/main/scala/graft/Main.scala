@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** spark-submit entry point (north rule: "launched with spark-submit on
-  * N and 4N executors"). Unlike the dev mains (Verify/Bench/QBench),
+  * N and 4N executors"). Unlike the dev mains (Verify/Bench/Probe),
   * this builder NEVER forces a master: under spark-submit the cluster
   * manager supplies `spark.master` and executor sizing, and the session
   * inherits them — the same jar runs unchanged on local[N], YARN, k8s

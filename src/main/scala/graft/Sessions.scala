@@ -2,9 +2,15 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session + table-loading helpers shared by SparkEntry / Verify / Bench /
-  * tests. Settings follow the scale guidance: AQE on, shuffle partitions
-  * sized for local[32] rather than the 200 default.
+/** Session, table-loading and pin helpers shared by SparkEntry / Verify /
+  * Bench / Probe / tests. The repo builds sessions in exactly three places:
+  *   - `Sessions.local`: tests (`TestSpark`) and `Verify`;
+  *   - `Bench.session`: `Bench` and `Probe` (tmpfs shuffle dir, 2x cores
+  *     shuffle partitions, 8g off-heap) so their timings agree;
+  *   - `Main.clusterSession`: spark-submit and the perfbench harness (the
+  *     master and executor sizing come from the submit conf).
+  * Settings follow the scale guidance: AQE on, shuffle partitions sized to
+  * the core count rather than the 200 default.
   */
 object Sessions {
 
@@ -13,8 +19,7 @@ object Sessions {
     * 200-partition scheduling overhead.
     */
   def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
-    val spark = SparkSession
-      .builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cores.toString)
@@ -29,6 +34,17 @@ object Sessions {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** Drop every pin in `spark`: cached Datasets (clearCache) and the
+    * persistent RDDs behind localCheckpoint()s, which clearCache does not
+    * cover and Dataset.unpersist cannot reach. Non-blocking. Run between
+    * queries so one query's blocks never skew the next one's timing.
+    */
+  def releasePins(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
   }
 
   /** Read one of the driver-provided parquet tables under `dir`. */

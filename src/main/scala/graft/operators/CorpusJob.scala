@@ -147,7 +147,6 @@ object CorpusJob {
           cur = spark.read.parquet(s"$tableDir/${m.dataPath}")
           m
         case None =>
-          val t0 = System.nanoTime()
           if (rowsIn < 0) {
             if (i == 0) {
               // pin the (possibly expensive) input chain once: the
@@ -174,10 +173,6 @@ object CorpusJob {
             Map("rows_in" -> rowsIn, "rows_out" -> rowsOut,
                 "params_fp" -> paramsFp),
             lineage = s"corpus stage=$name")
-          if (sys.env.contains("GRAFT_PHASE_LOG"))
-            System.err.println(f"[corpusjob] stage=$name%-9s " +
-              f"${(System.nanoTime() - t0) / 1e9}%6.2f s " +
-              f"rows_in=$rowsIn rows_out=$rowsOut")
           rowsIn = rowsOut
           m
       }

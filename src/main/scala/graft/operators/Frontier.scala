@@ -44,15 +44,13 @@ object Frontier {
                        priorityCols: Seq[Column],
                        quota: Int,
                        salts: Int = 16): (DataFrame, Seq[DataFrame]) = {
-    if (quota >= Int.MaxValue / math.max(salts, 1) &&
-        !sys.env.contains("GRAFT_POLITE_WINDOW")) {
+    if (quota >= Int.MaxValue / math.max(salts, 1)) {
       // Large/unbounded quota: the window below would put a mega-host's
       // EVERY row into one task (the pre-prune keeps quota*salts rows per
       // host — no bound when quota is this large) — straggler/OOM at a
       // skewed host distribution. Exact skew-free path instead; a FINITE
       // quota routed here is still enforced by filtering on the exact
       // wave (it was silently dropped before r5).
-      // GRAFT_POLITE_WINDOW=1 forces the legacy window path (A/B only).
       val (ranked, caches) =
         politenessRankUnbounded(candidates, hostCol, priorityCols)
       val limited =

@@ -21,17 +21,6 @@ object FrontierJob {
 
   case class Result(batches: DataFrame, manifest: Snapshots.Manifest)
 
-  private val phaseLog = sys.env.contains("GRAFT_PHASE_LOG")
-  private def phase[A](name: String)(f: => A): A = {
-    if (!phaseLog) f
-    else {
-      val t0 = System.nanoTime()
-      val a  = f
-      println(f"[fj] $name%-18s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      a
-    }
-  }
-
   /** One frontier batch against the table at `tableDir`. */
   def runBatch(spark: SparkSession,
                rawLines: DataFrame,
@@ -130,8 +119,7 @@ object FrontierJob {
     val kept0 = if (keptIsOrdered) kept0raw
                 else kept0raw.observe(obsWin, count(lit(1)).as("n_winners"))
     val pinPolite = cacheIntermediates && !keptIsOrdered
-    val kept = if (pinPolite) phase("pin kept")(kept0.localCheckpoint())
-               else kept0
+    val kept = if (pinPolite) kept0.localCheckpoint() else kept0
 
     // 4. J8 robots gate on (host_key, path)
     val gated = robots match {
@@ -154,14 +142,13 @@ object FrontierJob {
     // (the cum-count aggregate and the rank window are two consumers of
     // the parse→anti-join→winner chain); a small quota still routes to
     // the salted window path, which prunes losers before they shuffle.
-    val useByFile = politenessQuota >= Int.MaxValue / 16 &&
-      !sys.env.contains("GRAFT_POLITE_WINDOW")
+    val useByFile = politenessQuota >= Int.MaxValue / 16
     // Measured alternatives to this pin, both slower: no pin, relying on
     // ReuseExchange to share the winner-window shuffle (4M URLs,
     // local[32], min of 3: 24.3 s vs the pin's 14.9 s, since the
     // parse→anti-join chain re-executes per consumer), and persist()'s
     // compressed columnar cache in place of the raw-row checkpoint.
-    val (ranked, rankCache, warcCountSrc) = phase("politeness rank") {
+    val (ranked, rankCache, warcCountSrc) =
       if (useByFile) {
         val pinned = gated.localCheckpoint()
         val r = Frontier.politenessRankByFile(pinned, "host_key")
@@ -186,13 +173,11 @@ object FrontierJob {
           (pinned, caches :+ pinned, None)
         } else (r, caches, None)
       }
-    }
     // O3 without a range sort or checkpoint: ord decomposes per warc
     // (crawlOrderByWarc) and every downstream consumer reads the written
     // parquet, so nothing past the rank needs pinning — the order→batch
     // chain materializes exactly once, in the batches write.
-    val ordered =
-      phase("order (df-native)")(UrlDedup.crawlOrderByWarc(ranked, warcCountSrc))
+    val ordered = UrlDedup.crawlOrderByWarc(ranked, warcCountSrc)
     val obsBatch = Observation("frontier_batches")
     val batches0 = UrlDedup.fetchBatches(ordered, fetchBatchSize)
       .observe(obsBatch, count(lit(1)).as("n_scheduled"),
@@ -204,10 +189,8 @@ object FrontierJob {
     // the sort chain.
     val (snapId, dataDir, stateDir) = Snapshots.stage(tableDir)
     val batchesPath = dataDir.resolveSibling(s"snap-$snapId-batches").toString
-    phase("write batches") {
-      batches0.write.mode("overwrite").option("compression", "snappy")
-        .parquet(batchesPath)
-    }
+    batches0.write.mode("overwrite").option("compression", "snappy")
+      .parquet(batchesPath)
     val batches = spark.read.parquet(batchesPath)
 
     // Seen delta: exactly one row per winner URL. When nothing below the
@@ -217,9 +200,7 @@ object FrontierJob {
     // sort checkpoint. Only the robots/quota path still pays a pass over
     // `kept` (its pin, when cacheIntermediates).
     val winnerSrc = if (keptIsOrdered) batches else kept
-    phase("write seen delta") {
-      winnerSrc.select("url").write.mode("overwrite").parquet(dataDir.toString)
-    }
+    winnerSrc.select("url").write.mode("overwrite").parquet(dataDir.toString)
     // downstream state updates read the narrow seen-delta parquet, never
     // the full-width intermediates again
     val deltaHashes = spark.read.parquet(dataDir.toString)
@@ -250,15 +231,15 @@ object FrontierJob {
       }
       .getOrElse(math.min(256,
         math.max(16, spark.sparkContext.defaultParallelism)))
-    val perPartInserts = phase("cuckoo update")(UrlSeenState.updateDistributed(
+    val perPartInserts = UrlSeenState.updateDistributed(
       spark, deltaHashes,
       prevStateDir, stateDir, partitions = stateParts,
-      capacityPerPartition = 1 << 16))
+      capacityPerPartition = 1 << 16)
     // FP-rate bound: a chain that has grown past 2 segments gets rebuilt
     // into one right-sized filter from the authoritative seen set (old
     // chain ∪ this batch's winners). Grow-cycles are logarithmic in total
     // inserts, so this full pass amortizes to ~O(1) per batch.
-    if (perPartInserts.values.exists(_.segments > 2)) phase("cuckoo compact") {
+    if (perPartInserts.values.exists(_.segments > 2)) {
       val allSeen = seenUrls.select(xxhash64(col("url")).as("h"))
         .union(deltaHashes)
       UrlSeenState.compactDistributed(spark, allSeen, stateDir,
@@ -284,9 +265,9 @@ object FrontierJob {
       Seq(f"part_$pid%05d_inserted" -> st.inserted,
           f"part_$pid%05d_segments" -> st.segments.toLong)
     }
-    val manifest = phase("commit")(Snapshots.commit(
+    val manifest = Snapshots.commit(
       tableDir, snapId, metrics,
-      lineage = s"frontier dump=$dumpId parent=${prev.map(_.snapshotId).getOrElse(-1L)} keep=$keep quota=$politenessQuota"))
+      lineage = s"frontier dump=$dumpId parent=${prev.map(_.snapshotId).getOrElse(-1L)} keep=$keep quota=$politenessQuota")
     Result(batches, manifest)
   }
 }
