@@ -365,7 +365,7 @@ object Bench {
           System.err.println(s"[bench] $name failed: ${e.getMessage}") }
       }
       // queries pin intermediates for their own multi-consumer plans
-      Sessions.releasePins(sHi)
+      Pin.releaseAll(sHi)
       name -> secs
     }
     sHi.stop()

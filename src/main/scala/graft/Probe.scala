@@ -24,13 +24,13 @@ object Probe {
   def time(spark: SparkSession, sfDir: String,
            names: Seq[String]): Seq[(String, Double, Long)] = {
     try SparkEntry.queries("q_agg_pricing")(spark, sfDir).count()
-    finally Sessions.releasePins(spark)
+    finally Pin.releaseAll(spark)
     names.map { name =>
       val t0 = System.nanoTime()
       try {
         val n = SparkEntry.queries(name)(spark, sfDir).count()
         (name, (System.nanoTime() - t0) / 1e9, n)
-      } finally Sessions.releasePins(spark)
+      } finally Pin.releaseAll(spark)
     }
   }
 
@@ -42,7 +42,7 @@ object Probe {
       val path = Paths.get(outDir, s"${name}_$suffix.txt")
       try Files.writeString(path, SparkEntry.queries(name)(spark, sfDir)
         .queryExecution.explainString(FormattedMode))
-      finally Sessions.releasePins(spark)
+      finally Pin.releaseAll(spark)
       path.toString
     }
   }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session, table-loading and pin helpers shared by SparkEntry / Verify /
+/** Session and table-loading helpers shared by SparkEntry / Verify /
   * Bench / Probe / tests. The repo builds sessions in exactly three places:
   *   - `Sessions.local`: tests (`TestSpark`) and `Verify`;
   *   - `Bench.session`: `Bench` and `Probe` (tmpfs shuffle dir, 2x cores
@@ -34,17 +34,6 @@ object Sessions {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
-  }
-
-  /** Drop every pin in `spark`: cached Datasets (clearCache) and the
-    * persistent RDDs behind localCheckpoint()s, which clearCache does not
-    * cover and Dataset.unpersist cannot reach. Non-blocking. Run between
-    * queries so one query's blocks never skew the next one's timing.
-    */
-  def releasePins(spark: SparkSession): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
   }
 
   /** Read one of the driver-provided parquet tables under `dir`. */

@@ -1,8 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.udf
-
 /** MinHash over character n-grams (reference: cc_corpus/deduplication.py
   * :169–184 — 256 permutations, char 5-grams; scripts/minhash.py:42–44).
   *
@@ -234,20 +231,6 @@ object MinHashF {
     }
   }
 
-  /** True if any band collides between the two signatures — datasketch
-    * MinHashLSH.query's candidate criterion (no exact verification).
-    */
-  def anyBandMatch(a: Array[Long], bSig: Array[Long], b: Int): Boolean = {
-    val ha = bandHashes(a, b)
-    val hb = bandHashes(bSig, b)
-    var i = 0
-    while (i < b) {
-      if (ha(i) == hb(i)) return true
-      i += 1
-    }
-    false
-  }
-
   /** Estimated Jaccard from two signatures (fraction of equal mins). */
   def estJaccard(a: Array[Long], b: Array[Long]): Double = {
     var eq = 0
@@ -265,9 +248,4 @@ object MinHashF {
     */
   def permValuesSql: String =
     (0 until NumPerm).map(j => s"(${j},${as(j)},${bs(j)})").mkString(",")
-
-  val signatureUdf = udf(signature _)
-  def bandsUdf(b: Int) = udf((sig: Array[Long]) => bandHashes(sig, b))
-
-  def signatureCol(text: Column): Column = signatureUdf(text)
 }

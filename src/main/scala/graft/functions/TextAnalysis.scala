@@ -344,11 +344,6 @@ object TextAnalysis {
     }
   }
 
-  def wordpieceUdf(vocab: Seq[String]) = {
-    val v = vocab.toSet
-    udf((t: String) => wordpiece(t, v))
-  }
-
   val simhashUdf        = udf(simhash64 _)
   val minShingleHashUdf = udf((t: String) => minShingleHash(t))
 }

@@ -154,11 +154,6 @@ object Urls {
     */
   def canonicalUrlCol(url: Column): Column = unquoteInfUdf(url)
 
-  /** 64-bit URL hash for the seen-set (xxhash64 builtin — deterministic
-    * across runs, unlike Python's salted hash(), SURVEY.md §7.4 risk 3).
-    */
-  def urlHashCol(url: Column): Column = xxhash64(url)
-
   /** Query parameters that never change page content — analytics and
     * click-attribution noise. Stripping them before the seen-set hash
     * collapses what would otherwise be unbounded synthetic URL variants

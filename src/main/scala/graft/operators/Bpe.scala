@@ -2,6 +2,7 @@ package graft.operators
 
 import java.util.regex.{Matcher, Pattern}
 
+import graft.Pin
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -71,7 +72,7 @@ object Bpe {
     * (word, c, seg). Stops early when no pair reaches `minCount`.
     *
     * Each iteration is one vocab-scale aggregation job plus one
-    * vocab-scale localCheckpoint (previous iteration's blocks are
+    * vocab-scale pin (previous iteration's blocks are
     * released, so lineage and storage stay O(1) in the iteration
     * count). Ties break on (count desc, a asc, b asc) — fully
     * deterministic and partition-layout invariant because pair counts
@@ -80,10 +81,9 @@ object Bpe {
   def train(words: DataFrame, nMerges: Int, minCount: Long = 2L)
       : (Seq[Merge], DataFrame) = {
     require(nMerges >= 0 && minCount >= 1)
-    var vocab = words
+    var vocab = Pin(words
       .select(col("word"), col("c").cast(LongType).as("c"),
-        initSeg(col("word")).as("seg"))
-      .localCheckpoint()
+        initSeg(col("word")).as("seg")))
     val merges = Seq.newBuilder[Merge]
     var rank = 1
     var done = nMerges == 0
@@ -108,10 +108,9 @@ object Bpe {
           best(0).getAs[String]("b"), best(0).getAs[Long]("cnt"))
         merges += Merge(rank, a, b, cnt)
         val prev = vocab
-        vocab = vocab
-          .withColumn("seg", applyMergeCol(col("seg"), a, b))
-          .localCheckpoint()
-        UrlDedup.releaseOrderCache(prev)
+        vocab = Pin(vocab
+          .withColumn("seg", applyMergeCol(col("seg"), a, b)))
+        Pin.release(prev)
         rank += 1
         if (rank > nMerges) done = true
       }

@@ -46,16 +46,6 @@ object ClusterIndex {
     matching.unionByName(predecessor).distinct()
   }
 
-  /** Multi-pattern variant, result in (file_name, offset) order
-    * (index.py:171–184).
-    */
-  def pruneClustersMulti(clusters: DataFrame,
-                         patterns: Seq[String]): DataFrame =
-    patterns.map(pruneClusters(clusters, _))
-      .reduce(_ unionByName _)
-      .distinct()
-      .orderBy(asc("file_name"), asc("offset"))
-
   private val gzipBlockUdf = org.apache.spark.sql.functions.udf(
     (lines: Seq[org.apache.spark.sql.Row]) =>
       graft.sources.WarcGzip.gzipOneMember(

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Pin
 import graft.state.Snapshots
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -21,10 +22,11 @@ import org.apache.spark.sql.functions._
 object CorpusJob {
 
   /** One stage: reads the previous stage's frame, returns its output.
+    * What it pins through the scope is freed once the output is written.
     * Stages must be deterministic — resume replays nothing, so a
     * nondeterministic stage would fork history between runs.
     */
-  private type Stage = (String, DataFrame => DataFrame)
+  private type Stage = (String, (Pin.Scope, DataFrame) => DataFrame)
 
   /** Run (or resume) the pipeline over a spanized corpus with columns
     * (domain, ord, doc_id, spans). Returns the manifest per stage, in
@@ -50,14 +52,9 @@ object CorpusJob {
     def docText = array_join(FrequentParagraphs.textSpans(col("spans")), "\n")
     val base = Seq[String]("domain", "ord", "doc_id", "spans")
 
-    // caches pinned by stage closures — released right after the
-    // owning stage's output is written (see the run loop below)
-    val toRelease = scala.collection.mutable.ArrayBuffer
-      .empty[DataFrame]
-
     val stages: Seq[Stage] = Seq(
       // 06 filter_corpus: language + min length, pure columns
-      "filter" -> { in =>
+      "filter" -> { (_, in) =>
         val withText = in.withColumn("__text", docText)
         val langOk = langs match {
           case Some(ls) => graft.expressions.LangExpressions
@@ -70,7 +67,7 @@ object CorpusJob {
           .select(base.map(col): _*)
       },
       // 07a minhash: codegen'd signature+banding over the doc text
-      "minhash" -> { in =>
+      "minhash" -> { (_, in) =>
         LshDedup.minhashed(in.withColumn("text", docText), b)
           .select((base :+ "bands").map(col): _*)
       },
@@ -78,30 +75,27 @@ object CorpusJob {
       // first-wins self dedup, then the corpus semi join — one stage
       // output (the surviving corpus) so resume granularity matches the
       // reference's per-step model
-      "dedup" -> { in =>
+      "dedup" -> { (_, in) =>
         val fresh = seenMh.fold(in)(seen => LshDedup.crossDedup(in, seen))
         val kept = LshDedup.selfDedup(fresh)
         in.join(kept.select("ord"), Seq("ord"), "left_semi")
           .select(base.map(col): _*)
       },
       // 08–09 frequent_paragraphs: per-domain collect + removal
-      "frequent" -> { in =>
-        val withP = in.withColumn("pbands",
+      "frequent" -> { (pin, in) =>
+        val withP = pin(in.withColumn("pbands", // read by collect AND filter
           FrequentParagraphs.paragraphBandsCol(
-            FrequentParagraphs.textSpans(col("spans")), b))
-          .localCheckpoint() // consumed by collect AND filter
-        toRelease += withP
+            FrequentParagraphs.textSpans(col("spans")), b)))
         val freqs = FrequentParagraphs.collect(withP, minFreq = minFreq)
         FrequentParagraphs.filterFrequent(withP, freqs, minFreq = minFreq)
           .select(base.map(col): _*)
       },
       // 10 renumber: contiguous ord, fixed-size files (the write itself
       // happens in the stage commit below; this stage just re-ranks)
-      "renumber" -> { in =>
-        val (ordered, cache) = UrlDedup.ordByPartitionOffsets(
-          in.drop("ord"), Seq(asc("domain"), asc("doc_id")), "ord")
-        toRelease += cache
-        ordered.select(base.map(col): _*)
+      "renumber" -> { (pin, in) =>
+        pin.hold(UrlDedup.ordByPartitionOffsets(
+          in.drop("ord"), Seq(asc("domain"), asc("doc_id")), "ord"))
+          .select(base.map(col): _*)
       }
     )
 
@@ -147,29 +141,27 @@ object CorpusJob {
           cur = spark.read.parquet(s"$tableDir/${m.dataPath}")
           m
         case None =>
-          if (rowsIn < 0) {
-            if (i == 0) {
+          val dataDir = Pin.scoped { pin =>
+            if (rowsIn < 0) {
               // pin the (possibly expensive) input chain once: the
               // rows_in count and the stage body would otherwise both
               // execute it
-              cur = cur.localCheckpoint()
-              toRelease += cur
+              if (i == 0) cur = pin(cur)
+              rowsIn = cur.count()
             }
-            rowsIn = cur.count()
+            val out = f(pin, cur)
+            val (id, dataDir, _) = Snapshots.stage(tableDir)
+            require(id == i,
+              s"stage $name expected snapshot $i, got $id — manifest gap")
+            if (name == "renumber")
+              graft.sources.CorpusSource.writeBatched(
+                out, dataDir.toString, "ord", recordsPerFile)
+            else out.write.mode("overwrite").parquet(dataDir.toString)
+            dataDir
           }
-          val out = f(cur)
-          val (id, dataDir, _) = Snapshots.stage(tableDir)
-          require(id == i,
-            s"stage $name expected snapshot $i, got $id — manifest gap")
-          if (name == "renumber")
-            graft.sources.CorpusSource.writeBatched(
-              out, dataDir.toString, "ord", recordsPerFile)
-          else out.write.mode("overwrite").parquet(dataDir.toString)
-          toRelease.foreach(UrlDedup.releaseOrderCache)
-          toRelease.clear()
           cur = spark.read.parquet(dataDir.toString)
           val rowsOut = cur.count()
-          val m = Snapshots.commit(tableDir, id,
+          val m = Snapshots.commit(tableDir, i.toLong,
             Map("rows_in" -> rowsIn, "rows_out" -> rowsOut,
                 "params_fp" -> paramsFp),
             lineage = s"corpus stage=$name")

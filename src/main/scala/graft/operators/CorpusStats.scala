@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Pin
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,15 +18,6 @@ import org.apache.spark.sql.types.LongType
 object CorpusStats {
 
   private def toks(text: Column): Column = split(trim(text), "\\s+")
-
-  /** Vowel-group syllable estimate: runs of [aeiouy] in the lowered
-    * word, floored at 1 (the classic hyphenation-free heuristic —
-    * exact CMUdict syllables need a dictionary a 100 TB scan cannot
-    * afford, and Flesch only needs the estimate to be consistent).
-    */
-  def syllablesCol(word: Column): Column =
-    greatest(size(regexp_extract_all(lower(word), lit("[aeiouy]+"), lit(0))),
-      lit(1))
 
   /** Flesch reading-ease + type-token ratio per document. Sentences =
     * terminal-punctuation runs ([.!?]+, floored at 1); words =
@@ -330,8 +322,7 @@ object CorpusStats {
                textCol: String = "text"): DataFrame = {
     val did = col(idCol).cast("long")
     val dd = docs.select(did.as("d")).distinct()
-    val (ranked, _) = UrlDedup.ordByPartitionOffsets(
-      dd, Seq(asc("d")), "rw0")
+    val ranked = UrlDedup.ordByPartitionOffsets(dd, Seq(asc("d")), "rw0")
     val tot = ranked.agg(count(lit(1)).as("n"))
     val is = ranked.sparkSession.range(1, 11)
       .select(col("id").as("i"))
@@ -458,20 +449,18 @@ object CorpusStats {
               valueCol: String): DataFrame = {
     def counts(df: DataFrame, n: String) =
       df.groupBy(col(valueCol).as("v")).agg(count(lit(1)).as(n))
-    val j = counts(prev, "c1")
+    // consumed by the cumulative pass AND the totals row
+    val j = Pin(counts(prev, "c1")
       .join(counts(cur, "c2"), Seq("v"), "full_outer")
-      .na.fill(0L, Seq("c1", "c2"))
-      // consumed by the cumulative pass AND the totals row
-      .localCheckpoint()
+      .na.fill(0L, Seq("c1", "c2")))
     // distributed cumulative sums by the partition-offset idiom
-    // (withOrdinal's discipline): range-sort by v, per-partition
+    // (UrlDedup.ordByPartitionOffsets): range-sort by v, per-partition
     // running sums inside partition-keyed windows, broadcast
     // per-partition offsets — no single-partition window ever sees the
     // distinct-value table
     val mask = lit((1L << 33) - 1)
-    val sorted = j.orderBy(col("v").asc)
-      .withColumn("__mid", monotonically_increasing_id())
-      .localCheckpoint()
+    val sorted = Pin(j.orderBy(col("v").asc)
+      .withColumn("__mid", monotonically_increasing_id()))
     val offsets = sorted
       .groupBy(shiftright(col("__mid"), 33).as("__pid"))
       .agg(sum("c1").as("__s1"), sum("c2").as("__s2"))
@@ -511,7 +500,7 @@ object CorpusStats {
     // single-partition row_number window over the key-count table —
     // key-scale (hosts) is still millions of rows at 100 TB; (x, k) is
     // a total order (k unique), so i is identical to the old rank
-    val ranked = SuffixArray.withOrdinal(counts,
+    val ranked = UrlDedup.ordByPartitionOffsets(counts,
         Seq(asc("x"), asc("k")), "__i0")
       .withColumn("i", col("__i0") + 1L)
     ranked

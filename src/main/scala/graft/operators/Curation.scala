@@ -749,7 +749,7 @@ object Curation {
   def calibrationTable(scored: DataFrame, scoreCol: String,
                        labelCol: String, predCol: String,
                        idCol: String, bins: Int = 10): DataFrame = {
-    val (ranked, _) = UrlDedup.ordByPartitionOffsets(
+    val ranked = UrlDedup.ordByPartitionOffsets(
       scored, Seq(col(scoreCol).asc, col(idCol).asc), "__rw0")
     val tot = ranked.agg(count(lit(1)).as("__n"))
     ranked.crossJoin(broadcast(tot))

@@ -196,14 +196,6 @@ object DocPipeline {
       greatest(size(texts) - 1, lit(0)).cast("long")
   }
 
-  /** F9 doc-level language filter using the deterministic heuristic. */
-  def langFilter(docs: DataFrame, lang: String): DataFrame = {
-    val joined = array_join(
-      transform(filter(col("spans"), s => s.getField("kind") === "p"),
-                s => s.getField("text")), "\n")
-    docs.filter(TextAnalysis.langIdCol(joined) === lang)
-  }
-
   /** Span-sequence invariant validator: the per-row contract of the
     * interleaved-document table (doc_id, spans<kind,text,media_ref,
     * offset>) made executable — offsets strictly increasing in array

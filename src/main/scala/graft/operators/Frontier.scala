@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Pin
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -34,10 +35,9 @@ object Frontier {
                      salts: Int = 16): DataFrame =
     politenessRankEx(candidates, hostCol, priorityCols, quota, salts)._1
 
-  /** As politenessRank, also returning the cache intermediates pinned by
-    * the unbounded path (empty when the bounded/window path ran); batch
-    * drivers should release each via UrlDedup.releaseOrderCache once the
-    * result is consumed, mirroring crawlOrderEx.
+  /** As politenessRank, also returning the pins taken by the unbounded
+    * path (empty when the bounded/window path ran); free them with
+    * `Pin.release` once the result is consumed.
     */
   def politenessRankEx(candidates: DataFrame,
                        hostCol: String,
@@ -80,7 +80,7 @@ object Frontier {
 
   /** Exact per-host rank with NO per-host task, all codegen: global
     * range sort on (host, priority...) gives each row a contiguous
-    * global ord (the crawlOrder partition-offset idiom — a mega-host
+    * global ord (the ordByPartitionOffsets idiom — a mega-host
     * SPREADS across range partitions since boundaries fall inside the
     * host, the opposite of a host-partitioned window); then
     * wave = ord − min(ord per host) + 1. The per-host minimum is a
@@ -105,20 +105,19 @@ object Frontier {
     // whole parse→anti-join→winner chain — unpinned, that chain executes
     // TWICE (sampling + sort), which measured ~+30% per batch at 8
     // cores. The legacy window paid no sampling (hash exchange); this
-    // checkpoint buys the same single-execution property back for one
+    // pin buys the same single-execution property back for one
     // pass through the block manager.
-    val pre = candidates.localCheckpoint()
-    val sorted = pre
+    val pre = Pin(candidates)
+    val sorted = Pin(pre
       .orderBy((col(hostCol).asc +: priorityCols): _*)
-      .withColumn("__mid", monotonically_increasing_id())
-      .localCheckpoint()
-    // ONE auxiliary scan of the checkpoint feeds both partition offsets
+      .withColumn("__mid", monotonically_increasing_id()))
+    // ONE auxiliary scan of the sorted pin feeds both partition offsets
     // and per-host minimum: group to (partition, host) — host-scale, with
     // map-side combine — then derive each from that small frame
-    val aux = sorted
+    val aux = Pin(sorted
       .groupBy(shiftright(col("__mid"), 33).as("__pid"), col(hostCol))
-      .agg(count(lit(1)).as("__cnt"), min(col("__mid")).as("__minmid"))
-      .localCheckpoint(false)
+      .agg(count(lit(1)).as("__cnt"), min(col("__mid")).as("__minmid")),
+      eager = false)
     val offsets = aux
       .groupBy(col("__pid")).agg(sum(col("__cnt")).as("__cnt"))
       .withColumn("__offset",
@@ -173,8 +172,8 @@ object Frontier {
     * only the narrow cum side shuffles.
     *
     * Versus politenessRankUnbounded this eliminates, per batch: the
-    * range-sort boundary-sampling pass, the full-width sorted
-    * localCheckpoint (write + 2 reads through the block manager), and
+    * range-sort boundary-sampling pass, the full-width sorted pin
+    * (write + 2 reads through the block manager), and
     * the aux/firsts join chain — the wave column is a deterministic
     * function of the data (no monotonically_increasing_id), so repeated
     * consumers recompute consistently without pinning. Output wave is

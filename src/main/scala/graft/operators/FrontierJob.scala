@@ -4,6 +4,7 @@ import java.nio.file.Paths
 
 import scala.jdk.CollectionConverters._
 
+import graft.Pin
 import graft.functions.Urls
 import graft.state.{Snapshots, UrlSeenState}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
@@ -29,35 +30,24 @@ object FrontierJob {
                keep: String = "biggest",
                politenessQuota: Int = 100,
                fetchBatchSize: Long = 1000,
-               dumpId: String = "batch",
-               cacheIntermediates: Boolean = true): Result = {
-    // What is pinned, so that each chain with two consumers runs once:
+               dumpId: String = "batch"): Result = Pin.scoped { pin =>
+    // What is pinned (see Pin for why a pin and what a lost block does),
+    // so that each chain with two consumers runs once; every pin is freed
+    // when the batch returns or throws:
     //  - the gated winners, whenever the quota is effectively unbounded
     //    (politenessRankByFile: its cum-count aggregate and its rank
-    //    window both read them). Always on; on the fast path (no robots,
-    //    unlimited quota) the written batches parquet then feeds the seen
-    //    delta, so `kept` is never pinned there.
-    //  - with cacheIntermediates, on the polite path (robots or a finite
-    //    quota): `kept` (the robots gate and the seen-delta write both
-    //    read it) and, for a small quota, the ranked frame out of
-    //    politenessRankEx (crawlOrderByWarc's per-warc window and per-warc
-    //    count both read it; unpinned, the robots gate and the salted
-    //    rank window ran once per consumer).
-    // Pins are localCheckpoint()s, not persist(): AQE may not coalesce a
-    // cached plan's output partitioning, so with a persisted `kept` every
-    // stage below it ran the url window's full shuffle partition count,
-    // each task deserializing a binary that carried the cached plan. A
-    // local checkpoint goes through AQE (coalesced partitions) and
-    // truncates lineage (small task binaries). Measured per polite batch
-    // on a 4-core box (15k lines, 400 hosts, quota 4, robots): 318 -> 28
+    //    window both read them). On the fast path (no robots, unlimited
+    //    quota) the written batches parquet then feeds the seen delta, so
+    //    `kept` is never pinned there.
+    //  - on the polite path (robots or a finite quota): `kept` (the robots
+    //    gate and the seen-delta write both read it) and, for a small
+    //    quota, the ranked frame out of politenessRank (crawlOrderByWarc's
+    //    per-warc window and per-warc count both read it; unpinned, the
+    //    robots gate and the salted rank window ran once per consumer).
+    // Pinned rather than persisted, `kept` measured per polite batch on a
+    // 4-core box (15k lines, 400 hosts, quota 4, robots): 318 -> 28
     // tasks, 4.2 -> 2.0 s executor CPU, and 4.9 -> 2.8 s for the pins,
     // batches write and seen-delta write together.
-    //
-    // Failure semantics: a local checkpoint cannot be recomputed. If a
-    // pinned block is lost (its executor died), the batch fails loudly
-    // before its commit, and a rerun resumes from Snapshots.latest. It
-    // never returns different rows. With cacheIntermediates = false the
-    // polite path pins neither frame and each consumer recomputes.
     //
     // Two shuffle byte-diets were measured here (r3, min-of-3 A/B at 8M
     // URLs, local[32]) and REJECTED — recorded so they aren't re-tried:
@@ -104,22 +94,20 @@ object FrontierJob {
 
     // 3. A0+J3 fused: the winner LINE per URL in one window shuffle (the
     // groupBy + semi-join pair re-shuffled the full index twice). kept
-    // feeds the order chain once (into the crawl-order cache) and the
-    // seen-delta/cuckoo/count branch. When neither robots nor the quota
-    // can drop rows, the crawl-order cache already holds exactly the
-    // winner rows — reuse it instead of materializing kept twice (one
-    // full pass through the memory subsystem per batch saved).
+    // feeds the order chain and the seen-delta/cuckoo/count branch. When
+    // neither robots nor the quota can drop rows, the written batches
+    // hold exactly the winner rows — the seen delta reads them instead
+    // of materializing kept twice (one full pass through the memory
+    // subsystem per batch saved).
     val keptIsOrdered = robots.isEmpty && politenessQuota == Int.MaxValue
     // winners count rides as an Observation on the kept frame when the
     // robots/quota path can drop rows downstream — the metrics collect
-    // during the pin job (or, unpinned, the seen-delta write) instead of
-    // a dedicated count job
+    // during the pin job instead of a dedicated count job
     val obsWin  = Observation()
-    val kept0raw = UrlDedup.winnersKept(fresh, keep)
-    val kept0 = if (keptIsOrdered) kept0raw
-                else kept0raw.observe(obsWin, count(lit(1)).as("n_winners"))
-    val pinPolite = cacheIntermediates && !keptIsOrdered
-    val kept = if (pinPolite) kept0.localCheckpoint() else kept0
+    val winners = UrlDedup.winnersKept(fresh, keep)
+    val kept =
+      if (keptIsOrdered) winners
+      else pin(winners.observe(obsWin, count(lit(1)).as("n_winners")))
 
     // 4. J8 robots gate on (host_key, path)
     val gated = robots match {
@@ -147,10 +135,10 @@ object FrontierJob {
     // ReuseExchange to share the winner-window shuffle (4M URLs,
     // local[32], min of 3: 24.3 s vs the pin's 14.9 s, since the
     // parse→anti-join chain re-executes per consumer), and persist()'s
-    // compressed columnar cache in place of the raw-row checkpoint.
-    val (ranked, rankCache, warcCountSrc) =
+    // compressed columnar cache in place of the pin.
+    val (ranked, warcCountSrc) =
       if (useByFile) {
-        val pinned = gated.localCheckpoint()
+        val pinned = pin(gated)
         val r = Frontier.politenessRankByFile(pinned, "host_key")
         val limited =
           if (politenessQuota < Int.MaxValue)
@@ -160,18 +148,13 @@ object FrontierJob {
         // cannot drop rows — only then may the crawl-order count branch
         // read the pin instead of the ranked chain
         val cntSrc = if (politenessQuota < Int.MaxValue) None else Some(pinned)
-        (limited, Seq(pinned), cntSrc)
+        (limited, cntSrc)
       } else {
-        val (r, caches) = Frontier.politenessRankEx(
-          gated, "host_key", Seq(asc("file_ord"), asc("line_ord")),
-          politenessQuota)
         // crawlOrderByWarc reads its input twice (per-warc window and
         // per-warc count); the salted pre-prune's row-id salt keeps the
         // two from sharing an exchange, so pin the (quota-capped) rank
-        if (pinPolite) {
-          val pinned = r.localCheckpoint()
-          (pinned, caches :+ pinned, None)
-        } else (r, caches, None)
+        (pin(Frontier.politenessRank(gated, "host_key",
+          Seq(asc("file_ord"), asc("line_ord")), politenessQuota)), None)
       }
     // O3 without a range sort or checkpoint: ord decomposes per warc
     // (crawlOrderByWarc) and every downstream consumer reads the written
@@ -197,8 +180,8 @@ object FrontierJob {
     // winner window dropped rows, the just-written batches parquet holds
     // exactly the winner set — the delta is a single-COLUMN re-read of it
     // (parquet prunes to `url`), not another full-width pass over the
-    // sort checkpoint. Only the robots/quota path still pays a pass over
-    // `kept` (its pin, when cacheIntermediates).
+    // crawl-order chain. Only the robots/quota path still pays a pass
+    // over `kept` (its pin).
     val winnerSrc = if (keptIsOrdered) batches else kept
     winnerSrc.select("url").write.mode("overwrite").parquet(dataDir.toString)
     // downstream state updates read the narrow seen-delta parquet, never
@@ -251,8 +234,6 @@ object FrontierJob {
     val nWinners =
       if (keptIsOrdered) nKept
       else obsWin.get("n_winners").asInstanceOf[Long]
-    rankCache.foreach(UrlDedup.releaseOrderCache)
-    if (pinPolite) UrlDedup.releaseOrderCache(kept)
     val metrics = Map(
       "n_new_entries" -> obsNew.get("n_new_entries").asInstanceOf[Long],
       "n_winners"     -> nWinners,

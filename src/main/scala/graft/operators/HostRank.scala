@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Pin
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -20,7 +21,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: one hash-join + partial-agg shuffle per iteration,
   * keyed by host — the web's host graph (~10^8 hosts) partitions
   * cleanly; outdegrees are computed once; each iteration's result is
-  * localCheckpoint'd (narrow two-column table) so lineage stays O(1)
+  * pinned (narrow two-column table) so lineage stays O(1)
   * across iterations instead of O(iters), with the previous iteration's
   * blocks released as soon as the next is materialized. Dangling-host
   * mass is dropped (ranks no longer sum to `scale`), which preserves
@@ -32,119 +33,91 @@ object HostRank {
   /** PageRank over `edges` (srcCol, dstCol — one row per distinct
     * link) restricted to the node universe `nodes` (idCol). Output:
     * (idCol, rank_mu: Long micro-unit rank, rank: Double = rank_mu /
-    * scale rounded to 6dp for display).
+    * scale rounded to 6dp for display). PageRank is [[trustRank]] with
+    * every node a seed: the same teleport, initial rank and step.
     */
   def pageRank(edges: DataFrame, nodes: DataFrame,
                iters: Int = 5,
                scale: Long = 1000000000000L,
                dampNum: Long = 85L, dampDen: Long = 100L,
                srcCol: String = "src", dstCol: String = "dst",
-               idCol: String = "host"): DataFrame = {
-    require(iters >= 0 && dampNum >= 0 && dampNum <= dampDen)
-    // ids keep the CALLER's type (hostnames are strings in a real host
-    // graph — a long cast would null them all out silently); ranks are
-    // the only Long-typed state. The node universe materializes ONCE
-    // (checkpoint first, count from the materialized blocks), and the
-    // edge distinct is paid once up front, not once per iteration.
-    val base = nodes.select(col(idCol).as("host")).distinct()
-      .localCheckpoint()
-    val n = base.count()
-    require(n > 0, "pageRank needs a non-empty node universe")
-    val teleport = (scale * (dampDen - dampNum) / dampDen) / n
-    val ed = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .where(col("src") =!= col("dst")).distinct()
-      .localCheckpoint()
-    val outdeg = ed.groupBy("src").agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
-    var ranks = base.withColumn("r", lit(scale / n))
-    var prevCheckpointed: Option[DataFrame] = None
-    (1 to iters).foreach { _ =>
-      val contrib = ed.join(ranks, ed("src") === ranks("host"))
-        .join(outdeg, "src")
-        .select(col("dst"),
-          expr(s"((r * $dampNum) DIV $dampDen) DIV deg").as("c"))
-        .groupBy("dst").agg(sum("c").as("s"))
-      val next = base.join(contrib, base("host") === contrib("dst"), "left")
-        .select(col("host"),
-          (lit(teleport) + coalesce(col("s"), lit(0L))).as("r"))
-        .localCheckpoint() // materializes `next`; prev blocks now safe to drop
-      prevCheckpointed.foreach(UrlDedup.releaseOrderCache)
-      prevCheckpointed = Some(next)
-      ranks = next
-    }
-    // after the loop the returned plan reads only the LAST iteration's
-    // checkpoint — base/ed/outdeg blocks can go (kept when iters == 0,
-    // where ranks still projects base)
-    if (iters > 0) {
-      UrlDedup.releaseOrderCache(base)
-      UrlDedup.releaseOrderCache(ed)
-      UrlDedup.releaseOrderCache(outdeg)
-    }
-    ranks.select(col("host").as(idCol), col("r").as("rank_mu"),
-      round(col("r").cast("double") / scale, 6).as("rank"))
-  }
+               idCol: String = "host"): DataFrame =
+    seededRank(edges, nodes, None, iters, scale, dampNum, dampDen, srcCol,
+      dstCol, idCol, "rank", "pageRank needs a non-empty node universe")
 
   /** TrustRank (Gyöngyi/Garcia-Molina/Pedersen 2004): PageRank with the
     * teleport mass restricted to a hand-verified SEED set — trust flows
     * out from known-good hosts, so spam farms unreachable from the seeds
     * converge to 0 regardless of how densely they interlink. The
     * anti-spam companion to [[pageRank]] (which a farm can inflate) and
-    * the standard crawl-frontier demotion signal.
-    *
-    * Same determinism contract: fixed iterations, all-integer micro-unit
-    * arithmetic — the teleport term is `(scale*(1-d))/|S|` for seed
-    * hosts and 0 otherwise, each edge contribution
-    * `((r*dampNum) DIV dampDen) DIV outdeg`, so the DuckDB oracle
-    * replays unrolled iterations with `//`. Same scale shape too: one
-    * hash-join + partial-agg shuffle per iteration; the seed flag rides
-    * the checkpointed node universe (no per-iteration seed join).
+    * the standard crawl-frontier demotion signal. Output: (idCol,
+    * trust_mu, trust).
     */
   def trustRank(edges: DataFrame, nodes: DataFrame, seeds: DataFrame,
                 iters: Int = 5,
                 scale: Long = 1000000000000L,
                 dampNum: Long = 85L, dampDen: Long = 100L,
                 srcCol: String = "src", dstCol: String = "dst",
-                idCol: String = "host"): DataFrame = {
+                idCol: String = "host"): DataFrame =
+    seededRank(edges, nodes, Some(seeds), iters, scale, dampNum, dampDen,
+      srcCol, dstCol, idCol, "trust",
+      "trustRank needs at least one seed inside nodes")
+
+  /** The rank both share, with `seeds` = None meaning every node. The
+    * teleport term is `(scale*(1-d))/|S|` for seed hosts and 0 otherwise,
+    * the initial rank `scale/|S|` on seeds, and each edge contribution
+    * `((r*dampNum) DIV dampDen) DIV outdeg`, so the DuckDB oracle replays
+    * unrolled iterations with `//`. Ids keep the CALLER's type
+    * (hostnames are strings in a real host graph — a long cast would null
+    * them all out silently); ranks are the only Long-typed state. The
+    * node universe (with its seed flag, so no per-iteration seed join)
+    * and the edge distinct are pinned once, not paid per iteration.
+    * Output: (idCol, `<out>_mu`, `<out>`).
+    */
+  private def seededRank(edges: DataFrame, nodes: DataFrame,
+                         seeds: Option[DataFrame], iters: Int, scale: Long,
+                         dampNum: Long, dampDen: Long, srcCol: String,
+                         dstCol: String, idCol: String, out: String,
+                         noSeeds: String): DataFrame = {
     require(iters >= 0 && dampNum >= 0 && dampNum <= dampDen)
-    val base = nodes.select(col(idCol).as("host")).distinct()
-      .join(seeds.select(col(idCol).as("host")).distinct()
-          .withColumn("__s", lit(true)),
-        Seq("host"), "left")
-      .select(col("host"), coalesce(col("__s"), lit(false)).as("is_seed"))
-      .localCheckpoint()
+    val hosts = nodes.select(col(idCol).as("host")).distinct()
+    val base = Pin(seeds match {
+      case Some(sd) => hosts
+        .join(sd.select(col(idCol).as("host")).distinct()
+            .withColumn("__s", lit(true)),
+          Seq("host"), "left")
+        .select(col("host"), coalesce(col("__s"), lit(false)).as("is_seed"))
+      case None => hosts.withColumn("is_seed", lit(true))
+    })
     val nSeeds = base.where(col("is_seed")).count()
-    require(nSeeds > 0, "trustRank needs at least one seed inside nodes")
+    require(nSeeds > 0, noSeeds)
     val telSeed = (scale * (dampDen - dampNum) / dampDen) / nSeeds
     val teleport = when(col("is_seed"), lit(telSeed)).otherwise(lit(0L))
-    val ed = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .where(col("src") =!= col("dst")).distinct()
-      .localCheckpoint()
-    val outdeg = ed.groupBy("src").agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
+    val ed = Pin(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+      .where(col("src") =!= col("dst")).distinct())
+    val outdeg = Pin(ed.groupBy("src").agg(count(lit(1)).as("deg")))
     var ranks = base.select(col("host"), col("is_seed"),
       when(col("is_seed"), lit(scale / nSeeds)).otherwise(lit(0L)).as("r"))
-    var prevCheckpointed: Option[DataFrame] = None
-    (1 to iters).foreach { _ =>
+    (1 to iters).foreach { i =>
       val contrib = ed.join(ranks, ed("src") === ranks("host"))
         .join(outdeg, "src")
         .select(col("dst"),
           expr(s"((r * $dampNum) DIV $dampDen) DIV deg").as("c"))
         .groupBy("dst").agg(sum("c").as("s"))
-      val next = base.join(contrib, base("host") === contrib("dst"), "left")
+      val next = Pin(base.join(contrib, base("host") === contrib("dst"), "left")
         .select(col("host"), col("is_seed"),
-          (teleport + coalesce(col("s"), lit(0L))).as("r"))
-        .localCheckpoint()
-      prevCheckpointed.foreach(UrlDedup.releaseOrderCache)
-      prevCheckpointed = Some(next)
+          (teleport + coalesce(col("s"), lit(0L))).as("r")))
+      // `next` is materialized: the previous round's pin can go (the
+      // first round's ranks project base, which stays until the end)
+      if (i > 1) Pin.release(ranks)
       ranks = next
     }
-    if (iters > 0) {
-      UrlDedup.releaseOrderCache(base)
-      UrlDedup.releaseOrderCache(ed)
-      UrlDedup.releaseOrderCache(outdeg)
-    }
-    ranks.select(col("host").as(idCol), col("r").as("trust_mu"),
-      round(col("r").cast("double") / scale, 6).as("trust"))
+    // after the loop the returned plan reads only the LAST iteration's
+    // pin — base/ed/outdeg can go (kept when iters == 0, where ranks
+    // still projects base)
+    if (iters > 0) Pin.release(base, ed, outdeg)
+    ranks.select(col("host").as(idCol), col("r").as(s"${out}_mu"),
+      round(col("r").cast("double") / scale, 6).as(out))
   }
 
   /** The deterministic host-link fixture shared with the oracle: hosts
@@ -207,7 +180,7 @@ object HostRank {
     * replays bit-for-bit; the norm choice rescales but never reorders,
     * and ordering is all the frontier consumes. Per half-step: one
     * hash-join + partial-agg shuffle keyed by host, plus a model-scale
-    * max. Each raw table is localCheckpoint'd so lineage stays O(1);
+    * max. Each raw table is pinned so lineage stays O(1);
     * the previous iteration's blocks release once superseded.
     */
   def hits(edges: DataFrame, nodes: DataFrame,
@@ -215,20 +188,17 @@ object HostRank {
            srcCol: String = "src", dstCol: String = "dst",
            idCol: String = "host"): DataFrame = {
     require(iters >= 1, "hits needs at least one iteration")
-    val base = nodes.select(col(idCol).as("host")).distinct()
-      .localCheckpoint()
-    val ed = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .where(col("src") =!= col("dst")).distinct()
-      .localCheckpoint()
+    val base = Pin(nodes.select(col(idCol).as("host")).distinct())
+    val ed = Pin(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+      .where(col("src") =!= col("dst")).distinct())
     // contribution flows along edge matchCol -> groupCol; returns the
-    // normalized lazy frame plus its pinned raw checkpoint
+    // normalized lazy frame plus its pinned raw table
     def halfStep(x: DataFrame, matchCol: String,
                  groupCol: String): (DataFrame, DataFrame) = {
       val c = ed.join(x, ed(matchCol) === x("host"))
         .groupBy(col(groupCol).as("__g")).agg(sum("v").as("s"))
-      val raw = base.join(c, base("host") === c("__g"), "left")
-        .select(base("host"), coalesce(col("s"), lit(0L)).as("raw"))
-        .localCheckpoint()
+      val raw = Pin(base.join(c, base("host") === c("__g"), "left")
+        .select(base("host"), coalesce(col("s"), lit(0L)).as("raw")))
       val m = raw.agg(max("raw")).head().getLong(0)
       require(m > 0, "hits: no edge touches the node universe")
       (raw.select(col("host"), expr(s"(raw * $scale) DIV $m").as("v")), raw)
@@ -239,12 +209,11 @@ object HostRank {
     (1 to iters).foreach { _ =>
       val (a2, aRaw) = halfStep(h, "src", "dst")
       val (h2, hRaw) = halfStep(a2, "dst", "src")
-      prevRaws.foreach(UrlDedup.releaseOrderCache)
+      Pin.release(prevRaws: _*)
       prevRaws = Seq(aRaw, hRaw)
       a = a2; h = h2
     }
-    UrlDedup.releaseOrderCache(ed)
-    UrlDedup.releaseOrderCache(base)
+    Pin.release(ed, base)
     a.select(col("host"), col("v").as("auth_mu"))
       .join(h.select(col("host"), col("v").as("hub_mu")), Seq("host"))
       .select(col("host").as(idCol), col("auth_mu"), col("hub_mu"),
@@ -259,29 +228,28 @@ object HostRank {
     * min-groupBy per level — the frontier for level d is exactly the
     * nodes whose FINAL depth is d−1 (a min over rounds ≤ d−1 cannot
     * drop later), so each edge expands at most once per endpoint
-    * level; per-level localCheckpoint keeps lineage O(1) like
+    * level; a pin per level keeps lineage O(1) like
     * pageRank/hits, previous levels released when superseded.
     */
   def bfsDepth(edges: DataFrame, seeds: DataFrame, maxDepth: Int,
                srcCol: String = "src", dstCol: String = "dst",
                idCol: String = "host"): DataFrame = {
     require(maxDepth >= 0)
-    val ed = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct().localCheckpoint()
-    var depths = seeds.select(col(idCol).as("host")).distinct()
-      .withColumn("depth", lit(0L)).localCheckpoint()
+    val ed = Pin(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+      .distinct())
+    var depths = Pin(seeds.select(col(idCol).as("host")).distinct()
+      .withColumn("depth", lit(0L)))
     (1 to maxDepth).foreach { d =>
       val frontier = depths.filter(col("depth") === (d - 1).toLong)
         .select(col("host").as("__f"))
       val next = ed.join(frontier, ed("src") === col("__f"))
         .select(col("dst").as("host"), lit(d.toLong).as("depth"))
-      val merged = depths.unionByName(next)
-        .groupBy("host").agg(min("depth").as("depth"))
-        .localCheckpoint()
-      UrlDedup.releaseOrderCache(depths)
+      val merged = Pin(depths.unionByName(next)
+        .groupBy("host").agg(min("depth").as("depth")))
+      Pin.release(depths)
       depths = merged
     }
-    UrlDedup.releaseOrderCache(ed)
+    Pin.release(ed)
     depths.select(col("host").as(idCol), col("depth"))
   }
 
@@ -297,37 +265,33 @@ object HostRank {
     *
     * Scale shape per round: two semi-joins to restrict the live edge
     * set + one explode/partial-agg degree count — all keyed by host; the
-    * live edge set shrinks monotonically, and a localCheckpoint per
+    * live edge set shrinks monotonically, and a pin per
     * round keeps lineage O(1) like the other iterative operators here.
     */
   def kCorePeel(edges: DataFrame, k: Int, rounds: Int = 6,
                 srcCol: String = "src", dstCol: String = "dst",
                 idCol: String = "host"): DataFrame = {
     require(k >= 1 && rounds >= 1)
-    val canon = edges
+    val canon = Pin(edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-      .localCheckpoint()
+      .where(col("a") =!= col("b")).distinct())
     def degrees(ed: DataFrame): DataFrame = ed
       .select(explode(array(col("a"), col("b"))).as("host"))
       .groupBy("host").agg(count(lit(1)).as("deg"))
     var live = canon
-    var out = degrees(live).where(col("deg") >= k).localCheckpoint()
+    var out = Pin(degrees(live).where(col("deg") >= k))
     (2 to rounds).foreach { _ =>
       val keep = out.select("host")
-      val nextLive = live
+      val nextLive = Pin(live
         .join(keep.withColumnRenamed("host", "a"), Seq("a"), "left_semi")
-        .join(keep.withColumnRenamed("host", "b"), Seq("b"), "left_semi")
-        .localCheckpoint()
-      val nextOut = degrees(nextLive).where(col("deg") >= k)
-        .localCheckpoint()
-      UrlDedup.releaseOrderCache(live)
-      UrlDedup.releaseOrderCache(out)
+        .join(keep.withColumnRenamed("host", "b"), Seq("b"), "left_semi"))
+      val nextOut = Pin(degrees(nextLive).where(col("deg") >= k))
+      Pin.release(live, out)
       live = nextLive
       out = nextOut
     }
-    UrlDedup.releaseOrderCache(live)
+    Pin.release(live)
     out.select(col("host").as(idCol), col("deg"))
   }
 
@@ -418,8 +382,8 @@ object HostRank {
     */
   def twoHopNeighbors(edges: DataFrame, srcCol: String = "src",
                       dstCol: String = "dst"): DataFrame = {
-    val e = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      .filter(col("a") =!= col("b")).distinct().localCheckpoint()
+    val e = Pin(edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
+      .filter(col("a") =!= col("b")).distinct())
     val oneHop = e.groupBy(col("a").as("node"))
       .agg(count(lit(1)).as("n_1hop"))
     val twoHop = e.select(col("a"), col("b").as("m"))
@@ -458,17 +422,16 @@ object HostRank {
       : DataFrame = {
     require(iters >= 1 && iters <= 10, "bounded synchronous rounds")
     import org.apache.spark.sql.expressions.Window
-    val sym = edges
+    val sym = Pin(edges
       .select(col(srcCol).as("a"), col(dstCol).as("b"))
       .unionByName(edges.select(col(dstCol).as("a"), col(srcCol).as("b")))
       .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val nodes = sym.select(col("a").as("node")).distinct()
     var labels = nodes.withColumn("label", col("node"))
     val w = Window.partitionBy(col("node"))
       .orderBy(col("cnt").desc, col("nl"))
-    for (_ <- 1 to iters) {
+    for (i <- 1 to iters) {
       val best = sym
         .join(labels.withColumnRenamed("node", "b")
           .withColumnRenamed("label", "nl"), "b")
@@ -477,10 +440,14 @@ object HostRank {
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select(col("node"), col("nl"))
-      labels = nodes.join(best, Seq("node"), "left")
-        .select(col("node"), coalesce(col("nl"), col("node")).as("label"))
-        .localCheckpoint()
+      val next = Pin(nodes.join(best, Seq("node"), "left")
+        .select(col("node"), coalesce(col("nl"), col("node")).as("label")))
+      // `next` is materialized: the previous round's pin can go (the
+      // first round's labels project sym, which the loop still reads)
+      if (i > 1) Pin.release(labels)
+      labels = next
     }
+    Pin.release(sym)
     labels
   }
 
@@ -509,21 +476,21 @@ object HostRank {
     val e = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
       .distinct()
     val nodes = e.select(col("a")).union(e.select(col("b"))).distinct()
-    var c = e.unionByName(nodes.select(col("a"), col("a").as("b")))
-      .distinct().localCheckpoint()
+    var c = Pin(e.unionByName(nodes.select(col("a"), col("a").as("b")))
+      .distinct())
     var n = c.count()
     var done = false
     while (!done) {
-      val c2 = c.as("x").join(c.as("y"), col("x.b") === col("y.a"))
+      val c2 = Pin(c.as("x").join(c.as("y"), col("x.b") === col("y.a"))
         .select(col("x.a").as("a"), col("y.b").as("b"))
-        .unionByName(c).distinct().localCheckpoint()
+        .unionByName(c).distinct())
       val n2 = c2.count()
       done = n2 == n
-      UrlDedup.releaseOrderCache(c)
+      Pin.release(c)
       c = c2; n = n2
     }
-    // checkpoint blocks stay live: returned plans read them lazily
-    // (callers release per-query via the harness RDD unpersist)
+    // the last pin stays live: returned plans read it lazily (callers
+    // release per query with Pin.releaseAll)
     c
   }
 
@@ -551,13 +518,12 @@ object HostRank {
     // windows over the whole key table; (measure desc, key asc) is a
     // total order (key unique), so ranks are identical to the old
     // row_number and the deterministic tie-break is preserved
-    val base = df.select(col(keyCol), col(aCol), col(bCol))
-      .localCheckpoint()
-    val ra = SuffixArray.withOrdinal(
+    val base = Pin(df.select(col(keyCol), col(aCol), col(bCol)))
+    val ra = UrlDedup.ordByPartitionOffsets(
         base.select(col(keyCol), col(aCol)),
         Seq(col(aCol).desc, col(keyCol).asc), "__i")
       .select(col(keyCol), (col("__i") + 1L).as("ra"))
-    val rb = SuffixArray.withOrdinal(
+    val rb = UrlDedup.ordByPartitionOffsets(
         base.select(col(keyCol), col(bCol)),
         Seq(col(bCol).desc, col(keyCol).asc), "__i")
       .select(col(keyCol), (col("__i") + 1L).as("rb"))
@@ -582,8 +548,8 @@ object HostRank {
     */
   def mixingStats(edges: DataFrame, srcCol: String = "src",
                   dstCol: String = "dst"): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct().localCheckpoint()
+    val e = Pin(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+      .distinct())
     val outd = e.groupBy("src").agg(count(lit(1)).as("xd"))
     val ind  = e.groupBy("dst").agg(count(lit(1)).as("yd"))
     val sums = e.join(outd, Seq("src")).join(ind, Seq("dst"))
@@ -621,7 +587,7 @@ object HostRank {
   def bowtie(edges: DataFrame, srcCol: String = "src",
              dstCol: String = "dst"): DataFrame = {
     val c = closure(edges, srcCol, dstCol)
-    val comps = componentsFromClosure(c).localCheckpoint()
+    val comps = Pin(componentsFromClosure(c))
     val coreId = comps.orderBy(desc("scc_size"), asc("scc_id"))
       .select("scc_id").limit(1)
     val coreHosts = comps

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Pin
 import graft.functions.MinHashF
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -76,12 +77,13 @@ object LshDedup {
   /** Min-label propagation with pointer jumping over (src, dst) edges.
     * Returns (ord, comp) for every node appearing in an edge.
     *
-    * Every iteration ends in a `localCheckpoint`: iterative DataFrame
+    * Every iteration ends in a [[graft.Pin]]: iterative DataFrame
     * loops otherwise double their logical plan each round (persist caches
     * data but does NOT truncate lineage), so planning cost grows
     * geometrically and one lost executor recomputes the whole chain. The
-    * checkpoint materializes the (tiny) label table and restarts lineage
-    * from it — constant plan size, constant per-iteration cost.
+    * pin materializes the (tiny) label table and restarts lineage from
+    * it — constant plan size, constant per-iteration cost. A round's
+    * labels are freed once the next round's are materialized.
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 25,
                           localThreshold: Long = 2000000L): DataFrame = {
@@ -97,8 +99,8 @@ object LshDedup {
     // The edges are pinned first: the size probe and either solve then
     // read the pin instead of each re-running the edge chain. The local
     // solve's lazy result still reads the pin, so it is left to the
-    // context cleaner there; the loop below releases it explicitly.
-    val pinned = edges.localCheckpoint()
+    // context cleaner there; the loop below releases it.
+    val pinned = Pin(edges)
     val nEdges = pinned.count()
     if (nEdges <= localThreshold) {
       return pinned.select($"src", $"dst").as[(Long, Long)]
@@ -129,56 +131,58 @@ object LshDedup {
         }
         .toDF("ord", "comp")
     }
-    val sym = pinned.select($"src".as("a"), $"dst".as("b"))
-      .unionByName(pinned.select($"dst".as("a"), $"src".as("b")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    def checksum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum($"comp".cast("decimal(38,0)"))).head().getDecimal(0)
-    var labels = sym.groupBy($"a".as("ord"))
-      .agg(least(min($"b"), first($"a")).as("comp"))
-      .localCheckpoint()
-    var prevSum = checksum(labels)
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      // neighbor min
-      val viaNeighbors = sym
-        .join(labels.withColumnRenamed("ord", "a"), Seq("a"))
-        .groupBy($"b".as("ord")).agg(min($"comp").as("ncomp"))
-      val stepped = labels.join(viaNeighbors, Seq("ord"), "left_outer")
-        .select($"ord", least($"comp", coalesce($"ncomp", $"comp")).as("comp"))
-      // pointer jump: comp <- label(comp). The self-join's two sides share
-      // one plan below the rename -> the exchange is planned once
-      // (ReuseExchange); the checkpoint then pins the result.
-      val jumped = stepped.alias("l")
-        .join(stepped.select($"ord".as("comp"), $"comp".as("ccomp")).alias("r"),
-              Seq("comp"), "left_outer")
-        .select($"ord", least($"comp", coalesce($"ccomp", $"comp")).as("comp"))
-        .localCheckpoint()
-      // convergence probe: labels only ever decrease (least of mins), so
-      // the label sum strictly decreases on any change — one tiny agg on
-      // the checkpointed frame instead of a join against the previous one
-      val newSum = checksum(jumped)
-      converged = newSum == prevSum
-      prevSum = newSum
-      labels = jumped
-      iter += 1
+    Pin.scoped { pin =>
+      // released on exit: unpersists sym and frees the edge pin under it
+      val sym = pin.hold(pinned.select($"src".as("a"), $"dst".as("b"))
+        .unionByName(pinned.select($"dst".as("a"), $"src".as("b")))
+        .persist(StorageLevel.MEMORY_AND_DISK))
+      def checksum(df: DataFrame): java.math.BigDecimal =
+        df.agg(sum($"comp".cast("decimal(38,0)"))).head().getDecimal(0)
+      var labels = Pin(sym.groupBy($"a".as("ord"))
+        .agg(least(min($"b"), first($"a")).as("comp")))
+      var prevSum = checksum(labels)
+      var iter = 0
+      var converged = false
+      while (iter < maxIter && !converged) {
+        // neighbor min
+        val viaNeighbors = sym
+          .join(labels.withColumnRenamed("ord", "a"), Seq("a"))
+          .groupBy($"b".as("ord")).agg(min($"comp").as("ncomp"))
+        val stepped = labels.join(viaNeighbors, Seq("ord"), "left_outer")
+          .select($"ord", least($"comp", coalesce($"ncomp", $"comp")).as("comp"))
+        // pointer jump: comp <- label(comp). The self-join's two sides
+        // share one plan below the rename -> the exchange is planned once
+        // (ReuseExchange); the pin then materializes the result.
+        val jumped = Pin(stepped.alias("l")
+          .join(stepped.select($"ord".as("comp"), $"comp".as("ccomp")).alias("r"),
+                Seq("comp"), "left_outer")
+          .select($"ord", least($"comp", coalesce($"ccomp", $"comp")).as("comp")))
+        // convergence probe: labels only ever decrease (least of mins), so
+        // the label sum strictly decreases on any change — one tiny agg on
+        // the pinned frame instead of a join against the previous one
+        val newSum = checksum(jumped)
+        converged = newSum == prevSum
+        prevSum = newSum
+        Pin.release(labels)
+        labels = jumped
+        iter += 1
+      }
+      // Non-convergence would mean WRONG components -> wrong dedup
+      // survivors with no signal (the reference, single-process, cannot
+      // have this failure mode). Fail loudly instead of shipping them:
+      // with pointer jumping the iteration count is O(log diameter), so a
+      // graph that legitimately needs more than maxIter rounds is
+      // astronomically deep — treat hitting the cap as a bug, not a knob.
+      if (!converged) {
+        Pin.release(labels)
+        throw new IllegalStateException(
+          s"connectedComponents did not converge in $maxIter iterations " +
+          s"(label checksum still changing) — component labels would be " +
+          s"wrong; raise maxIter only if the band graph is legitimately " +
+          s"O(2^$maxIter) deep")
+      }
+      labels
     }
-    sym.unpersist()
-    UrlDedup.releaseOrderCache(pinned)
-    // Non-convergence would mean WRONG components -> wrong dedup
-    // survivors with no signal (the reference, single-process, cannot
-    // have this failure mode). Fail loudly instead of shipping them:
-    // with pointer jumping the iteration count is O(log diameter), so a
-    // graph that legitimately needs more than maxIter rounds is
-    // astronomically deep — treat hitting the cap as a bug, not a knob.
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter iterations " +
-        s"(label checksum still changing) — component labels would be " +
-        s"wrong; raise maxIter only if the band graph is legitimately " +
-        s"O(2^$maxIter) deep")
-    labels
   }
 
   /** (ord, comp) for every input row: band-graph connected component
@@ -189,7 +193,7 @@ object LshDedup {
   def components(mh: DataFrame): DataFrame = {
     val spark = mh.sparkSession
     import spark.implicits._
-    val mhp   = mh.localCheckpoint()
+    val mhp   = Pin(mh)
     val comps = connectedComponents(chainEdges(mhp))
     mhp.select($"ord").join(comps, Seq("ord"), "left_outer")
       .withColumn("comp", coalesce($"comp", $"ord"))
@@ -245,9 +249,9 @@ object LshDedup {
   def selfDedup(mh: DataFrame): DataFrame = {
     val spark = mh.sparkSession
     import spark.implicits._
-    // raw-row checkpoint: columnar caching of the bands array column is
+    // a pin, not a cache: columnar caching of the bands array column is
     // slower than the minhash chain it memoizes
-    val mhp    = mh.localCheckpoint()
+    val mhp    = Pin(mh)
     val edges  = chainEdges(mhp)
     val comps  = connectedComponents(edges)
     val member = mhp

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Pin
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -223,7 +224,7 @@ object Multimodal {
                         refCol: String = "media_ref",
                         bytesCol: String = "bytes"): DataFrame =
     nearDupPairsFromHashes(
-      imageAHashes(media, refCol, bytesCol).localCheckpoint(),
+      Pin(imageAHashes(media, refCol, bytesCol)),
       maxDist, refCol)
 
   /** The blocking + verification half of [[imageNearDupPairs]], over an
@@ -1276,33 +1277,6 @@ object Multimodal {
       media.repartition(partitions, col("media_ref")) else media
     repart.withColumn("features", byteHistogramUdf(col("bytes"), lit(bins)))
   }
-
-  /** Metadata-only resize planning (no payload touch): emits the target
-    * dimensions resizeImage would produce — useful to cost a transcode
-    * pass without decoding. The payload transcode itself is the REAL
-    * `resizeImage` above.
-    */
-  def resizeStub(media: DataFrame, maxDim: Int = 256): DataFrame =
-    media
-      .withColumn("out_width",
-        when(col("width") >= col("height"), lit(maxDim))
-          .otherwise((col("width") * maxDim / col("height")).cast(IntegerType)))
-      .withColumn("out_height",
-        when(col("height") > col("width"), lit(maxDim))
-          .otherwise((col("height") * maxDim / col("width")).cast(IntegerType)))
-
-  /** Frame sampling for video rows (STUB): one synthetic frame ref per
-    * `everyMs` of duration — an explode-shaped generator, the real
-    * version decodes frames.
-    */
-  def sampleFrames(media: DataFrame, everyMs: Long = 1000L): DataFrame =
-    media
-      .filter(col("duration_ms").isNotNull && col("duration_ms") > 0)
-      .select(col("media_ref"),
-        explode(sequence(lit(0L), col("duration_ms") - 1, lit(everyMs)))
-          .as("frame_ms"))
-      .withColumn("frame_ref",
-        concat(col("media_ref"), lit("#t="), col("frame_ms")))
 
   /** Integer-quantized DCT-II cosine table for an n-point dimension:
     * cosQ(j)(x) = round(cos(π·(2x+1)·j / 2n) · 10⁴), frequencies j in

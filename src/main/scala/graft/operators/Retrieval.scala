@@ -48,8 +48,8 @@ object Retrieval {
     // Model-scale scalars: N docs, average doc length — ONE fully
     // map-side-combining agg action. dl sums are integer-valued
     // doubles, so the sum is order-insensitive. Deliberately a second
-    // scan of the source rather than a localCheckpoint of the tokenized
-    // corpus: at 100 TB the checkpoint would spool the whole corpus
+    // scan of the source rather than a pin of the tokenized
+    // corpus: at 100 TB the pin would spool the whole corpus
     // into executor-local storage (and its blocks would have to outlive
     // this call for the returned lazy plan to run), while the rescan is
     // a pruned two-column parquet read.

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Pin
 import graft.functions.TextAnalysis
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -118,11 +119,10 @@ object Similarity {
       .orderBy(col(idCol).asc).limit(k)
       .select(col(embCol).cast("array<double>"))
       .collect().map(_.getSeq[Double](0).toArray)
-    // one materialization feeds every iteration — each k-means pass
-    // otherwise re-reads (and re-decodes) the source per iteration
-    val e = embeddings.select(col(embCol).cast("array<double>").as("v"))
-      .localCheckpoint()
-    try {
+    Pin.scoped { pin =>
+      // one materialization feeds every iteration — each k-means pass
+      // otherwise re-reads (and re-decodes) the source per iteration
+      val e = pin(embeddings.select(col(embCol).cast("array<double>").as("v")))
       (1 to iters).foreach { _ =>
         val assigned = e.withColumn("cid", assignListCol(col("v"), cents))
         val dims = assigned
@@ -136,7 +136,7 @@ object Similarity {
         // empty clusters keep their previous centroid
         cents = cents.indices.map(i => dims.getOrElse(i, cents(i))).toArray
       }
-    } finally UrlDedup.releaseOrderCache(e)
+    }
     cents
   }
 
@@ -354,8 +354,7 @@ object Similarity {
     val assigned = embeddings.select(
       assignListCol(col(embCol).cast("array<double>"), cents).as("cid"),
       col(labelCol).as("lab"))
-    val cl = assigned.groupBy("cid", "lab").agg(count(lit(1)).as("ncl"))
-      .localCheckpoint()
+    val cl = Pin(assigned.groupBy("cid", "lab").agg(count(lit(1)).as("ncl")))
     val cTot = cl.groupBy("cid").agg(sum("ncl").as("nc"))
     val lTot = cl.groupBy("lab").agg(sum("ncl").as("nl"))
     val tot = cl.agg(sum("ncl").as("n"))
@@ -652,18 +651,17 @@ object Similarity {
       col("cid") + 1)
     // assignment + norms computed ONCE: the frame feeds the guard
     // action, both sides of the pair self-join and the final kept-join
-    // (4 plan references) — without the checkpoint each would re-run
-    // the kClusters-way distance argmin over the corpus. Blocks belong
-    // to the returned plan; the session's usual cache cleanup (or
-    // unpersist by the caller when done) reclaims them.
-    val e = embeddings
+    // (4 plan references) — without the pin each would re-run the
+    // kClusters-way distance argmin over the corpus. Its blocks belong
+    // to the returned plan; Pin.release on the result (or
+    // Pin.releaseAll) reclaims them.
+    val e = Pin(embeddings
       .select(col(idCol).as("id"), col(embCol).cast("array<double>").as("v"))
       .withColumn("cid", assignListCol(col("v"), cents))
       .withColumn("nrm", sqrt(dotCol(col("v"), col("v"))))
       .withColumn("cent_sim", round(
         dotCol(col("v"), centOf) /
-          (col("nrm") * sqrt(dotCol(centOf, centOf))), 6))
-      .localCheckpoint()
+          (col("nrm") * sqrt(dotCol(centOf, centOf))), 6)))
     // LOUD guard against silent quadratic blowup: the pair join is
     // O(size²) within a cluster by design — a skewed quantizer (or a
     // kClusters too small for the corpus) must fail with advice, not

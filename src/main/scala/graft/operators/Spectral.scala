@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Pin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -51,16 +52,15 @@ object Spectral {
              embCol: String = "embedding"): DataFrame = {
     val sess = embeddings.sparkSession
     import sess.implicits._
-    val cov = covariance(embeddings, idCol, embCol).localCheckpoint()
+    val cov = Pin(covariance(embeddings, idCol, embCol))
     val dim = cov.agg(max("i")).head().getInt(0)
     var v: DataFrame = (1 to dim).map(i => (i, 1.0)).toDF("j", "vj")
     for (_ <- 1 to iters) {
       val w = cov.join(broadcast(v), Seq("j"))
         .groupBy("i").agg(round(sum(col("c") * col("vj")), 8).as("w"))
       val nrm = w.agg(round(sqrt(sum(col("w") * col("w"))), 8).as("n"))
-      v = w.crossJoin(broadcast(nrm))
-        .select(col("i").as("j"), round(col("w") / col("n"), 8).as("vj"))
-        .localCheckpoint()
+      v = Pin(w.crossJoin(broadcast(nrm))
+        .select(col("i").as("j"), round(col("w") / col("n"), 8).as("vj")))
     }
     // Rayleigh quotient v'Cv (v is unit-norm) and the variance share
     val eig = cov

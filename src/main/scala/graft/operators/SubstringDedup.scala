@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Pin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -74,12 +75,11 @@ object SubstringDedup {
                   maxBucket: Int = 64): DataFrame = {
     val fps = windowFingerprints(docs, w)
       .select("doc_id", "fp").distinct()
-    // checkpoint: both self-join sides consume this frame — without it
+    // pinned: both self-join sides consume this frame — without it
     // the tokenize+md5 chain (the dominant cost) runs twice
-    val small = fps.withColumn("n", count(lit(1)).over(
+    val small = Pin(fps.withColumn("n", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("fp")))
-      .where(col("n") <= maxBucket).drop("n")
-      .localCheckpoint()
+      .where(col("n") <= maxBucket).drop("n"))
     small.alias("x").join(small.alias("y"),
         col("x.fp") === col("y.fp") && col("x.doc_id") < col("y.doc_id"))
       .groupBy(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))

@@ -27,8 +27,8 @@ import org.apache.spark.sql.types.LongType
   * bounded maxLen the direct sort shuffles strictly fewer bytes — one
   * pass moving ≤ maxLen-byte rows versus log₂(maxLen/16) rounds that
   * each re-shuffle the corpus through two joins plus an ordinal sort of
-  * the (r1, r2) pair table — and drops the per-round localCheckpoint
-  * materializations and early-exit count jobs. Prefix doubling remains
+  * the (r1, r2) pair table — and drops the per-round pins and
+  * early-exit count jobs. Prefix doubling remains
   * the construction of record only when suffix length is unbounded.
   *
   * Ordering contract: Spark's string sort and DuckDB's default
@@ -40,31 +40,6 @@ import org.apache.spark.sql.types.LongType
   * than maxLen still surface, as equal-rank runs).
   */
 object SuffixArray {
-
-  /** 0-based global ordinal of every row under `ord` without a
-    * single-partition window: range sort, stage-local ids, broadcast
-    * per-partition offsets. Checkpoint-pinned — the id assignment must
-    * not be recomputed under a different boundary sampling.
-    */
-  private[graft] def withOrdinal(df: DataFrame, ord: Seq[Column],
-                                 out: String): DataFrame = {
-    val mask = lit((1L << 33) - 1)
-    val sorted = df.orderBy(ord: _*)
-      .withColumn("__mid", monotonically_increasing_id())
-      .localCheckpoint()
-    val offsets = sorted
-      .groupBy(shiftright(col("__mid"), 33).as("__pid"))
-      .agg(count(lit(1)).as("__cnt"))
-      // partition-count-scale frame; the unpartitioned window is fine
-      .withColumn("__offset",
-        coalesce(sum(col("__cnt")).over(Window.orderBy(asc("__pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__pid"), col("__offset"))
-    sorted.withColumn("__pid", shiftright(col("__mid"), 33))
-      .join(broadcast(offsets), Seq("__pid"))
-      .withColumn(out, col("__offset") + col("__mid").bitwiseAND(mask))
-      .drop("__pid", "__mid", "__offset")
-  }
 
   /** Ranked suffixes with the suffix text still in hand:
     * (doc_id, pos: long, __suf, sa). The shared core of [[build]] and
@@ -82,7 +57,7 @@ object SuffixArray {
         col("__t"))
       .select(col("doc_id"), col("pos").cast(LongType).as("pos"),
         expr("substring(__t, pos)").as("__suf"))
-    withOrdinal(sufs,
+    UrlDedup.ordByPartitionOffsets(sufs,
       Seq(col("__suf").asc, col("doc_id").asc, col("pos").asc), "sa")
   }
 

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Pin
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -89,37 +90,6 @@ object UrlDedup {
                    expectedItems: Option[Long] = None): DataFrame =
     entries.join(seenUrls.select("url"), Seq("url"), "left_anti")
 
-  /** O3: global crawl-order sort by (warc, offset) with a stable total
-    * tie-break, plus a contiguous 0-based `ord` column — DataFrame-native.
-    *
-    * After the range-partitioned sort, `monotonically_increasing_id()`
-    * encodes (partition << 33 | row-in-partition); partition row counts
-    * are tiny (one row per partition), so the global offset of each
-    * partition is a running sum over that small frame, broadcast back. No RDD
-    * round-trip: rows stay in Tungsten format end-to-end (the previous
-    * zipWithIndex path decoded and re-encoded every row).
-    *
-    * The sorted frame is localCheckpoint'ed: both the offsets aggregate
-    * and the final join must observe the *same* physical partitioning and
-    * row order — the checkpoint materializes once, so the
-    * nondeterministic mid is pinned, and the upstream chain runs once for
-    * the two consumers (callers no longer need to persist their input).
-    * `crawlOrderEx` hands the intermediate back so batch drivers can
-    * release its blocks deterministically via releaseOrderCache (leaked
-    * blocks from previous batches otherwise accumulate and evict-thrash
-    * the block manager). On a preemptible cluster swap for reliable
-    * checkpointing; for a batch job a stage retry from lineage is fine.
-    */
-  def crawlOrder(kept: DataFrame): DataFrame = crawlOrderEx(kept)._1
-
-  /** As crawlOrder, also returning the persisted sort intermediate; the
-    * caller should `unpersist()` it once the result is fully consumed.
-    */
-  def crawlOrderEx(kept: DataFrame): (DataFrame, DataFrame) =
-    ordByPartitionOffsets(kept,
-      Seq(asc("warc"), asc("offset"), asc("url"),
-          asc("file_ord"), asc("line_ord")), "ord")
-
   /** O3 crawl order with NO range sort and NO checkpoint — the r6
     * production path. The global rank by (warc, offset, url, file_ord,
     * line_ord) decomposes per WARC file, because warc is the leading
@@ -132,8 +102,8 @@ object UrlDedup {
     * This replaces the range exchange (plus its boundary-sampling pass
     * over the child) with one hash exchange, and — since every column
     * is a deterministic function of the data, no
-    * monotonically_increasing_id — the full-width localCheckpoint that
-    * pinned the sorted frame for its consumers disappears entirely:
+    * monotonically_increasing_id — the full-width pin of the sorted
+    * frame (ordByPartitionOffsets) disappears entirely:
     * repeated consumers recompute identical rows.
     *
     * Skew: the window task unit is ONE warc's records — bounded by WARC
@@ -184,22 +154,23 @@ object UrlDedup {
       .drop("__grn", "__goff")
   }
 
-  /** The partition-offset global-rank idiom behind crawlOrder,
-    * parameterized: range sort on `sortCols`, contiguous 0-based
-    * `ordCol`, all codegen column work. Returns (ranked, sortCache);
-    * release the cache via releaseOrderCache once consumed.
+  /** Global rank without a single-partition window: range sort on
+    * `sortCols`, then a contiguous 0-based `ordCol`, all codegen column
+    * work. After the sort, `monotonically_increasing_id()` encodes
+    * (partition << 33 | row-in-partition); the per-partition row counts
+    * are one row per partition, so each partition's global offset is a
+    * running sum over that small frame, broadcast back.
+    *
+    * The sorted frame is pinned: the offsets aggregate and the join back
+    * must see the same partitioning and row order, and the chain above
+    * runs once for both. Free it with `Pin.release(ranked)` once the
+    * result is consumed.
     */
-  def ordByPartitionOffsets(kept: DataFrame, sortCols0: Seq[Column],
-                            ordCol: String): (DataFrame, DataFrame) = {
-    val sortCols = sortCols0
-    // localCheckpoint (raw UnsafeRow blocks), NOT Dataset.persist: the
-    // columnar cache build re-encodes + compresses every row — measured
-    // as a ~10s non-scaling constant per 2M-row batch on this box (it
-    // saturates memory bandwidth at 8 cores already), vs ~5.6s scalable
-    // for the checkpoint. Blocks are freed via releaseOrderCache.
-    val sorted = kept.orderBy(sortCols: _*)
-      .withColumn("__mid", monotonically_increasing_id())
-      .localCheckpoint()
+  def ordByPartitionOffsets(df: DataFrame, sortCols: Seq[Column],
+                            ordCol: String): DataFrame = {
+    val mask = lit((1L << 33) - 1)
+    val sorted = Pin(df.orderBy(sortCols: _*)
+      .withColumn("__mid", monotonically_increasing_id()))
     val offsets = sorted
       .groupBy(shiftright(col("__mid"), 33).as("__pid"))
       .agg(count(lit(1)).as("__cnt"))
@@ -210,28 +181,17 @@ object UrlDedup {
               .rowsBetween(Window.unboundedPreceding, -1)),
           lit(0L)))
       .select(col("__pid"), col("__offset"))
-    val ordered = sorted
+    sorted
       .withColumn("__pid", shiftright(col("__mid"), 33))
       .join(broadcast(offsets), Seq("__pid"))
-      .withColumn(ordCol,
-        col("__offset") + col("__mid").bitwiseAND(lit((1L << 33) - 1)))
+      .withColumn(ordCol, col("__offset") + col("__mid").bitwiseAND(mask))
       .drop("__pid", "__mid", "__offset")
-    (ordered, sorted)
   }
 
-  /** Release the crawl-order intermediate returned by crawlOrderEx —
-    * handles both the persist and the localCheckpoint storage (the
-    * checkpoint's blocks belong to the internal RDD inside LogicalRDD and
-    * are not freed by Dataset.unpersist).
+  /** Kept for the benchmark harness under perfbench/, which compiles
+    * against this name; src/main calls `Pin.release`.
     */
-  def releaseOrderCache(sorted: DataFrame): Unit = {
-    sorted.unpersist(blocking = false)
-    sorted.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-  }
+  def releaseOrderCache(df: DataFrame): Unit = Pin.release(df)
 
   /** Fetch-batch assignment: the reference chunks the crawl-ordered index
     * into 1000-line shards per download thread

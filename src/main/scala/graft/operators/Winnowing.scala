@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Pin
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -107,12 +108,11 @@ object Winnowing {
                   k: Int = K, w: Int = W,
                   idCol: String = "doc_id",
                   textCol: String = "text"): DataFrame = {
-    val fps = fingerprints(docs, k, w, idCol, textCol)
-      .select(col(idCol), col("fp")).distinct()
-      // checkpoint-pinned: referenced three times below (df guard + both
-      // self-join sides) — without it the whole O(n·w) winnowing chain
-      // re-runs per reference
-      .localCheckpoint()
+    // pinned: referenced three times below (df guard + both self-join
+    // sides) — without it the whole O(n·w) winnowing chain re-runs per
+    // reference
+    val fps = Pin(fingerprints(docs, k, w, idCol, textCol)
+      .select(col(idCol), col("fp")).distinct())
     val ok = fps.groupBy("fp").count().filter(col("count") <= maxDf)
       .select("fp")
     val kept = fps.join(ok, Seq("fp"))

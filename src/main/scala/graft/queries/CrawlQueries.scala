@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Pin
 import graft.Sessions.table
 import graft.functions.Urls
 import graft.operators.{Frontier, PublicSuffix, UrlDedup}
@@ -728,8 +729,8 @@ object CrawlQueries {
       // pin the extraction ONCE: three consumers (seen derivation,
       // anti-join probe, rank) would otherwise each re-run the whole
       // regex/resolution chain (measured 27 s -> ~10 s at sf0.1)
-      val cands = graft.operators.Links.frontierCandidates(
-        pages, "event_id", "url", "html").localCheckpoint()
+      val cands = Pin(graft.operators.Links.frontierCandidates(
+        pages, "event_id", "url", "html"))
       val seen = cands
         .filter(substring(md5(col("url")), 1, 1).isin("0", "1", "2", "3"))
         .select("url")
@@ -921,14 +922,13 @@ object CrawlQueries {
     },
 
     // O3: crawl-order global sort with contiguous ord, via the fused
-    // winner window (A0+J3 in one shuffle) + DF-native crawlOrder (no
-    // single-partition window, no RDD round-trip).
+    // winner window (A0+J3 in one shuffle) + crawlOrderByWarc, the
+    // frontier job's path (per-warc group counts: no single-partition
+    // window, no range sort, no pin) — oracled here so the job's
+    // ordering stays driver-verified.
     "q_crawl_order" -> { (s, dir) =>
       val idx  = indexFrame(s, dir)
       val kept = UrlDedup.winnersKept(idx)
-      // the r6 production path: per-warc group counts, no range sort,
-      // no checkpoint (crawlOrderByWarc) — oracled here so the frontier
-      // job's ordering stays driver-verified
       UrlDedup.crawlOrderByWarc(kept).select("ord", "url", "warc", "offset")
     },
 

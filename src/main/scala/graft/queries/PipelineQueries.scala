@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Pin
 import graft.Sessions.table
 import graft.operators.{DocPipeline, FrequentParagraphs, Multimodal}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -263,15 +264,12 @@ object PipelineQueries {
       val b = graft.functions.MinHashF.optimalBands(0.95)
       // the spanize + per-paragraph 256-perm minhash chain is the
       // dominant cost and is consumed 3x (collect, band rows, final join)
-      val docs = DocPipeline.spanize(htmlFrame(s, dir))
+      val docs = Pin(DocPipeline.spanize(htmlFrame(s, dir))
         .select(col("source").as("domain"),
                 col("doc_id").cast(LongType).as("ord"),
                 col("doc_id"), col("spans"))
         .withColumn("pbands", FrequentParagraphs.paragraphBandsCol(
-          FrequentParagraphs.textSpans(col("spans")), b))
-        // localCheckpoint, not persist: columnar cache encoding of the
-        // nested spans/pbands arrays costs more than the chain it saves
-        .localCheckpoint()
+          FrequentParagraphs.textSpans(col("spans")), b)))
       val freq = FrequentParagraphs.collect(docs)
       FrequentParagraphs.filterFrequent(docs, freq)
         .groupBy("domain")
@@ -344,13 +342,12 @@ object PipelineQueries {
     "q_frequent_bootstrap" -> { (s, dir) =>
       graft.expressions.MinHashExpressions.register(s)
       val b = graft.functions.MinHashF.optimalBands(0.95)
-      val docs = DocPipeline.spanize(htmlFrame(s, dir))
+      val docs = Pin(DocPipeline.spanize(htmlFrame(s, dir))
         .select(col("source").as("domain"),
                 col("doc_id").cast(LongType).as("ord"),
                 col("doc_id"), col("spans"))
         .withColumn("pbands", FrequentParagraphs.paragraphBandsCol(
-          FrequentParagraphs.textSpans(col("spans")), b))
-        .localCheckpoint()
+          FrequentParagraphs.textSpans(col("spans")), b)))
       val boot = FrequentParagraphs.collect(docs.filter(col("ord") % 2 === 0))
       FrequentParagraphs.collect(docs.filter(col("ord") % 2 === 1),
                                  bootstrapDf = Some(boot))
@@ -367,13 +364,12 @@ object PipelineQueries {
     "q_frequent_filter_epoch2" -> { (s, dir) =>
       graft.expressions.MinHashExpressions.register(s)
       val b = graft.functions.MinHashF.optimalBands(0.95)
-      val docs = DocPipeline.spanize(htmlFrame(s, dir))
+      val docs = Pin(DocPipeline.spanize(htmlFrame(s, dir))
         .select(col("source").as("domain"),
                 col("doc_id").cast(LongType).as("ord"),
                 col("doc_id"), col("spans"))
         .withColumn("pbands", FrequentParagraphs.paragraphBandsCol(
-          FrequentParagraphs.textSpans(col("spans")), b))
-        .localCheckpoint()
+          FrequentParagraphs.textSpans(col("spans")), b)))
       val epoch1 = docs.filter(col("ord") % 2 === 0)
       val epoch2 = docs.filter(col("ord") % 2 === 1)
       val oldFreq = FrequentParagraphs.collect(epoch1)
@@ -612,10 +608,9 @@ object PipelineQueries {
     // full-outer confusion counts and the metrics independently.
     "q_dedup_eval" -> { (s, dir) =>
       val media = phashMedia(s, dir)
-      // hash (and therefore PNG-decode) ONCE: the checkpointed table
-      // feeds both the banded prediction and the exhaustive truth join
-      val h = graft.operators.Multimodal.imageAHashes(media)
-        .localCheckpoint()
+      // hash (and therefore PNG-decode) ONCE: the pinned table feeds
+      // both the banded prediction and the exhaustive truth join
+      val h = Pin(graft.operators.Multimodal.imageAHashes(media))
       val pred = graft.operators.Multimodal
         .nearDupPairsFromHashes(h, maxDist = 3)
         .select(col("a_ref"), col("b_ref"))

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Pin
 import graft.Sessions.table
 import graft.functions.{MinHashF, TextAnalysis}
 import graft.operators.{LshDedup, Similarity}
@@ -433,11 +434,10 @@ object TextQueries {
     // N-gram (word-set) Jaccard near-dup pairs, blocked by source —
     // exact two-regime set-similarity join (deletion signatures + prefix
     // filter; see SetSimilarity). The word sets feed both regimes and
-    // the verification joins -> persist.
+    // the verification joins -> pin.
     "q_ngram_jaccard" -> { (s, dir) =>
-      val sets = graft.operators.SetSimilarity
-        .wordSets(table(s, dir, "documents"))
-        .localCheckpoint()
+      val sets = Pin(graft.operators.SetSimilarity
+        .wordSets(table(s, dir, "documents")))
       graft.operators.SetSimilarity.jaccardSelfJoin(sets, t = 0.95)
     },
 
@@ -460,8 +460,8 @@ object TextQueries {
             array_join(slice(toksD, lit(1), kKeep), " "),
             concat(lit("zzza"), col("doc_id")),
             concat(lit("zzzb"), col("doc_id"))).as("text"))
-      val sets = graft.operators.SetSimilarity
-        .wordSets(base.unionByName(excerpts)).localCheckpoint()
+      val sets = Pin(graft.operators.SetSimilarity
+        .wordSets(base.unionByName(excerpts)))
       graft.operators.SetSimilarity.containmentJoin(sets, t = 0.8)
     },
 
@@ -638,9 +638,8 @@ object TextQueries {
 
     "q_lsh_pairs" -> { (s, dir) =>
       val b = MinHashF.optimalBands(0.9)
-      val bt = LshDedup.bandTable(LshDedup.minhashed(lshDocs(s, dir), b))
-        .select("ord", "band", "bhash")
-        .localCheckpoint()
+      val bt = Pin(LshDedup.bandTable(LshDedup.minhashed(lshDocs(s, dir), b))
+        .select("ord", "band", "bhash"))
       bt.alias("x").join(bt.alias("y"),
           col("x.band") === col("y.band") &&
           col("x.bhash") === col("y.bhash") &&

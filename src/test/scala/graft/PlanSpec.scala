@@ -87,7 +87,9 @@ class PlanSpec extends AnyFunSuite {
       lit("w").as("warc"), col("event_id").as("offset"),
       col("user_id").as("length"), lit(0L).as("file_ord"),
       col("event_id").as("line_ord"), lit("f").as("file"))
-    val (ordered, cache) = graft.operators.UrlDedup.crawlOrderEx(idx)
+    val ordered = graft.operators.UrlDedup.ordByPartitionOffsets(idx,
+      Seq(asc("warc"), asc("offset"), asc("url"), asc("file_ord"),
+          asc("line_ord")), "ord")
     val rows = ordered.orderBy("ord").collect()
     val p = ordered.queryExecution.executedPlan.toString
     // the offsets side must broadcast (no shuffle over the sorted data
@@ -98,7 +100,7 @@ class PlanSpec extends AnyFunSuite {
            "ord must be contiguous from 0")
     val sortKey = rows.map(r => (r.getAs[Long]("offset")))
     assert(sortKey.sameElements(sortKey.sorted), "ord must follow sort order")
-    graft.operators.UrlDedup.releaseOrderCache(cache)
+    Pin.release(ordered)
   }
 
   test("ivfSearchIndexed prunes to the probed list partitions") {

@@ -36,7 +36,7 @@ class ProbeSpec extends AnyFunSuite with Eventually {
     val before = persistent
     SparkEntry.queries("q_frontier_pipeline")(spark, dir).count()
     try assert((persistent -- before).nonEmpty)
-    finally Sessions.releasePins(spark)
+    finally Pin.releaseAll(spark)
   }
 
   test("plan writes <query>_<suffix>.txt with the formatted physical plan") {
@@ -53,7 +53,7 @@ class ProbeSpec extends AnyFunSuite with Eventually {
     val names = Seq("q_politeness_rank", "q_outlinks", "q_frontier_pipeline")
     val expected = names.map { q =>
       try q -> SparkEntry.queries(q)(spark, dir).count()
-      finally Sessions.releasePins(spark)
+      finally Pin.releaseAll(spark)
     }
     val timed = leavesNoPins(Probe.time(spark, dir, names))
     assert(timed.map { case (q, _, n) => q -> n } == expected)

@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source guards. The job paths (operators, state, functions,
   * expressions) read no env var or system property, so no env A/B switch
-  * can come back onto them; and src/main builds sessions in exactly three
-  * places (Sessions.local, Bench.session, Main.clusterSession).
+  * can come back onto them; src/main builds sessions in exactly three
+  * places (Sessions.local, Bench.session, Main.clusterSession); and it
+  * pins and frees intermediates only through graft.Pin.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -40,5 +41,24 @@ class SourceHygieneSpec extends AnyFunSuite {
       builder.findAllMatchIn(l).map(_ => s"$f:$n")
     }
     assert(hits.size == 3, hits.mkString("\n"))
+  }
+
+  test("src/main pins only through Pin") {
+    val hits = lines(root).filter { case (f, _, l) =>
+      l.contains("localCheckpoint(") && f.getFileName.toString != "Pin.scala"
+    }
+    assert(hits.isEmpty,
+      hits.map { case (f, n, l) => s"$f:$n: ${l.trim}" }.mkString("\n"))
+  }
+
+  test("src/main frees pins only through Pin") {
+    // UrlDedup.releaseOrderCache stays defined as a forwarder to
+    // Pin.release for the perfbench harness; nothing in src/main calls it
+    val call = "releaseOrderCache|releasePins".r
+    val hits = lines(root).filter { case (_, _, l) =>
+      call.findFirstIn(l).isDefined && !l.contains("def releaseOrderCache(")
+    }
+    assert(hits.isEmpty,
+      hits.map { case (f, n, l) => s"$f:$n: ${l.trim}" }.mkString("\n"))
   }
 }

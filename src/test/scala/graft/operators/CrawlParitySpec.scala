@@ -99,7 +99,7 @@ class CrawlParitySpec extends AnyFunSuite {
 
   test("O3 crawl order is row-identical to the reference") {
     val f       = sparkFiltered(4)
-    val ordered = UrlDedup.crawlOrder(UrlDedup.keepWinners(f, UrlDedup.winners(f)))
+    val ordered = UrlDedup.crawlOrderByWarc(UrlDedup.keepWinners(f, UrlDedup.winners(f)))
     val got = ordered.orderBy("ord")
       .select("url", "warc", "offset", "ord")
       .collect()
