@@ -286,7 +286,6 @@ object Bench {
     import spark.implicits._
     import graft.operators.LshDedup
     import graft.state.LshSeen
-    graft.expressions.MinHashExpressions.register(spark)
     val p = DocFixtures.Params(nDocs = nDocs,
       nHosts = math.max(nDocs / 200, 20),
       nTemplates = math.max(nDocs / 20, 40))

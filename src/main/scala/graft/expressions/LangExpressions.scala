@@ -1,7 +1,8 @@
 package graft.expressions
 
 import graft.functions.TextAnalysis
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.ExpressionBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -78,12 +79,6 @@ object LangExpressions {
       copy(child = newChild)
   }
 
-  /** Idempotent registration (SQL name `graft_lang_id`). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_lang_id", exprs => LangId(exprs.head), "built-in")
-
-  /** Column form; caller must have registered on the session. */
-  def langIdCol(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_lang_id", c)
+  /** Column form (SQL name `graft_lang_id`, see functions.Registry). */
+  def langIdCol(c: Column): Column = column(LangId(expression(c)))
 }

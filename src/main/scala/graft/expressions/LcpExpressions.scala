@@ -1,6 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.ExpressionBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -69,13 +70,7 @@ object LcpExpressions {
       copy(left = newLeft, right = newRight)
   }
 
-  /** Idempotent registration (SQL name `graft_lcp`). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_lcp", exprs => CommonPrefixLen(exprs.head, exprs(1)),
-      "built-in")
-
-  /** Column form; caller must have registered on the session. */
+  /** Column form (SQL name `graft_lcp`, see functions.Registry). */
   def lcpCol(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_lcp", a, b)
+    column(CommonPrefixLen(expression(a), expression(b)))
 }

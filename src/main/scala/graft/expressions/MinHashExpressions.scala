@@ -1,7 +1,8 @@
 package graft.expressions
 
 import graft.functions.MinHashF
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.ExpressionBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -14,10 +15,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * codegen"). Versus ScalaUDF this avoids the per-row encoder round-trip
   * and keeps the operator inside whole-stage codegen via a static call.
   *
-  * Registered in the session FunctionRegistry (SQL name
-  * `graft_minhash_bands`) — the builder-sanctioned extension point short
-  * of a full SparkSessionExtensions module, which this engine doesn't
-  * need (SURVEY.md §4: no custom Rule/Strategy strictly required).
+  * Scala callers use the Column form [[bandsCol]]; SQL users reach both
+  * expressions through functions.Registry (`graft_minhash_bands`,
+  * `graft_minhash_sig`). No SparkSessionExtensions module is needed
+  * (SURVEY.md §4: no custom Rule/Strategy strictly required).
   */
 object MinHashExpressions {
 
@@ -73,16 +74,9 @@ object MinHashExpressions {
       copy(child = newChild)
   }
 
-  /** Idempotent registration into the session's FunctionRegistry. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_bands",
-      exprs => MinHashBands(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_sig",
-      exprs => MinHashSignature(exprs.head),
-      "built-in")
-  }
+  /** Column form: the `b` band hashes of `text`'s minhash signature
+    * (SQL name `graft_minhash_bands`, see functions.Registry).
+    */
+  def bandsCol(text: Column, b: Int): Column =
+    column(MinHashBands(expression(text), b))
 }

@@ -1,6 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.ExpressionBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -204,23 +205,12 @@ object NormalizeExpressions {
         newChild: Expression): Expression = copy(child = newChild)
   }
 
-  /** Idempotent registration (SQL name `graft_nfc`). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nfc", exprs => NfcNormalize(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_strip_accents", exprs => StripAccents(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_fix_mojibake", exprs => FixMojibake(exprs.head), "built-in")
-  }
+  /** Column forms (SQL names `graft_nfc`, `graft_strip_accents`,
+    * `graft_fix_mojibake`, see functions.Registry).
+    */
+  def nfcCol(c: Column): Column = column(NfcNormalize(expression(c)))
 
-  /** Column form; caller must have registered on the session. */
-  def nfcCol(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_nfc", c)
+  def stripAccentsCol(c: Column): Column = column(StripAccents(expression(c)))
 
-  def stripAccentsCol(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_strip_accents", c)
-
-  def fixMojibakeCol(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_fix_mojibake", c)
+  def fixMojibakeCol(c: Column): Column = column(FixMojibake(expression(c)))
 }

@@ -1,6 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.ExpressionBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -121,22 +122,12 @@ object VectorExpressions {
       copy(left = newLeft, right = newRight)
   }
 
-  /** Idempotent registration (SQL names `graft_dot`, `graft_sqdist`). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot",
-      exprs => DotProduct(exprs.head, exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sqdist",
-      exprs => SqDist(exprs.head, exprs(1)),
-      "built-in")
-  }
-
-  /** Column forms; caller must have registered on the session. */
+  /** Column forms (SQL names `graft_dot`, `graft_sqdist`, see
+    * functions.Registry).
+    */
   def dotCol(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_dot", a, b)
+    column(DotProduct(expression(a), expression(b)))
 
   def sqDistCol(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_sqdist", a, b)
+    column(SqDist(expression(a), expression(b)))
 }

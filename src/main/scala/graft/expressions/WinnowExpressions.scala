@@ -1,8 +1,9 @@
 package graft.expressions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.ExpressionBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -115,15 +116,7 @@ object WinnowExpressions {
       copy(first = newFirst, second = newSecond, third = newThird)
   }
 
-  /** Idempotent registration (SQL name `graft_winnow`). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_winnow",
-      exprs => Winnow(exprs.head, exprs(1), exprs(2)), "built-in")
-
-  /** Column form; caller must have registered on the session. */
+  /** Column form (SQL name `graft_winnow`, see functions.Registry). */
   def winnowCol(text: Column, k: Int, w: Int): Column =
-    org.apache.spark.sql.functions.call_function("graft_winnow", text,
-      org.apache.spark.sql.functions.lit(k),
-      org.apache.spark.sql.functions.lit(w))
+    column(Winnow(expression(text), Literal(k), Literal(w)))
 }

@@ -31,7 +31,7 @@ object TextAnalysis {
     val padded = concat(lit(" "), text, lit(" "))
     val needle = s" $w "
     ((length(padded) - length(
-      call_function("replace", padded, lit(needle), lit(""))))
+      replace(padded, lit(needle), lit(""))))
       / needle.length).cast("long")
   }
 

@@ -196,7 +196,7 @@ object Urls {
     */
   def homoglyphSkeletonCol(host: Column): Column =
     Confusables.foldLeft(lower(host)) { case (c, (from, to)) =>
-      call_function("replace", c, lit(from), lit(to))
+      replace(c, lit(from), lit(to))
     }
 
   /** The SQL twin of [[homoglyphSkeletonCol]]. */

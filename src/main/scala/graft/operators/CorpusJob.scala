@@ -45,8 +45,6 @@ object CorpusJob {
                   seenMh: Option[DataFrame] = None,
                   minFreq: Long = 2,
                   recordsPerFile: Long = 2500): Seq[Snapshots.Manifest] = {
-    graft.expressions.MinHashExpressions.register(spark)
-    graft.expressions.LangExpressions.register(spark)
     val b = graft.functions.MinHashF.optimalBands(simThreshold)
 
     def docText = array_join(FrequentParagraphs.textSpans(col("spans")), "\n")

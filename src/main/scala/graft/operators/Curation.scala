@@ -455,7 +455,7 @@ object Curation {
     df.withColumn("n_cc", size(valid).cast(LongType))
       .withColumn("clean_text",
         aggregate(array_distinct(valid), col(textCol),
-          (acc, n) => call_function("replace", acc, n, lit("<CC>"))))
+          (acc, n) => replace(acc, n, lit("<CC>"))))
   }
 
   /** Gzip-compressibility quality signal: highly repetitive pages

@@ -128,9 +128,9 @@ object DocPipeline {
     // both extractors emit whitespace-collapsed text, so escaping needs
     // only the literal entity replacements (no regex, no re-collapse)
     val escaped = transform(rawParas, p =>
-      call_function("replace",
-        call_function("replace",
-          call_function("replace", p, lit("&"), lit("&amp;")),
+      replace(
+        replace(
+          replace(p, lit("&"), lit("&amp;")),
           lit("<"), lit("&lt;")),
         lit(">"), lit("&gt;")))
     val tokened =

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.expressions.MinHashExpressions
 import graft.functions.MinHashF
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -151,11 +152,10 @@ object FrequentParagraphs {
     paras.map(p => MinHashF.bandHashes(MinHashF.signature(p), b)))
 
   /** Column form of paragraphBandsUdf on the codegen'd native expression
-    * (`graft_minhash_bands`) — no per-row encoder round-trip. Caller must
-    * have run `MinHashExpressions.register(spark)` on the session.
+    * (`graft_minhash_bands`) — no per-row encoder round-trip.
     */
   def paragraphBandsCol(paras: org.apache.spark.sql.Column, b: Int): org.apache.spark.sql.Column =
-    transform(paras, p => call_function("graft_minhash_bands", p, lit(b)))
+    transform(paras, p => MinHashExpressions.bandsCol(p, b))
 
   def textSpans(spans: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     transform(filter(spans, s => s.getField("kind") === "p"),

@@ -65,8 +65,7 @@ object Links {
     * dot-segment regexp_replace levels, blowing generated code past
     * the JIT limit and dropping the stage to interpreted mode
     * (measured 24 s for 900k rows; the compiled scalar does the same
-    * work in under a second). Caller must have registered the
-    * expression on the session (outlinks does).
+    * work in under a second).
     */
   def resolveCol(base: Column, href: Column): Column =
     graft.expressions.UrlExpressions.resolveUrlCol(base, href)
@@ -78,7 +77,6 @@ object Links {
   def outlinks(pages: DataFrame, idCol: String = "page_id",
                urlCol: String = "url",
                htmlCol: String = "html"): DataFrame = {
-    graft.expressions.UrlExpressions.register(pages.sparkSession)
     pages
       .where(!col(htmlCol).rlike(MetaNofollow)) // page-level nofollow
       .select(col(idCol), col(urlCol),
@@ -113,7 +111,6 @@ object Links {
   def canonicalTargets(pages: DataFrame, idCol: String = "page_id",
                        urlCol: String = "url",
                        htmlCol: String = "html"): DataFrame = {
-    graft.expressions.UrlExpressions.register(pages.sparkSession)
     val t1 = regexp_extract(col(htmlCol),
       "(?i)<link\\s[^>]*rel\\s*=\\s*[\"']?canonical[\"']?[^>]*" +
         "href\\s*=\\s*[\"']([^\"']*)[\"']", 1)

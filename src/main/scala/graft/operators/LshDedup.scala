@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Pin
+import graft.expressions.MinHashExpressions
 import graft.functions.MinHashF
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -40,8 +41,7 @@ object LshDedup {
     */
   def minhashed(docs: DataFrame, b: Int,
                 textCol: String = "text"): DataFrame = {
-    graft.expressions.MinHashExpressions.register(docs.sparkSession)
-    docs.withColumn("bands", expr(s"graft_minhash_bands($textCol, $b)"))
+    docs.withColumn("bands", MinHashExpressions.bandsCol(col(textCol), b))
   }
 
   /** (doc_id, ord, band, bhash) — one row per band. */

@@ -16,8 +16,7 @@ object Similarity {
     * query vector, via the native graft_dot expression (same sequential
     * left-to-right fold as the zip_with+aggregate chain it replaced, so
     * values — and the DuckDB oracles — are bit-identical; but no
-    * per-row intermediate array allocation). Caller must have run
-    * `VectorExpressions.register` on the session.
+    * per-row intermediate array allocation).
     */
   def cosineCol(emb: Column, query: Seq[Double]): Column = {
     val q     = array(query.map(lit): _*)
@@ -34,7 +33,6 @@ object Similarity {
   def bruteForceTopK(embeddings: DataFrame, query: Seq[Double], k: Int,
                      idCol: String = "vec_id",
                      embCol: String = "embedding"): DataFrame = {
-    graft.expressions.VectorExpressions.register(embeddings.sparkSession)
     embeddings
       .withColumn("sim", round(cosineCol(col(embCol).cast("array<double>"),
                                          query), 4))
@@ -66,7 +64,6 @@ object Similarity {
   def hyperplaneBuckets(embeddings: DataFrame, nPlanes: Int, dim: Int,
                         seed: Long = 42L,
                         embCol: String = "embedding"): DataFrame = {
-    graft.expressions.VectorExpressions.register(embeddings.sparkSession)
     val sigBits = planes(nPlanes, dim, seed).zipWithIndex.map { case (plane, i) =>
       val dot = graft.expressions.VectorExpressions.dotCol(
         col(embCol).cast("array<double>"), array(plane.map(lit): _*))
@@ -114,7 +111,6 @@ object Similarity {
   def ivfCentroids(embeddings: DataFrame, k: Int, iters: Int,
                    idCol: String = "vec_id",
                    embCol: String = "embedding"): Array[Array[Double]] = {
-    graft.expressions.VectorExpressions.register(embeddings.sparkSession)
     var cents: Array[Array[Double]] = embeddings
       .orderBy(col(idCol).asc).limit(k)
       .select(col(embCol).cast("array<double>"))
@@ -160,7 +156,6 @@ object Similarity {
                 kLists: Int, nProbe: Int, iters: Int = 3,
                 idCol: String = "vec_id",
                 embCol: String = "embedding"): DataFrame = {
-    graft.expressions.VectorExpressions.register(embeddings.sparkSession)
     val cents = ivfCentroids(embeddings, kLists, iters, idCol, embCol)
     val qVec = embeddings.filter(col(idCol) === queryVecId)
       .select(col(embCol).cast("array<double>")).head().getSeq[Double](0)
@@ -214,7 +209,6 @@ object Similarity {
                     kLists: Int, nProbe: Int, iters: Int = 3,
                     idCol: String = "vec_id",
                     embCol: String = "embedding"): DataFrame = {
-    graft.expressions.VectorExpressions.register(embeddings.sparkSession)
     import graft.expressions.VectorExpressions.{dotCol, sqDistCol}
     val corpus = embeddings.select(col(idCol).as("vec_id"),
       col(embCol).cast("array<double>").as("v"))
@@ -316,7 +310,6 @@ object Similarity {
   def silhouette(embeddings: DataFrame, kClusters: Int, iters: Int = 3,
                  idCol: String = "vec_id",
                  embCol: String = "embedding"): DataFrame = {
-    graft.expressions.VectorExpressions.register(embeddings.sparkSession)
     val cents = ivfCentroids(embeddings, kClusters, iters, idCol, embCol)
     val v = col(embCol).cast("array<double>")
     val entries = cents.zipWithIndex.map { case (c, i) =>
@@ -523,7 +516,6 @@ object Similarity {
                          idCol: String = "vec_id",
                          blockCol: String = "block",
                          embCol: String = "embedding"): DataFrame = {
-    graft.expressions.VectorExpressions.register(embeddings.sparkSession)
     import graft.expressions.VectorExpressions.dotCol
     // norms precomputed per ROW (n of them), not per pair (n²/blocks):
     // the value is identical, the work is not
@@ -555,7 +547,6 @@ object Similarity {
                       seed: Long = 42L, idCol: String = "vec_id",
                       embCol: String = "embedding",
                       labelCol: String = "label"): DataFrame = {
-    graft.expressions.VectorExpressions.register(embeddings.sparkSession)
     import graft.expressions.VectorExpressions.dotCol
     val b = hyperplaneBuckets(embeddings, nPlanes, dim, seed, embCol)
       .select(col(idCol).as("id"), col(labelCol).as("lbl"), col("bucket"),
@@ -642,7 +633,6 @@ object Similarity {
                idCol: String = "vec_id",
                embCol: String = "embedding",
                maxClusterSize: Long = 200000L): DataFrame = {
-    graft.expressions.VectorExpressions.register(embeddings.sparkSession)
     import graft.expressions.VectorExpressions.dotCol
     val cents = ivfCentroids(embeddings, kClusters, iters, idCol, embCol)
     val centOf = element_at(
@@ -759,7 +749,6 @@ object Similarity {
                  candidates: Option[DataFrame] = None,
                  maxSide: Long = 100000L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.expressions.VectorExpressions.register(a.sparkSession)
     import graft.expressions.VectorExpressions.dotCol
     def side(df: DataFrame, n: String) = df
       .select(col(idCol).as(s"${n}_id"),

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, ExpressionBridge}
+import org.apache.spark.sql.catalyst.expressions.ShiftRight
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType}
 
@@ -180,9 +181,10 @@ object Sketches {
       val p = bloomPos(j, key, m)
       // bitwiseAND, not % 2: the arithmetic shift keeps the sign when
       // bit 63 is set, and a negative remainder would read as "absent"
-      call_function("shiftright",
-        element_at(wlit, (p / 64).cast("int") + 1),
-        pmod(p, lit(64L)).cast("int")).bitwiseAND(lit(1L)) === 1
+      val word = element_at(wlit, (p / 64).cast("int") + 1)
+      val bit = pmod(p, lit(64L)).cast("int")
+      ExpressionBridge.column(ShiftRight(ExpressionBridge.expression(word),
+        ExpressionBridge.expression(bit))).bitwiseAND(lit(1L)) === 1
     }.reduce(_ && _)
   }
 

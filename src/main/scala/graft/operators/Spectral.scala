@@ -59,8 +59,10 @@ object Spectral {
       val w = cov.join(broadcast(v), Seq("j"))
         .groupBy("i").agg(round(sum(col("c") * col("vj")), 8).as("w"))
       val nrm = w.agg(round(sqrt(sum(col("w") * col("w"))), 8).as("n"))
-      v = Pin(w.crossJoin(broadcast(nrm))
+      val next = Pin(w.crossJoin(broadcast(nrm))
         .select(col("i").as("j"), round(col("w") / col("n"), 8).as("vj")))
+      Pin.release(v)
+      v = next
     }
     // Rayleigh quotient v'Cv (v is unit-norm) and the variance share
     val eig = cov
@@ -90,7 +92,6 @@ object Spectral {
   def pcaProject(embeddings: DataFrame, iters: Int = 5,
                  idCol: String = "vec_id",
                  embCol: String = "embedding"): DataFrame = {
-    graft.expressions.VectorExpressions.register(embeddings.sparkSession)
     val top = pcaTop(embeddings, iters, idCol, embCol)
       .orderBy("idx").collect()
     val vLit = array(top.map(r => lit(r.getDouble(1))): _*)

@@ -82,7 +82,6 @@ object SuffixArray {
   private[graft] def adjacentLcpWithText(docs: DataFrame, idCol: String,
                                          textCol: String,
                                          maxLen: Int): DataFrame = {
-    LcpExpressions.register(docs.sparkSession)
     val sufs = buildRanked(docs, idCol, textCol, maxLen)
     val a = sufs.select(col("sa"), col("doc_id").as("doc_a"),
       col("pos").as("pos_a"), col("__suf").as("__sufa"))

@@ -84,10 +84,12 @@ object UrlDedup {
     * the anti-join's shuffle of the seen side is a co-located re-read;
     * Spark's runtime row-level bloom (AQE) can further prune the probe
     * side when beneficial.
+    *
+    * `spark` is unused; it stays because callers (the perfbench harness
+    * among them) pass it positionally.
     */
   def antiJoinSeen(entries: DataFrame, seenUrls: DataFrame,
-                   spark: SparkSession, fpp: Double = 0.01,
-                   expectedItems: Option[Long] = None): DataFrame =
+                   spark: SparkSession): DataFrame =
     entries.join(seenUrls.select("url"), Seq("url"), "left_anti")
 
   /** O3 crawl order with NO range sort and NO checkpoint — the r6

@@ -91,7 +91,6 @@ object Winnowing {
   def fingerprints(docs: DataFrame, k: Int = K, w: Int = W,
                    idCol: String = "doc_id",
                    textCol: String = "text"): DataFrame = {
-    graft.expressions.WinnowExpressions.register(docs.sparkSession)
     docs
       .select(col(idCol), explode(graft.expressions.WinnowExpressions
         .winnowCol(col(textCol), k, w)).as("sel"))

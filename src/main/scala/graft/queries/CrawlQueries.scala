@@ -911,8 +911,8 @@ object CrawlQueries {
         .select(col("url"), col("warc"), col("offset"), col("length"))
     },
 
-    // J2: anti-join of "today's" URLs against the seen set (bloom
-    // pre-pass + exact anti-join) via UrlDedup.antiJoinSeen.
+    // J2: anti-join of "today's" URLs against the seen set (a plain
+    // distributed left-anti join) via UrlDedup.antiJoinSeen.
     "q_seen_antijoin" -> { (s, dir) =>
       val idx  = indexFrame(s, dir)
       val seen = idx.filter(col("offset") < 5000).select("url").distinct()

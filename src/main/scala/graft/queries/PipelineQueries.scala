@@ -30,7 +30,7 @@ object PipelineQueries {
       col("doc_id"),
       col("source"),
       concat(lit("<p>"),
-             call_function("replace", col("text"), lit(" slow "),
+             replace(col("text"), lit(" slow "),
                            lit("</p><p>")),
              lit("</p><p>common footer paragraph for "), col("source"),
              lit(" shared across documents</p>"),
@@ -242,7 +242,6 @@ object PipelineQueries {
     // carried as a LIST of STRUCTs; double decay arithmetic is IEEE-
     // identical on both sides).
     "q_frequent_collect" -> { (s, dir) =>
-      graft.expressions.MinHashExpressions.register(s)
       val b = graft.functions.MinHashF.optimalBands(0.95)
       val docs = DocPipeline.spanize(htmlFrame(s, dir))
         .select(col("source").as("domain"),
@@ -260,7 +259,6 @@ object PipelineQueries {
     // join/window SQL (min-pdata hit per paragraph, occurrence rank per
     // (domain, frequent), drop rank >= min_freq).
     "q_frequent_filter" -> { (s, dir) =>
-      graft.expressions.MinHashExpressions.register(s)
       val b = graft.functions.MinHashF.optimalBands(0.95)
       // the spanize + per-paragraph 256-perm minhash chain is the
       // dominant cost and is consumed 3x (collect, band rows, final join)
@@ -340,7 +338,6 @@ object PipelineQueries {
     // Oracle: two instances of the recursive replay machine, the second
     // seeded from the first's kept list.
     "q_frequent_bootstrap" -> { (s, dir) =>
-      graft.expressions.MinHashExpressions.register(s)
       val b = graft.functions.MinHashF.optimalBands(0.95)
       val docs = Pin(DocPipeline.spanize(htmlFrame(s, dir))
         .select(col("source").as("domain"),
@@ -362,7 +359,6 @@ object PipelineQueries {
     // excluded before new-frequent matching. Oracle: two replay
     // machines + the drop-all/min-freq SQL composed.
     "q_frequent_filter_epoch2" -> { (s, dir) =>
-      graft.expressions.MinHashExpressions.register(s)
       val b = graft.functions.MinHashF.optimalBands(0.95)
       val docs = Pin(DocPipeline.spanize(htmlFrame(s, dir))
         .select(col("source").as("domain"),
@@ -392,7 +388,7 @@ object PipelineQueries {
         concat(
           lit("<div><a href=\"/\">Home</a> <a href=\"/about\">About links navigation</a></div>"),
           lit("<h2>Section about "), col("source"), lit("</h2><p>"),
-          call_function("replace", col("text"), lit(" slow "), lit("</p><p>")),
+          replace(col("text"), lit(" slow "), lit("</p><p>")),
           lit("</p><p>© 2024 footer for "), col("source"), lit("</p>")
         ).as("chunk_body"))
       graft.functions.Boilerplate.classify(html, "chunk_body", "doc_id")
@@ -530,7 +526,7 @@ object PipelineQueries {
           lit("<nav><a href=\"/\">Home</a> <a href=\"/about\">About</a></nav>"),
           lit("<header><h1>Site title banner</h1></header>"),
           lit("<article><h2>Section about "), col("source"), lit("</h2><p>"),
-          call_function("replace", col("text"), lit(" slow "), lit("</p><p>")),
+          replace(col("text"), lit(" slow "), lit("</p><p>")),
           lit("</p><p>tiny</p>"),
           lit("<p><a href=\"#\">read more and more links</a></p>"),
           lit("<p>Share this article with friends</p>"),

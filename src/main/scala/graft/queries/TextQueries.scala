@@ -74,7 +74,6 @@ object TextQueries {
     // docs (cld2 exposes the same is_reliable signal). Scores are
     // integer counts, so top1 - top2 is exact on both engines.
     "q_lang_margin" -> { (s, dir) =>
-      graft.expressions.LangExpressions.register(s)
       val scores = TextAnalysis.LangMarkers.map { case (l, _) =>
         TextAnalysis.langScoreCol(col("text"), l) }
       val arr = sort_array(array(scores: _*), asc = false)
@@ -86,7 +85,6 @@ object TextQueries {
     },
 
     "q_lang_id" -> { (s, dir) =>
-      graft.expressions.LangExpressions.register(s)
       table(s, dir, "documents").select(
         col("doc_id"),
         graft.expressions.LangExpressions.langIdCol(col("text"))
@@ -103,7 +101,6 @@ object TextQueries {
     // CodegenFallback) at ~100 µs/element — 4.2 s here; one JVM call
     // per element brings it under a second with identical values.
     "q_lang_paragraphs" -> { (s, dir) =>
-      graft.expressions.LangExpressions.register(s)
       def lang(c: org.apache.spark.sql.Column) =
         graft.expressions.LangExpressions.langIdCol(c)
       val pars    = TextAnalysis.paragraphsCol(col("text"))
@@ -268,7 +265,6 @@ object TextQueries {
     // that NFC composes) appended from doc_id — both engines build the
     // identical pre-normalization string.
     "q_normalize_text" -> { (s, dir) =>
-      graft.expressions.NormalizeExpressions.register(s)
       val suffix = element_at(array(
           lit(""),
           lit(" zéta"),
@@ -292,7 +288,6 @@ object TextQueries {
     // Cyrillic ё/й, and the pass-through class (ø ß đ) that is NOT a
     // base+mark composition on either engine.
     "q_strip_accents" -> { (s, dir) =>
-      graft.expressions.NormalizeExpressions.register(s)
       val suffix = element_at(array(
           lit(""),
           lit(" café zéta"),
@@ -362,7 +357,6 @@ object TextQueries {
     // repair must NOT touch (its 8-bit bytes are not valid UTF-8); the
     // oracle predicts the repaired output from the same generator.
     "q_mojibake_fix" -> { (s, dir) =>
-      graft.expressions.NormalizeExpressions.register(s)
       val m = pmod(col("doc_id").cast(LongType), lit(4L))
       val suffix = element_at(array(
           lit(""),

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.fixtures.CrawlFixtures
-import graft.operators.{FrontierJob, HostRank, LshDedup}
+import graft.operators.{FrontierJob, HostRank, LshDedup, Spectral}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
@@ -98,6 +98,21 @@ class PinSpec extends AnyFunSuite with Eventually {
       assert(left.subsetOf(pinIds(labels)), s"labelPropagation left: $left")
     }
     Pin.release(labels)
+  }
+
+  test("pcaTop keeps only the pins its result reads") {
+    val emb = Seq(
+      (1L, Seq(1.0, 2.0, 0.5)), (2L, Seq(2.0, 4.1, 1.0)),
+      (3L, Seq(0.5, 1.0, 0.2)), (4L, Seq(3.0, 5.9, 1.6)),
+      (5L, Seq(1.5, 3.2, 0.7))).toDF("vec_id", "embedding")
+    val before = live
+    val top = Spectral.pcaTop(emb, iters = 5)
+    assert(top.count() == 3)
+    eventually(patience) {
+      val left = live -- before
+      assert(left.subsetOf(pinIds(top)), s"pcaTop left: $left")
+    }
+    Pin.release(top)
   }
 
   test("the distributed connectedComponents keeps only its result pinned") {

@@ -9,8 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source guards. The job paths (operators, state, functions,
   * expressions) read no env var or system property, so no env A/B switch
   * can come back onto them; src/main builds sessions in exactly three
-  * places (Sessions.local, Bench.session, Main.clusterSession); and it
-  * pins and frees intermediates only through graft.Pin.
+  * places (Sessions.local, Bench.session, Main.clusterSession); it pins
+  * and frees intermediates only through graft.Pin; it names SQL functions
+  * only in functions.Registry and turns expressions into Columns only in
+  * the ExpressionBridge; and every source is text.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -49,6 +51,33 @@ class SourceHygieneSpec extends AnyFunSuite {
     }
     assert(hits.isEmpty,
       hits.map { case (f, n, l) => s"$f:$n: ${l.trim}" }.mkString("\n"))
+  }
+
+  /** Lines under src/main that contain `needle`, outside file `allowed`. */
+  private def outside(needle: String, allowed: String): Seq[String] =
+    lines(root).collect {
+      case (f, n, l) if l.contains(needle) &&
+          f.getFileName.toString != allowed => s"$f:$n: ${l.trim}"
+    }
+
+  test("src/main registers SQL functions only in Registry") {
+    val hits = outside("createOrReplaceTempFunction", "Registry.scala")
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("src/main builds Columns from expressions only in the bridge") {
+    val hits = Seq("call_function(", "ExpressionUtils")
+      .flatMap(outside(_, "ExpressionBridge.scala"))
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("no src/main source holds a NUL byte") {
+    val walk = Files.walk(Paths.get("src/main"))
+    val files =
+      try walk.iterator().asScala.filter(Files.isRegularFile(_)).toList
+      finally walk.close()
+    val hits = files.filter(f => Files.readAllBytes(f).contains(0: Byte))
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 
   test("src/main frees pins only through Pin") {

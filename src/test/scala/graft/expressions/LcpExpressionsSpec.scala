@@ -51,7 +51,6 @@ class LcpExpressionsSpec extends AnyFunSuite {
   test("column form under codegen matches the split(\"\") formulation " +
       "it replaced") {
     import org.apache.spark.sql.functions._
-    LcpExpressions.register(spark)
     val df = cases.toDF("a", "b")
       .withColumn("got", LcpExpressions.lcpCol(col("a"), col("b")))
       // the SuffixArray.adjacentLcp chain this kernel replaced
@@ -74,7 +73,6 @@ class LcpExpressionsSpec extends AnyFunSuite {
   }
 
   test("null inputs yield null") {
-    LcpExpressions.register(spark)
     import org.apache.spark.sql.functions._
     val r = Seq((Option("a"), Option.empty[String]))
       .toDF("a", "b")

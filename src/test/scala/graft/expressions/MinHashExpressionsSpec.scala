@@ -11,7 +11,7 @@ class MinHashExpressionsSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("native expression equals the Scala function, nulls pass through") {
-    MinHashExpressions.register(spark)
+    graft.functions.Registry.register(spark)
     val texts = Seq("hello world text", "short", "", null)
     val df = texts.toDF("t")
       .selectExpr("t", "graft_minhash_sig(t) AS sig",
@@ -29,7 +29,7 @@ class MinHashExpressionsSpec extends AnyFunSuite {
   }
 
   test("expression stays inside whole-stage codegen") {
-    MinHashExpressions.register(spark)
+    graft.functions.Registry.register(spark)
     val tmp = java.nio.file.Files.createTempDirectory("mh").toString
     Seq("some text here", "other text there").toDF("t")
       .write.mode("overwrite").parquet(tmp)
@@ -42,7 +42,7 @@ class MinHashExpressionsSpec extends AnyFunSuite {
   }
 
   test("failing type check reports cleanly") {
-    MinHashExpressions.register(spark)
+    graft.functions.Registry.register(spark)
     val e = intercept[Exception] {
       spark.range(3).selectExpr("graft_minhash_bands(id, 8)").collect()
     }

@@ -13,7 +13,7 @@ class NormalizeExpressionsSpec extends AnyFunSuite {
   private val Composed   = "café"       // precomposed é
 
   test("graft_nfc composes combining marks, is idempotent, keeps nulls") {
-    NormalizeExpressions.register(spark)
+    graft.functions.Registry.register(spark)
     assert(Decomposed != Composed) // sanity: the fixture is decomposed
     val texts = Seq(Decomposed, Composed, "plain ascii", "", null)
     val rows = texts.toDF("t").selectExpr("t", "graft_nfc(t) AS n")
@@ -35,7 +35,7 @@ class NormalizeExpressionsSpec extends AnyFunSuite {
   }
 
   test("normalization changes hash identity — the reason the op exists") {
-    NormalizeExpressions.register(spark)
+    graft.functions.Registry.register(spark)
     val r = Seq(("é", "é")).toDF("a", "b")
       .selectExpr("md5(a) = md5(b) AS raw_eq",
         "md5(graft_nfc(a)) = md5(graft_nfc(b)) AS norm_eq")
@@ -46,7 +46,7 @@ class NormalizeExpressionsSpec extends AnyFunSuite {
   test("stripAccents: accents drop, non-composition chars pass through") {
     val spark = graft.TestSpark.spark
     import spark.implicits._
-    NormalizeExpressions.register(spark)
+    graft.functions.Registry.register(spark)
     val cases = Seq(
       ("café åño öko", "cafe ano oko"),     // precomposed Latin
       ("ṓm", "om"),                          // two stacked marks
@@ -61,7 +61,7 @@ class NormalizeExpressionsSpec extends AnyFunSuite {
   test("stripAccents is idempotent and NFC-composition-insensitive") {
     val spark = graft.TestSpark.spark
     import spark.implicits._
-    NormalizeExpressions.register(spark)
+    graft.functions.Registry.register(spark)
     // decomposed e + COMBINING ACUTE vs precomposed é: same output
     val r = Seq(("é", "é")).toDF("a", "b")
       .selectExpr(
@@ -75,7 +75,7 @@ class NormalizeExpressionsSpec extends AnyFunSuite {
 
   test("graft_fix_mojibake repairs latin-1 and cp1252 renderings, " +
        "double-encoding, and leaves clean text alone") {
-    NormalizeExpressions.register(spark)
+    graft.functions.Registry.register(spark)
     def corrupt(s: String): String = new String(
       s.getBytes("UTF-8"), java.nio.charset.StandardCharsets.ISO_8859_1)
     def corrupt1252(s: String): String = {

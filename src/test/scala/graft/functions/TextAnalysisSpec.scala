@@ -199,7 +199,6 @@ class TextAnalysisSpec extends AnyFunSuite {
     val spark = graft.TestSpark.spark
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    graft.expressions.LangExpressions.register(spark)
     // adversarial cases: adjacent repeats (non-overlapping replace counts
     // fewer than token counts — both sides must agree), ties (priority
     // order), empty, markers at string edges, unicode markers

@@ -260,6 +260,30 @@ class FrontierSpec extends AnyFunSuite {
     assert(r.getString(0) == "aab")
     assert(r.getString(1) == "hu,elte")
     assert(r.getLong(2) == graft.functions.TextAnalysis.simhash64("a b c"))
+
+    // the native kernels' SQL names, each equal to its Column form
+    import graft.expressions._
+    val t = "the cat und der hund caf\u00e9"
+    val df = Seq((t, "https://a.com/d/p.html", "../x.html",
+      Seq(1.0, 2.0), Seq(0.5, 4.0))).toDF("t", "b", "h", "x", "y")
+    val viaSql = df.selectExpr("graft_lang_id(t)", "graft_lcp(b, h)",
+      "graft_minhash_bands(t, 8)", "graft_nfc(t)", "graft_strip_accents(t)",
+      "graft_fix_mojibake(t)", "graft_resolve_url(b, h)", "graft_dot(x, y)",
+      "graft_sqdist(x, y)", "graft_winnow(t, 4, 3)").head()
+    val viaCol = df.select(LangExpressions.langIdCol(col("t")),
+      LcpExpressions.lcpCol(col("b"), col("h")),
+      MinHashExpressions.bandsCol(col("t"), 8),
+      NormalizeExpressions.nfcCol(col("t")),
+      NormalizeExpressions.stripAccentsCol(col("t")),
+      NormalizeExpressions.fixMojibakeCol(col("t")),
+      UrlExpressions.resolveUrlCol(col("b"), col("h")),
+      VectorExpressions.dotCol(col("x"), col("y")),
+      VectorExpressions.sqDistCol(col("x"), col("y")),
+      WinnowExpressions.winnowCol(col("t"), 4, 3)).head()
+    assert(viaSql == viaCol)
+    // graft_minhash_sig has no Column form: compare with its Scala twin
+    assert(df.selectExpr("graft_minhash_sig(t)").head().getSeq[Long](0) ==
+      graft.functions.MinHashF.signature(t).toSeq)
   }
 
   test("robotsSitemaps: global lines, comments stripped, first-colon split") {

@@ -11,7 +11,6 @@ class LinksSpec extends AnyFunSuite {
   private def resolve(base: String, href: String): Option[String] = {
     val s = spark
     import s.implicits._
-    graft.expressions.UrlExpressions.register(s)
     Option(Seq((base, href)).toDF("b", "h")
       .select(Links.resolveCol(col("b"), col("h")))
       .head().getString(0))
