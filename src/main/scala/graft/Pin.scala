@@ -2,6 +2,7 @@ package graft
 
 import scala.collection.mutable
 
+import org.apache.spark.rdd.RddBridge
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
@@ -33,12 +34,15 @@ object Pin {
   /** Free every pin that each frame reads directly: a pin itself, or the
     * pins under a frame derived from one (not pins under those pins).
     * Non-blocking. The blocks belong to the RDD inside the LogicalRDD, so
-    * `Dataset.unpersist` alone would not free them.
+    * `Dataset.unpersist` alone would not free them. They are freed through
+    * [[org.apache.spark.rdd.RddBridge]], which skips the warning
+    * `RDD.unpersist` logs for every local checkpoint; a reader of a freed
+    * pin still fails loudly.
     */
   def release(dfs: DataFrame*): Unit = dfs.foreach { df =>
     df.unpersist(blocking = false)
     df.queryExecution.analyzed.foreach {
-      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
+      case lr: LogicalRDD => RddBridge.free(lr.rdd, blocking = false)
       case _ => ()
     }
   }
@@ -51,7 +55,7 @@ object Pin {
   def releaseAll(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
+      .foreach(RddBridge.free(_, blocking = false))
   }
 
   /** The pins of one [[scoped]] body. */

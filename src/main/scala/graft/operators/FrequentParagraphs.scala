@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.expressions.MinHashExpressions
-import graft.functions.MinHashF
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -147,12 +146,8 @@ object FrequentParagraphs {
         .zipWithIndex.map { case (pd, i) => (i + 1, pd) }
   }
 
-  /** Paragraph band arrays for the text spans of a document. */
-  val paragraphBandsUdf = udf((paras: Seq[String], b: Int) =>
-    paras.map(p => MinHashF.bandHashes(MinHashF.signature(p), b)))
-
-  /** Column form of paragraphBandsUdf on the codegen'd native expression
-    * (`graft_minhash_bands`) — no per-row encoder round-trip.
+  /** Paragraph band arrays for the text spans of a document, on the
+    * codegen'd native expression (`graft_minhash_bands`).
     */
   def paragraphBandsCol(paras: org.apache.spark.sql.Column, b: Int): org.apache.spark.sql.Column =
     transform(paras, p => MinHashExpressions.bandsCol(p, b))

@@ -1,5 +1,10 @@
 package graft.operators
 
+import java.util.Locale
+import java.util.regex.Pattern
+
+import scala.collection.mutable
+
 import graft.Pin
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -238,106 +243,189 @@ object Frontier {
     sb.toString
   }
 
-  private val robotsRegexUdf = udf(robotsRegex _)
+  /** One rule of the group a robots file applies to the agent, with the
+    * file's crawl delay: the struct robotsRules explodes per file.
+    */
+  case class RobotsRule(path_prefix: String, allow: Boolean, crawl_delay: Long)
+
+  /** A rules-table row as robotsGate's verdict reads it. */
+  case class RobotsPattern(path_prefix: String, allow: Option[Boolean])
+
+  /** robotsGate's per-row verdict (RFC 9309 §2.2.2): the longest matching
+    * pattern decides, allow wins an equal-length tie, no matching rule
+    * allows. A null path or prefix matches nothing; a null allow ranks
+    * below disallow and allow of its length, and allows if it decides.
+    * Pattern length counts code points. Each task deserializes its own
+    * instance, so `*`/`$` patterns compile once per pattern per task.
+    */
+  private final class RobotsVerdict
+      extends ((String, Seq[RobotsPattern]) => Boolean) with Serializable {
+    @transient private lazy val compiled = mutable.HashMap.empty[String, Pattern]
+
+    def apply(path: String, rules: Seq[RobotsPattern]): Boolean = {
+      if (path == null || rules == null) return true
+      var bestLen = -1
+      var bestRank = -1 // 0 null allow, 1 disallow, 2 allow
+      rules.foreach { r =>
+        val p = r.path_prefix
+        if (p != null) {
+          val hit =
+            if (p.indexOf('*') >= 0 || p.endsWith("$"))
+              compiled.getOrElseUpdate(p, Pattern.compile(robotsRegex(p)))
+                .matcher(path).find()
+            else path.startsWith(p)
+          if (hit) {
+            val len = p.codePointCount(0, p.length)
+            val rank = r.allow.fold(0)(a => if (a) 2 else 1)
+            if (len > bestLen || (len == bestLen && rank > bestRank)) {
+              bestLen = len
+              bestRank = rank
+            }
+          }
+        }
+      }
+      bestRank != 1
+    }
+  }
+
+  private val robotsVerdictUdf = udf(new RobotsVerdict)
 
   /** J8 robots gating: keep candidates not disallowed by the most
     * specific matching rule for their host (RFC 9309: longest pattern
-    * wins, `*`/`$` wildcards supported); hosts with no matching rule are
-    * allowed. Patterns compile to regexes once on the rules side, then
-    * a host_key join, match, and a longest-pattern argmax per candidate.
-    * The join strategy is AQE's call, NOT a forced broadcast: at
-    * fixture scale the rules side is tiny and AQE broadcasts it anyway,
-    * but at web scale the all-hosts rules table is GBs — a mandatory
-    * BroadcastExchange would OOM the driver, while the host_key
-    * sort-merge path stays skew-split capable. Plain prefix rules (no
-    * `*`/`$`) keep the codegen'd startsWith fast path.
+    * wins, `*`/`$` wildcards supported); hosts with no matching rule, and
+    * candidates with a null host_key or url, are allowed. The rules
+    * group per host into one list (the only exchange that touches just
+    * the rules), each candidate left-outer joins its host's list on
+    * host_key, and a per-row kernel gives the verdict. The join strategy
+    * is AQE's call, NOT a forced broadcast: at fixture scale the rules
+    * side is tiny and AQE broadcasts it anyway, but at web scale the
+    * all-hosts rules table is GBs — a mandatory BroadcastExchange would
+    * OOM the driver, while the host_key sort-merge path stays skew-split
+    * capable. Output columns: host_key, url, then the candidates' others.
     */
   def robotsGate(candidates: DataFrame, rules: DataFrame,
                  urlCol: String = "url",
                  urlPathCol: String = "path"): DataFrame = {
-    val compiled = rules
-      .withColumn("__wild",
-        col("path_prefix").contains("*") || col("path_prefix").endsWith("$"))
-      .withColumn("__rx",
-        when(col("__wild"), robotsRegexUdf(col("path_prefix"))))
-    // Verdict per distinct (host_key, url): longest matching pattern
-    // wins; no matching rule -> allowed. Distinct first so the broadcast
-    // join and argmax run once per URL, not once per candidate row.
-    val verdicts = candidates
-      .select(col("host_key"), col(urlCol), col(urlPathCol))
-      .distinct()
-      .join(compiled, Seq("host_key"), "inner")
-      .filter(
-        when(col("__wild"), regexp_like(col(urlPathCol), col("__rx")))
-          .otherwise(col(urlPathCol).startsWith(col("path_prefix"))))
-      .groupBy("host_key", urlCol)
-      // longest pattern wins; equal-length tie -> allow (RFC 9309 §2.2.2)
-      .agg(max_by(col("allow"), struct(length(col("path_prefix")), col("allow")))
-        .as("__allowed"))
+    val perHost = rules
+      .groupBy(col("host_key"))
+      .agg(collect_list(struct(col("path_prefix"), col("allow"))).as("__rules"))
+    val out = Seq("host_key", urlCol) ++
+      candidates.columns.filterNot(Set("host_key", urlCol))
     candidates
-      .join(verdicts, Seq("host_key", urlCol), "left_outer")
-      .filter(coalesce(col("__allowed"), lit(true)))
-      .drop("__allowed")
+      .join(perHost, Seq("host_key"), "left_outer")
+      .filter(col(urlCol).isNull ||
+        robotsVerdictUdf(col(urlPathCol), col("__rules")))
+      .select(out.map(col): _*)
+  }
+
+  private val LineBreak = Pattern.compile("\r\n|\r|\n")
+  private val DelayValue = Pattern.compile("[+-]?([0-9]+(\\.[0-9]*)?|\\.[0-9]+)")
+
+  /** `s` without leading and trailing spaces and tabs. */
+  private def trimBlank(s: String): String = {
+    var i = 0
+    var j = s.length
+    while (i < j && (s.charAt(i) == ' ' || s.charAt(i) == '\t')) i += 1
+    while (j > i && (s.charAt(j - 1) == ' ' || s.charAt(j - 1) == '\t')) j -= 1
+    s.substring(i, j)
+  }
+
+  /** A Crawl-delay value in whole seconds: an integer as written, a
+    * decimal rounded up (0.5 -> 1), anything else None.
+    */
+  private[graft] def crawlDelaySeconds(v: String): Option[Long] =
+    if (!DelayValue.matcher(v).matches()) None
+    else
+      try Some(new java.math.BigDecimal(v)
+        .setScale(0, java.math.RoundingMode.CEILING).longValueExact())
+      catch { case _: ArithmeticException => None }
+
+  /** One robots file's rules for `agent`, in one pass over its lines (see
+    * robotsRules). A group's state: its best agent match (2 exact, 1 `*`),
+    * its rules in file order and its smallest valid delay.
+    */
+  private def parseRobots(content: String, agent: String): Seq[RobotsRule] = {
+    if (content == null) return Nil
+    final class Group {
+      var spec = 0
+      val rules = mutable.ArrayBuffer.empty[(String, Boolean)]
+      var delay = Option.empty[Long]
+    }
+    val agentLower = agent.toLowerCase(Locale.ROOT)
+    val groups = mutable.ArrayBuffer.empty[Group]
+    var prevUa = false
+    LineBreak.split(content).foreach { raw =>
+      val hash = raw.indexOf('#')
+      val line = trimBlank(if (hash >= 0) raw.substring(0, hash) else raw)
+      val low = line.toLowerCase(Locale.ROOT)
+      val kind =
+        if (low.startsWith("user-agent:")) 'u'
+        else if (low.startsWith("allow:")) 'a'
+        else if (low.startsWith("disallow:")) 'd'
+        else if (low.startsWith("crawl-delay:")) 'c'
+        else ' '
+      if (kind != ' ') {
+        val value = trimBlank(line.substring(line.indexOf(':') + 1))
+        kind match {
+          case 'u' =>
+            if (!prevUa) groups += new Group
+            val spec =
+              if (value.toLowerCase(Locale.ROOT) == agentLower) 2
+              else if (value == "*") 1 else 0
+            groups.last.spec = math.max(groups.last.spec, spec)
+          case 'a' | 'd' =>
+            if (groups.nonEmpty && value.nonEmpty)
+              groups.last.rules += ((value, kind == 'a'))
+          case _ =>
+            if (groups.nonEmpty) crawlDelaySeconds(value).foreach { d =>
+              groups.last.delay = Some(groups.last.delay.fold(d)(math.min(_, d)))
+            }
+        }
+        prevUa = kind == 'u'
+      }
+    }
+    val best = groups.iterator.map(_.spec).maxOption.getOrElse(0)
+    if (best == 0) Nil
+    else {
+      val chosen = groups.filter(_.spec == best)
+      val delay = chosen.flatMap(_.delay).minOption.getOrElse(1L)
+      chosen.flatMap(_.rules).map { case (p, a) => RobotsRule(p, a, delay) }.toSeq
+    }
   }
 
   /** RFC 9309 robots.txt parser: (host_key, content) files → the rules
-    * table robotsGate consumes, as pure column/window work (windows are
-    * per robots FILE — bounded by file size, never by corpus skew):
-    * lines → strip comments → classify (user-agent / allow / disallow /
-    * crawl-delay) → group boundaries (a user-agent line NOT preceded by
-    * another user-agent line starts a group, RFC 9309 §2.2.1: consecutive
-    * UA lines share one group) → per host pick the most specific
-    * applicable group (exact agent match beats `*`; no match → no rules
-    * = allow all) → emit (host_key, path_prefix, allow, crawl_delay).
-    * Empty Disallow: lines are allow-all no-ops and emit nothing.
+    * table robotsGate consumes, (host_key, path_prefix, allow,
+    * crawl_delay). Every rule is scoped to its own file, so this is one
+    * narrow pass: a per-file kernel parses the content and its rules
+    * explode, with no shuffle. Per file: lines split on CRLF, CR or LF
+    * (RFC 9309 §2.2) → strip `#` comments and surrounding spaces and tabs
+    * → classify (user-agent / allow / disallow / crawl-delay; other lines
+    * are skipped and do not end a run of user-agent lines) → group
+    * boundaries (a user-agent line NOT preceded by another user-agent
+    * line starts a group, RFC 9309 §2.2.1: consecutive UA lines share one
+    * group; rules before the first group are ignored) → pick every group
+    * of the most specific applicable kind (exact agent match,
+    * case-insensitive, beats `*`; no match → no rules = allow all) → emit
+    * their allow/disallow rules in file order, duplicates kept. Empty
+    * Disallow: lines are allow-all no-ops and emit nothing. Files with a
+    * null host_key or content emit nothing.
+    *
+    * crawl_delay is the smallest Crawl-delay of the chosen groups, 1 s when
+    * they give none. A fractional value rounds up to whole seconds (0.5 →
+    * 1), so politeness is never looser than asked; a malformed value (e.g.
+    * `fast`, or past the Long range) is ignored, as if the line were
+    * absent.
     */
   def robotsRules(files: DataFrame, agent: String = "*",
                   hostCol: String = "host_key",
                   contentCol: String = "content"): DataFrame = {
-    val wFile  = Window.partitionBy(col(hostCol)).orderBy(asc("line_idx"))
-    val lines = files
-      .select(col(hostCol),
-              posexplode(split(col(contentCol), "\n")).as(Seq("line_idx", "raw")))
-      .withColumn("line", trim(regexp_replace(col("raw"), "#.*$", "")))
-      .filter(length(col("line")) > 0)
-      .withColumn("kind",
-        when(lower(col("line")).startsWith("user-agent:"), "ua")
-          .when(lower(col("line")).startsWith("allow:"), "allow")
-          .when(lower(col("line")).startsWith("disallow:"), "disallow")
-          .when(lower(col("line")).startsWith("crawl-delay:"), "delay"))
-      .filter(col("kind").isNotNull)
-      .withColumn("value",
-        trim(expr("substring(line, instr(line, ':') + 1)")))
-      .withColumn("grp_start",
-        (col("kind") === "ua" &&
-          coalesce(lag(col("kind"), 1).over(wFile), lit("")) =!= "ua")
-          .cast("long"))
-      .withColumn("grp",
-        sum(col("grp_start")).over(
-          wFile.rowsBetween(Window.unboundedPreceding, 0)))
-    // group applicability: exact agent name beats the wildcard
-    val groups = lines.filter(col("kind") === "ua")
-      .groupBy(hostCol, "grp")
-      .agg(max(when(lower(col("value")) === agent.toLowerCase, 2)
-          .when(col("value") === "*", 1).otherwise(0)).as("spec"))
-      .filter(col("spec") > 0)
-    val wHost = Window.partitionBy(col(hostCol))
-    val chosen = groups
-      .withColumn("best", max(col("spec")).over(wHost))
-      .filter(col("spec") === col("best"))
-      .select(col(hostCol), col("grp"))
-    val rules = lines
-      .join(chosen, Seq(hostCol, "grp"), "left_semi")
-      .filter(col("kind").isin("allow", "disallow", "delay"))
-    val delays = rules.filter(col("kind") === "delay")
-      .groupBy(hostCol)
-      .agg(min(col("value").cast("long")).as("crawl_delay"))
-    rules
-      .filter(col("kind").isin("allow", "disallow") && length(col("value")) > 0)
-      .select(col(hostCol), col("value").as("path_prefix"),
-              (col("kind") === "allow").as("allow"))
-      .join(delays, Seq(hostCol), "left_outer")
-      .withColumn("crawl_delay", coalesce(col("crawl_delay"), lit(1L)))
+    val parse = udf((content: String) => parseRobots(content, agent))
+    files
+      .filter(col(hostCol).isNotNull)
+      .select(col(hostCol), explode(parse(col(contentCol))).as("__r"))
+      .select(col(hostCol), col("__r.path_prefix").as("path_prefix"),
+              col("__r.allow").as("allow"),
+              col("__r.crawl_delay").as("crawl_delay"))
   }
 
   /** `Sitemap:` lines from robots files — the sitemaps-protocol seed

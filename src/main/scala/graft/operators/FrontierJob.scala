@@ -109,7 +109,9 @@ object FrontierJob {
       if (keptIsOrdered) winners
       else pin(winners.observe(obsWin, count(lit(1)).as("n_winners")))
 
-    // 4. J8 robots gate on (host_key, path)
+    // 4. J8 robots gate on (host_key, path): each candidate joins its
+    // host's rule list (one exchange over the rules only; AQE picks the
+    // join) and a per-row kernel keeps it or not — no per-URL shuffle
     val gated = robots match {
       case Some(r) =>
         val cand = kept

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Sitemap ingestion for the frontier: the seed channel a continuous
   * crawler reads besides the index dumps the reference consumes
-  * (robots.txt `Sitemap:` lines — which `Frontier.parseRobots` already
+  * (robots.txt `Sitemap:` lines — which `Frontier.robotsSitemaps` already
   * surfaces — point here). Parses both document kinds from the
   * sitemaps.org protocol: `<urlset>` page entries (url + lastmod) and
   * `<sitemapindex>` child-sitemap pointers, as pure codegen'd regex

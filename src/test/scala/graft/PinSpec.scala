@@ -1,11 +1,18 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import graft.fixtures.CrawlFixtures
 import graft.operators.{FrontierJob, HostRank, LshDedup, Spectral}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.functions.col
 import org.scalatest.concurrent.Eventually
 import org.scalatest.funsuite.AnyFunSuite
@@ -45,6 +52,48 @@ class PinSpec extends AnyFunSuite with Eventually {
     assert(iInner.subsetOf(live), "a pin under a pin is not read directly")
     Pin.release(inner)
     freed(iInner)
+  }
+
+  /** The messages logged while `body` runs, from every logger. */
+  private def logged(body: => Unit): Seq[String] = {
+    val msgs = new ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("pin-spec", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        msgs.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val root = LogManager.getContext(false).asInstanceOf[LoggerContext]
+      .getRootLogger
+    root.addAppender(appender)
+    try body
+    finally { root.removeAppender(appender); appender.stop() }
+    msgs.asScala.toSeq
+  }
+
+  private val CheckpointWarn = "locally checkpointed"
+
+  test("release and releaseAll free pins without the local-checkpoint WARN") {
+    // control: a raw unpersist of a pin's RDD logs the line, so the
+    // capture below would see one
+    val control = Pin(spark.range(10).toDF("x"))
+    val raw = logged(control.queryExecution.analyzed.foreach {
+      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
+      case _ => ()
+    })
+    assert(raw.exists(_.contains(CheckpointWarn)), raw.mkString("\n"))
+    freed(pinIds(control))
+
+    val a = Pin(spark.range(100).toDF("x"))
+    val b = Pin(spark.range(100).toDF("x"))
+    val (ia, ib) = (pinIds(a), pinIds(b))
+    val released = logged(Pin.release(a))
+    freed(ia)
+    assert(ib.subsetOf(live))
+    val all = logged(Pin.releaseAll(spark))
+    freed(ib)
+    val warns = (released ++ all).filter(_.contains(CheckpointWarn))
+    assert(warns.isEmpty, warns.mkString("\n"))
   }
 
   test("scoped frees its pins on return and on a throw") {

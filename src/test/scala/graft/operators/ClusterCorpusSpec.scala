@@ -125,7 +125,7 @@ class ClusterCorpusSpec extends AnyFunSuite {
       .map(dd => (dd.domain, dd.ord, dd.doc.doc_id, dd.doc.spans))
       .toDF("domain", "ord", "doc_id", "spans")
       .repartition(5)
-      .withColumn("pbands", FrequentParagraphs.paragraphBandsUdf(
+      .withColumn("pbands", RefFrequent.paragraphBandsUdf(
         FrequentParagraphs.textSpans($"spans"), lit(b)))
     val bootDf = boot.toDF("domain", "pdata_id", "bands", "score", "count")
     val got = FrequentParagraphs.collect(docsDf, bootstrapDf = Some(bootDf))

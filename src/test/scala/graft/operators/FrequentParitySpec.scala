@@ -24,7 +24,7 @@ class FrequentParitySpec extends AnyFunSuite {
     ddocs.map(dd => (dd.domain, dd.ord, dd.doc.doc_id, dd.doc.spans))
       .toDF("domain", "ord", "doc_id", "spans")
       .repartition(partitions)
-      .withColumn("pbands", FrequentParagraphs.paragraphBandsUdf(
+      .withColumn("pbands", RefFrequent.paragraphBandsUdf(
         FrequentParagraphs.textSpans($"spans"), lit(b)))
 
   type FreqRow = (String, Int, Seq[Long], Double, Long)

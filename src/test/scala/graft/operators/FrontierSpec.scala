@@ -190,6 +190,49 @@ class FrontierSpec extends AnyFunSuite {
     assert(gbot == Set(("/private", false, 1L)))
   }
 
+  private def rulesOf(files: Seq[(String, String)])
+      : Set[(String, String, Boolean, Long)] =
+    Frontier.robotsRules(files.toDF("host_key", "content"))
+      .select("host_key", "path_prefix", "allow", "crawl_delay")
+      .as[(String, String, Boolean, Long)].collect().toSet
+
+  test("robotsRules: CRLF and CR line ends split lines (RFC 9309 §2.2)") {
+    // split on LF alone, `User-agent: *\r` would match no agent and the
+    // file would lose every rule
+    val got = rulesOf(Seq(
+      "crlf" -> "User-agent: *\r\nDisallow: /a\r\nAllow: /a/b # c\r\nCrawl-delay: 3\r\n",
+      "cr"   -> "User-agent: *\rDisallow: /c\r"))
+    assert(got == Set(("crlf", "/a", false, 3L), ("crlf", "/a/b", true, 3L),
+                      ("cr", "/c", false, 1L)))
+  }
+
+  test("robotsRules: tabs are trimmed around lines and values") {
+    // trimmed of spaces alone, a tab-led line would be skipped and a tab
+    // after the colon would stay in the value
+    val got = rulesOf(Seq(
+      "h" -> "User-agent:\t*\n\tDisallow: /t\nDisallow:\t/u\t\nAllow: /v\t# c\n"))
+    assert(got == Set(("h", "/t", false, 1L), ("h", "/u", false, 1L),
+                      ("h", "/v", true, 1L)))
+  }
+
+  test("robotsRules: fractional delays round up, malformed ones are ignored") {
+    // a long cast of these values throws CAST_INVALID_INPUT under ANSI mode
+    val got = rulesOf(Seq(
+      "half"  -> "User-agent: *\nDisallow: /a\nCrawl-delay: 0.5\n",
+      "frac"  -> "User-agent: *\nDisallow: /a\nCrawl-delay: 2.01\nCrawl-delay: 4\n",
+      "bad"   -> "User-agent: *\nDisallow: /a\nCrawl-delay: fast\n",
+      "mixed" -> "User-agent: *\nDisallow: /a\nCrawl-delay: soon\nCrawl-delay: 7\n",
+      "huge"  -> "User-agent: *\nDisallow: /a\nCrawl-delay: 99999999999999999999\n"))
+    assert(got == Set(("half", "/a", false, 1L), ("frac", "/a", false, 3L),
+                      ("bad", "/a", false, 1L), ("mixed", "/a", false, 7L),
+                      ("huge", "/a", false, 1L)))
+    assert(Frontier.crawlDelaySeconds("5") == Some(5L))
+    assert(Frontier.crawlDelaySeconds("1.") == Some(1L))
+    assert(Frontier.crawlDelaySeconds(".2") == Some(1L))
+    assert(Frontier.crawlDelaySeconds("1e3").isEmpty)
+    assert(Frontier.crawlDelaySeconds("").isEmpty)
+  }
+
   test("scheduleWaves: not_before = t0 + (wave-1) * per-host delay") {
     val cand = (0 until 12).map(i =>
       (s"h${i % 2}", s"u$i", i.toLong)).toDF("host_key", "url", "pri")

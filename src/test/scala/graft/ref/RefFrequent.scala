@@ -6,6 +6,8 @@ import graft.operators.FrequentParagraphs.Collector
 
 import scala.collection.mutable
 
+import org.apache.spark.sql.functions.udf
+
 /** Sequential oracle for the frequent-paragraph stages: runs the shared
   * Collector state machine per domain over docs in global order (A3), and
   * the determinized filter semantics (A4: global-order occurrence counter,
@@ -18,6 +20,12 @@ object RefFrequent {
   def paragraphBands(doc: Doc, b: Int): Seq[Array[Long]] =
     doc.spans.filter(_.kind == "p")
       .map(s => MinHashF.bandHashes(MinHashF.signature(s.text), b))
+
+  /** Row-at-a-time form of `FrequentParagraphs.paragraphBandsCol`: band
+    * arrays for a document's text spans.
+    */
+  val paragraphBandsUdf = udf((paras: Seq[String], b: Int) =>
+    paras.map(p => MinHashF.bandHashes(MinHashF.signature(p), b)))
 
   /** A3: (domain, pdata_id, bands, score, count) rows. */
   def collect(docs: Seq[DomainDoc], b: Int, decay: Double = 0.99,
