@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Pin
 import graft.state.Snapshots
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The corpus-build pipeline (reference stages 06→10) as ONE resumable
@@ -17,7 +17,9 @@ import org.apache.spark.sql.functions._
   *
   * Stage numbering is the snapshot id; `lineage` records the stage name
   * and the per-stage metrics carry rows_in/rows_out so the manifest
-  * chain doubles as the pipeline's funnel report.
+  * chain doubles as the pipeline's funnel report. Each stage runs as its
+  * one write plus the pins its body takes (9 root actions per fresh
+  * run); the counts are observed on the writes.
   */
 object CorpusJob {
 
@@ -118,7 +120,7 @@ object CorpusJob {
 
     val byId = Snapshots.chain(tableDir).map(m => m.snapshotId -> m).toMap
     var cur = corpus
-    var rowsIn = -1L // lazily counted only when a stage actually runs
+    var rowsIn = Option.empty[Long] // the previous stage's rows_out
     stages.zipWithIndex.map { case ((name, f), i) =>
       byId.get(i.toLong) match {
         case Some(m) =>
@@ -137,33 +139,41 @@ object CorpusJob {
             "pipeline with different parameters (langs/minTokens/" +
             "simThreshold/seenMh/minFreq/recordsPerFile)")
           cur = spark.read.parquet(s"$tableDir/${m.dataPath}")
+          rowsIn = m.metrics.get("rows_out")
           m
         case None =>
-          val dataDir = Pin.scoped { pin =>
-            if (rowsIn < 0) {
-              // pin the (possibly expensive) input chain once: the
-              // rows_in count and the stage body would otherwise both
-              // execute it
-              if (i == 0) cur = pin(cur)
-              rowsIn = cur.count()
-            }
-            val out = f(pin, cur)
+          // Row counts ride on the stage's write as Observations. Only
+          // stage 0 observes its input (read once, by the filter): an
+          // observation on a twice-read input (dedup's) would count twice.
+          val obsIn  = Observation(s"corpus_${name}_rows_in")
+          val obsOut = Observation(s"corpus_${name}_rows_out")
+          val in = if (rowsIn.isEmpty)
+            cur.observe(obsIn, count(lit(1)).as("rows")) else cur
+          val (dataDir, schema) = Pin.scoped { pin =>
+            val out = f(pin, in)
             val (id, dataDir, _) = Snapshots.stage(tableDir)
             require(id == i,
               s"stage $name expected snapshot $i, got $id — manifest gap")
             if (name == "renumber")
+              // renumber keeps every row, so rows_in sizes the files
               graft.sources.CorpusSource.writeBatched(
-                out, dataDir.toString, "ord", recordsPerFile)
-            else out.write.mode("overwrite").parquet(dataDir.toString)
-            dataDir
+                out, dataDir.toString, "ord", recordsPerFile,
+                numFiles = math.max(1, (rowsIn.get / recordsPerFile).toInt),
+                rows = Some(obsOut))
+            else out.observe(obsOut, count(lit(1)).as("rows"))
+              .write.mode("overwrite").parquet(dataDir.toString)
+            (dataDir, out.schema)
           }
-          cur = spark.read.parquet(dataDir.toString)
-          val rowsOut = cur.count()
+          // with the written schema given, the re-read runs no inference
+          // job (the file source reads it as nullable, as inferred)
+          cur = spark.read.schema(schema).parquet(dataDir.toString)
+          def rows(o: Observation) = o.get("rows").asInstanceOf[Long]
+          val rowsOut = rows(obsOut)
           val m = Snapshots.commit(tableDir, i.toLong,
-            Map("rows_in" -> rowsIn, "rows_out" -> rowsOut,
-                "params_fp" -> paramsFp),
+            Map("rows_in" -> rowsIn.getOrElse(rows(obsIn)),
+                "rows_out" -> rowsOut, "params_fp" -> paramsFp),
             lineage = s"corpus stage=$name")
-          rowsIn = rowsOut
+          rowsIn = Some(rowsOut)
           m
       }
     }

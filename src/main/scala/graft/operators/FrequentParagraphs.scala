@@ -1,8 +1,9 @@
 package graft.operators
 
 import graft.expressions.MinHashExpressions
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StructType}
 
 import scala.collection.mutable
 
@@ -16,7 +17,10 @@ import scala.collection.mutable
   * pass running the state machine over consecutive same-domain runs (no
   * collect_list materialization — a hot domain streams through).
   *
-  * A4 filter determinizes the reference's racy cross-process counter
+  * A4 filter is one pass per domain as well (frequent_paragraphs.py:
+  * 632–748), on the same idiom: the domain's frequents sort before its
+  * docs, which then stream through their band index. It determinizes
+  * the reference's racy cross-process counter
   * (frequent_paragraphs.py:634–640, Manager dict + lock: which copy
   * survives depends on worker timing) into rank-by-global-order: a doc's
   * matching paragraph is dropped iff the doc's occurrence rank for that
@@ -187,7 +191,9 @@ object FrequentParagraphs {
     * touches the driver — it shuffles like any other table. Domains
     * present only in the bootstrap (no new docs) emit nothing, matching
     * the reference (frequent_paragraphs.py:433–439 seeds state only for
-    * domains it is about to read).
+    * domains it is about to read). Docs and bootstrap rows with a null
+    * domain yield no frequents: A4 matches nothing on a null domain, so
+    * every paragraph of such a doc is kept.
     */
   def collect(docs: DataFrame, decay: Double = 0.99,
               minFreq: Long = 2, decayThreshold: Double = 0.5,
@@ -223,6 +229,7 @@ object FrequentParagraphs {
           $"count".cast("long").as("__bcount")))
     }
     unified
+      .filter($"domain".isNotNull)
       .repartition($"domain")
       .sortWithinPartitions($"domain", $"__k", $"__bord", $"ord")
       .as[(String, Int, Long, Long, String, Seq[Seq[Long]], Seq[Long], Double, Long)]
@@ -258,86 +265,123 @@ object FrequentParagraphs {
       .toDF("domain", "pdata_id", "bands", "score", "count")
   }
 
-  /** A4: remove frequent paragraphs. `docs` needs (domain, ord, doc_id,
-    * spans, pbands); `frequents`/`oldFrequents` as produced by `collect`
-    * (domain, pdata_id, bands). Returns docs with spans filtered,
-    * re-offset, and empty-text docs dropped.
+  /** A4: remove frequent paragraphs. `docs` needs (domain, ord, spans,
+    * pbands); its other columns pass through. `frequents`/`oldFrequents`
+    * as produced by `collect` (domain, pdata_id, bands). Returns docs with
+    * spans filtered, re-offset, and empty-text docs dropped.
+    *
+    * The frequents (`__k` = 0, by pdata_id) and the docs (`__k` = 1, by
+    * ord) shuffle together by domain, as `collect`'s bootstrap rows do;
+    * the stage ends on that one AQE-coalesced shuffle. A null domain
+    * matches nothing. Docs sharing one (domain, ord) count as one doc and
+    * drop their merged hits. A doc with a null ord fails loudly.
     */
   def filterFrequent(docs: DataFrame, frequents: DataFrame,
                      oldFrequents: Option[DataFrame] = None,
                      minFreq: Long = 2): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
+    // the column order this API has always returned: (domain, ord) first
+    val cols = Seq("domain", "ord") ++ docs.columns.filterNot(Set("domain", "ord"))
+    val outT = StructType(cols.map(docs.schema(_)))
+    val bandsT = ArrayType(LongType)
+    def freqRows(f: DataFrame, old: Boolean) = f.select(col("domain"),
+      lit(0).as("__k"), col("pdata_id").cast(LongType).as("__o"),
+      lit(old).as("__old"), col("bands").cast(bandsT).as("__fb"),
+      lit(null).cast(outT).as("__doc"))
+    val docRows = docs.select(col("domain"),
+      lit(1).as("__k"), col("ord").cast(LongType).as("__o"),
+      lit(false).as("__old"), lit(null).cast(bandsT).as("__fb"),
+      struct(cols.map(col): _*).as("__doc"))
+    val spanT = outT("spans").dataType.asInstanceOf[ArrayType]
+      .elementType.asInstanceOf[StructType]
+    val (pbandsAt, spansAt) = (outT.fieldIndex("pbands"), outT.fieldIndex("spans"))
+    val (kindAt, offsetAt) = (spanT.fieldIndex("kind"), spanT.fieldIndex("offset"))
+    (docRows +: freqRows(frequents, old = false) +:
+      oldFrequents.map(freqRows(_, old = true)).toSeq)
+      .reduce(_ unionByName _)
+      .repartition(col("domain"))
+      .sortWithinPartitions(col("domain"), col("__k"), col("__o"))
+      .mapPartitions(filterPass(_, minFreq, pbandsAt, spansAt, kindAt, offsetAt))(
+        Encoders.row(outT))
+  }
 
-    // paragraph-level band rows: (domain, ord, p_id, band, bhash)
-    val pBandRows = docs.select($"domain", $"ord",
-        posexplode($"pbands").as(Seq("p_idx", "bands")))
-      .select($"domain", $"ord", ($"p_idx" + 1).as("p_id"),
-        posexplode($"bands").as(Seq("band", "bhash")))
+  /** `filterFrequent`'s pass over one sorted partition: per domain, the
+    * frequents build the (band, bhash) → min pdata_id index and the old
+    * band set, then the domain's docs stream through it in ord order.
+    */
+  private def filterPass(rows: Iterator[Row], minFreq: Long, pbandsAt: Int,
+                         spansAt: Int, kindAt: Int, offsetAt: Int): Iterator[Row] = {
+    def bandKeys(bands: collection.Seq[java.lang.Long]): Iterator[(Int, Long)] =
+      bands.iterator.zipWithIndex.collect {
+        case (h, j) if h != null => (j, h.longValue)
+      }
+    val in = rows.buffered
+    val unset = new AnyRef // no domain seen yet; null is a domain value
+    var domain: Any = unset
+    val index = mutable.HashMap.empty[(Int, Long), Long]
+    val old   = mutable.HashSet.empty[(Int, Long)]
+    val occurrences = mutable.HashMap.empty[Long, Long]
+    def sameDomain(r: Row) = java.util.Objects.equals(r.get(0), domain)
 
-    def freqBandRows(f: DataFrame) = f.select($"domain", $"pdata_id",
-        posexplode($"bands").as(Seq("band", "bhash")))
-
-    // old frequents: any collision -> drop all occurrences. When there
-    // are none (first run), skip the anti-join and union stages entirely
-    // instead of scheduling them against an empty frame.
-    val oldHits = oldFrequents.map { of =>
-      pBandRows.join(freqBandRows(of).drop("pdata_id"),
-                     Seq("domain", "band", "bhash"), "left_semi")
-        .select($"domain", $"ord", $"p_id").distinct()
+    // p_ids (1-based paragraph positions) a run of docs drops
+    def drops(group: collection.Seq[Row]): collection.Set[Long] = {
+      val oldHit = mutable.HashSet.empty[Long]
+      val freqOf = mutable.HashMap.empty[Long, Long] // p_id -> min pdata_id
+      for (r <- group; doc = r.getStruct(5) if !doc.isNullAt(pbandsAt);
+           (bands, i) <- doc.getSeq[collection.Seq[java.lang.Long]](pbandsAt)
+             .zipWithIndex if bands != null;
+           key <- bandKeys(bands)) {
+        if (old.contains(key)) oldHit += i + 1L
+        index.get(key).foreach { f =>
+          freqOf(i + 1L) = math.min(f, freqOf.getOrElse(i + 1L, f))
+        }
+      }
+      freqOf --= oldHit
+      val due = freqOf.valuesIterator.toSet.filter { f =>
+        occurrences(f) = occurrences.getOrElse(f, 0L) + 1
+        occurrences(f) >= minFreq
+      }
+      oldHit ++ freqOf.collect { case (pid, f) if due(f) => pid }
     }
 
-    // new frequents: smallest matching pdata_id per paragraph, old hits
-    // excluded (the reference filters them out before matching)
-    val newBase = oldHits match {
-      case Some(oh) => pBandRows.join(oh, Seq("domain", "ord", "p_id"), "left_anti")
-      case None     => pBandRows
+    // the doc without its dropped paragraphs, re-offset; None if no
+    // paragraph is left
+    def kept(doc: Row, drop: collection.Set[Long]): Option[Row] = {
+      if (doc.isNullAt(spansAt)) return None
+      var pIdx = 0L
+      val spans = doc.getSeq[Row](spansAt).filter { s =>
+        val isP = s.getString(kindAt) == "p"
+        if (isP) pIdx += 1
+        !(isP && drop.contains(pIdx))
+      }
+      if (!spans.exists(_.getString(kindAt) == "p")) None
+      else Some(Row.fromSeq(doc.toSeq.updated(spansAt,
+        spans.zipWithIndex.map { case (s, i) =>
+          Row.fromSeq(s.toSeq.updated(offsetAt, i)) })))
     }
-    val newHits = newBase
-      .join(freqBandRows(frequents), Seq("domain", "band", "bhash"))
-      .groupBy("domain", "ord", "p_id")
-      .agg(min("pdata_id").as("freq_id"))
 
-    // occurrence rank of each (domain, freq_id) over docs in ord order;
-    // the doc's hit is dropped iff rank >= min_freq
-    val docFreq = newHits.select($"domain", $"ord", $"freq_id").distinct()
-    val ranked = docFreq.withColumn("rank",
-      row_number().over(org.apache.spark.sql.expressions.Window
-        .partitionBy($"domain", $"freq_id").orderBy($"ord")))
-    val dropNew = newHits
-      .join(ranked.filter($"rank" >= minFreq), Seq("domain", "ord", "freq_id"))
-      .select($"domain", $"ord", $"p_id")
-
-    val dropAll = oldHits.fold(dropNew)(oh => dropNew.unionByName(oh))
-      .distinct()
-      .groupBy("domain", "ord")
-      .agg(collect_set($"p_id").as("drop_pids"))
-
-    // drop matched paragraphs + re-offset, as a pure column fold (same
-    // pattern as DocPipeline.sameDocDedup) — stays in codegen, no UDF
-    val spanArrayT = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-    val pids = coalesce($"drop_pids", array().cast("array<bigint>"))
-    val folded = aggregate(
-      $"spans",
-      struct(lit(0L).as("pidx"), array().cast(spanArrayT).as("kept")),
-      (acc, s) => {
-        val isP  = s.getField("kind") === "p"
-        val pIdx = acc.getField("pidx") + when(isP, 1L).otherwise(0L)
-        val dropIt = isP && array_contains(pids, pIdx)
-        struct(
-          pIdx.as("pidx"),
-          when(dropIt, acc.getField("kept"))
-            .otherwise(concat(acc.getField("kept"), array(s))).as("kept"))
-      },
-      acc => acc.getField("kept"))
-    val reoffset = transform(folded, (s, i) =>
-      struct(s.getField("kind").as("kind"), s.getField("text").as("text"),
-             s.getField("media_ref").as("media_ref"),
-             i.cast("int").as("offset")))
-
-    docs.join(dropAll, Seq("domain", "ord"), "left_outer")
-      .withColumn("spans", reoffset)
-      .drop("drop_pids")
-      .filter(size(filter($"spans", s => s.getField("kind") === "p")) > 0)
+    in.flatMap { r =>
+      if (!sameDomain(r)) {
+        domain = r.get(0)
+        index.clear(); old.clear(); occurrences.clear()
+      }
+      if (r.getInt(1) == 0) {
+        if (domain != null && !r.isNullAt(4))
+          bandKeys(r.getSeq[java.lang.Long](4)).foreach { key =>
+            if (r.getBoolean(3)) old += key
+            // a new frequent without a pdata_id is never the min hit
+            else if (!r.isNullAt(2))
+              index(key) = math.min(r.getLong(2), index.getOrElse(key, Long.MaxValue))
+          }
+        Iterator.empty
+      } else {
+        require(!r.isNullAt(2), "filterFrequent: a doc with a null ord " +
+          s"has no place in its domain's occurrence order (domain $domain)")
+        val group = mutable.ArrayBuffer(r)
+        while (in.hasNext && in.head.getInt(1) == 1 && sameDomain(in.head) &&
+               in.head.getLong(2) == r.getLong(2)) group += in.next()
+        val drop = if (domain == null) Set.empty[Long] else drops(group)
+        group.iterator.flatMap(g => kept(g.getStruct(5), drop))
+      }
+    }
   }
 }

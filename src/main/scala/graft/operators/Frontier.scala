@@ -433,19 +433,22 @@ object Frontier {
     * Per the protocol these are GLOBAL, not user-agent-group-scoped,
     * so this is a plain line scan: strip comments, keep sitemap lines,
     * take everything after the FIRST colon (the URL's own '://' colon
-    * comes later). Pure columns, no window.
+    * comes later). As in `robotsRules`, CRLF, CR or LF ends a line, and
+    * spaces and tabs are trimmed. Pure columns, no window.
     */
   def robotsSitemaps(files: DataFrame,
                      hostCol: String = "host_key",
-                     contentCol: String = "content"): DataFrame =
+                     contentCol: String = "content"): DataFrame = {
+    def blankTrimmed(c: Column) = regexp_replace(c, "^[ \t]+|[ \t]+$", "")
     files
       .select(col(hostCol),
-        explode(split(col(contentCol), "\n")).as("raw"))
-      .withColumn("line", trim(regexp_replace(col("raw"), "#.*$", "")))
+        explode(split(col(contentCol), LineBreak.pattern)).as("raw"))
+      .withColumn("line", blankTrimmed(regexp_replace(col("raw"), "#.*$", "")))
       .filter(lower(col("line")).startsWith("sitemap:"))
       .select(col(hostCol),
-        trim(expr("substring(line, instr(line, ':') + 1)"))
+        blankTrimmed(expr("substring(line, instr(line, ':') + 1)"))
           .as("sitemap_url"))
+  }
 
   /** O2 byte-range coalescing: group cluster ranges by file, merge
     * byte-contiguous runs (offset == previous end), cap each batch at

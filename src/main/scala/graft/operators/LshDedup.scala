@@ -3,7 +3,7 @@ package graft.operators
 import graft.Pin
 import graft.expressions.MinHashExpressions
 import graft.functions.MinHashF
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -96,12 +96,14 @@ object LshDedup {
     // checkpoint loop (~6 jobs/iteration) with ONE job; above the
     // threshold the distributed min-label/pointer-jump loop runs.
     // Labels match the loop exactly: component = min member ord.
-    // The edges are pinned first: the size probe and either solve then
-    // read the pin instead of each re-running the edge chain. The local
-    // solve's lazy result still reads the pin, so it is left to the
-    // context cleaner there; the loop below releases it.
-    val pinned = Pin(edges)
-    val nEdges = pinned.count()
+    // The edges are pinned first, so either solve reads the pin instead
+    // of re-running the edge chain; the edge count rides on the pin job
+    // as an Observation. The local solve's lazy result still reads the
+    // pin, so it is left to the context cleaner there; the loop below
+    // releases it.
+    val obsEdges = Observation("cc_edges")
+    val pinned = Pin(edges.observe(obsEdges, count(lit(1)).as("n")))
+    val nEdges = obsEdges.get("n").asInstanceOf[Long]
     if (nEdges <= localThreshold) {
       return pinned.select($"src", $"dst").as[(Long, Long)]
         .coalesce(1)

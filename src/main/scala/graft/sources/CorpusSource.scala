@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.model.{Doc, Span}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -169,14 +169,22 @@ object CorpusSource {
     * renumber_corpus_files.py:51–90) collapses to range partitioning on
     * the order column plus a per-file record cap: file numbering equals
     * ordering, sizes are even.
+    *
+    * When the caller passes `numFiles`, no count runs; otherwise one
+    * `count()` job sizes the files at `recordsPerFile` rows. `rows`, when
+    * given, receives the written row count as metric `rows`. It is
+    * observed above the range exchange: RangePartitioner's sampling job
+    * runs the plan below it, where rows could be counted twice.
     */
   def writeBatched(df: DataFrame, path: String, ordCol: String,
                    recordsPerFile: Long = 2500,
-                   numFiles: Int = 0): Unit = {
+                   numFiles: Int = 0,
+                   rows: Option[Observation] = None): Unit = {
     val n = if (numFiles > 0) numFiles
     else math.max(1, (df.count() / recordsPerFile).toInt)
-    df.repartitionByRange(n, col(ordCol))
+    val sorted = df.repartitionByRange(n, col(ordCol))
       .sortWithinPartitions(ordCol)
+    rows.fold(sorted)(o => sorted.observe(o, count(lit(1)).as("rows")))
       .write
       .option("maxRecordsPerFile", recordsPerFile)
       .mode("overwrite")

@@ -4,6 +4,7 @@ import graft.TestSpark
 import graft.fixtures.DocFixtures
 import graft.functions.Urls
 import graft.state.Snapshots
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{concat, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,6 +22,19 @@ class CorpusJobSpec extends AnyFunSuite {
       }
     docs.toDF("domain", "ord", "doc_id", "spans")
   }
+
+  /** Every stage's manifest rows_in/rows_out equal a fresh count() of the
+    * stage's input (the corpus, then the previous stage's parquet) and of
+    * its own parquet.
+    */
+  private def assertCounts(dir: String, corpus: DataFrame,
+                           ms: Seq[Snapshots.Manifest]): Unit =
+    ms.zipWithIndex.foreach { case (m, i) =>
+      def rows(k: Int) = spark.read.parquet(s"$dir/${ms(k).dataPath}").count()
+      val in = if (i == 0) corpus.count() else rows(i - 1)
+      assert((m.metrics("rows_in"), m.metrics("rows_out")) == ((in, rows(i))),
+        s"stage $i (${m.lineage}): manifest ${m.metrics}")
+    }
 
   test("full pipeline: five committed stages, monotone funnel, resumable") {
     val dir = Files.createTempDirectory("corpusjob").toString
@@ -40,6 +54,7 @@ class CorpusJobSpec extends AnyFunSuite {
     val fin = spark.read.parquet(s"$dir/${ms.last.dataPath}")
     val ords = fin.select("ord").as[Long].collect().sorted
     assert(ords.toSeq == (0L until outs(4)).toSeq)
+    assertCounts(dir, corpus, ms)
 
     // a SECOND run over the same table recomputes nothing: every stage
     // resumes from its committed manifest (same ids, same metrics)
@@ -77,6 +92,35 @@ class CorpusJobSpec extends AnyFunSuite {
     val b = spark.read.parquet(s"$refDir/${ref.last.dataPath}")
       .select("doc_id", "ord").as[(String, Long)].collect().toSet
     assert(a == b, "resumed history must equal the uninterrupted one")
+    assertCounts(dir, corpus, resumed)
+  }
+
+  test("observed counts hold when renumber writes several files") {
+    val dir = Files.createTempDirectory("corpusjob-files").toString
+    val corpus = corpusDf(300)
+    val ms = CorpusJob.runPipeline(spark, corpus, dir, minTokens = 5,
+      recordsPerFile = 60)
+    assertCounts(dir, corpus, ms)
+    val files = new java.io.File(s"$dir/${ms.last.dataPath}").listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    assert(files >= 3, s"renumber wrote $files files")
+  }
+
+  test("an empty corpus commits five empty stages") {
+    val dir = Files.createTempDirectory("corpusjob-empty").toString
+    val ms = CorpusJob.runPipeline(spark, corpusDf(20).limit(0), dir)
+    assert(ms.map(m => (m.metrics("rows_in"), m.metrics("rows_out"))) ==
+      Seq.fill(5)((0L, 0L)))
+  }
+
+  test("a stage re-read with its written schema equals the inferred one") {
+    val dir = Files.createTempDirectory("corpusjob-schema").toString
+    // tuple columns are non-nullable; the file source reads them nullable
+    val df = corpusDf(20)
+    assert(df.schema.exists(!_.nullable))
+    df.write.mode("overwrite").parquet(dir)
+    assert(spark.read.schema(df.schema).parquet(dir).schema ==
+      spark.read.parquet(dir).schema)
   }
 
   test("resume refuses a foreign snapshot chain") {

@@ -347,4 +347,18 @@ class FrontierSpec extends AnyFunSuite {
     assert(out == Set("https://a.com/s1.xml", "https://a.com/s2.xml",
       "https://a.com/s3.xml"))
   }
+
+  test("robotsSitemaps: CRLF, CR and tab-led lines yield clean URLs") {
+    val s = spark
+    import s.implicits._
+    val files = Seq(
+      ("crlf.com", "User-agent: *\r\nDisallow: /a\r\nSitemap: https://crlf.com/s.xml\r\n"),
+      ("cr.com", "User-agent: *\rSitemap: https://cr.com/s.xml\rDisallow: /b"),
+      ("tab.com", "User-agent: *\n\tSitemap:\thttps://tab.com/s.xml\t\n"))
+    val out = graft.operators.Frontier.robotsSitemaps(
+      files.toDF("host_key", "content"))
+      .as[(String, String)].collect().toSet
+    assert(out == Set(("crlf.com", "https://crlf.com/s.xml"),
+      ("cr.com", "https://cr.com/s.xml"), ("tab.com", "https://tab.com/s.xml")))
+  }
 }

@@ -6,12 +6,17 @@ import graft.operators.FrequentParagraphs.Collector
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.functions.udf
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 
 /** Sequential oracle for the frequent-paragraph stages: runs the shared
   * Collector state machine per domain over docs in global order (A3), and
   * the determinized filter semantics (A4: global-order occurrence counter,
   * smallest matching pdata_id) in one thread. Test oracle only.
+  *
+  * It also keeps the join/window form of A4 (`filterFrequentChain`) that
+  * the per-domain pass of `FrequentParagraphs.filterFrequent` replaced,
+  * as a second, distributed oracle for it.
   */
 object RefFrequent {
 
@@ -103,5 +108,88 @@ object RefFrequent {
           kept.zipWithIndex.map { case (s, i) => s.copy(offset = i) })))
       else None
     }
+  }
+
+  /** A4 as a chain of joins, a window and aggregates over exploded band
+    * rows: docs need (domain, ord, doc_id, spans, pbands); frequents as
+    * produced by `collect` (domain, pdata_id, bands). Same semantics as
+    * `FrequentParagraphs.filterFrequent`, keyed by (domain, ord).
+    */
+  def filterFrequentChain(docs: DataFrame, frequents: DataFrame,
+                          oldFrequents: Option[DataFrame] = None,
+                          minFreq: Long = 2): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+
+    // paragraph-level band rows: (domain, ord, p_id, band, bhash)
+    val pBandRows = docs.select($"domain", $"ord",
+        posexplode($"pbands").as(Seq("p_idx", "bands")))
+      .select($"domain", $"ord", ($"p_idx" + 1).as("p_id"),
+        posexplode($"bands").as(Seq("band", "bhash")))
+
+    def freqBandRows(f: DataFrame) = f.select($"domain", $"pdata_id",
+        posexplode($"bands").as(Seq("band", "bhash")))
+
+    // old frequents: any collision -> drop all occurrences. When there
+    // are none (first run), skip the anti-join and union stages entirely
+    // instead of scheduling them against an empty frame.
+    val oldHits = oldFrequents.map { of =>
+      pBandRows.join(freqBandRows(of).drop("pdata_id"),
+                     Seq("domain", "band", "bhash"), "left_semi")
+        .select($"domain", $"ord", $"p_id").distinct()
+    }
+
+    // new frequents: smallest matching pdata_id per paragraph, old hits
+    // excluded (the reference filters them out before matching)
+    val newBase = oldHits match {
+      case Some(oh) => pBandRows.join(oh, Seq("domain", "ord", "p_id"), "left_anti")
+      case None     => pBandRows
+    }
+    val newHits = newBase
+      .join(freqBandRows(frequents), Seq("domain", "band", "bhash"))
+      .groupBy("domain", "ord", "p_id")
+      .agg(min("pdata_id").as("freq_id"))
+
+    // occurrence rank of each (domain, freq_id) over docs in ord order;
+    // the doc's hit is dropped iff rank >= min_freq
+    val docFreq = newHits.select($"domain", $"ord", $"freq_id").distinct()
+    val ranked = docFreq.withColumn("rank",
+      row_number().over(org.apache.spark.sql.expressions.Window
+        .partitionBy($"domain", $"freq_id").orderBy($"ord")))
+    val dropNew = newHits
+      .join(ranked.filter($"rank" >= minFreq), Seq("domain", "ord", "freq_id"))
+      .select($"domain", $"ord", $"p_id")
+
+    val dropAll = oldHits.fold(dropNew)(oh => dropNew.unionByName(oh))
+      .distinct()
+      .groupBy("domain", "ord")
+      .agg(collect_set($"p_id").as("drop_pids"))
+
+    // drop matched paragraphs + re-offset, as a pure column fold (same
+    // pattern as DocPipeline.sameDocDedup) — stays in codegen, no UDF
+    val spanArrayT = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+    val pids = coalesce($"drop_pids", array().cast("array<bigint>"))
+    val folded = aggregate(
+      $"spans",
+      struct(lit(0L).as("pidx"), array().cast(spanArrayT).as("kept")),
+      (acc, s) => {
+        val isP  = s.getField("kind") === "p"
+        val pIdx = acc.getField("pidx") + when(isP, 1L).otherwise(0L)
+        val dropIt = isP && array_contains(pids, pIdx)
+        struct(
+          pIdx.as("pidx"),
+          when(dropIt, acc.getField("kept"))
+            .otherwise(concat(acc.getField("kept"), array(s))).as("kept"))
+      },
+      acc => acc.getField("kept"))
+    val reoffset = transform(folded, (s, i) =>
+      struct(s.getField("kind").as("kind"), s.getField("text").as("text"),
+             s.getField("media_ref").as("media_ref"),
+             i.cast("int").as("offset")))
+
+    docs.join(dropAll, Seq("domain", "ord"), "left_outer")
+      .withColumn("spans", reoffset)
+      .drop("drop_pids")
+      .filter(size(filter($"spans", s => s.getField("kind") === "p")) > 0)
   }
 }
