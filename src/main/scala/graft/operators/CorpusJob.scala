@@ -142,40 +142,40 @@ object CorpusJob {
           rowsIn = m.metrics.get("rows_out")
           m
         case None =>
-          // Row counts ride on the stage's write as Observations. Only
-          // stage 0 observes its input (read once, by the filter): an
-          // observation on a twice-read input (dedup's) would count twice.
-          val obsIn  = Observation(s"corpus_${name}_rows_in")
-          val obsOut = Observation(s"corpus_${name}_rows_out")
-          val in = if (rowsIn.isEmpty)
-            cur.observe(obsIn, count(lit(1)).as("rows")) else cur
-          val (dataDir, schema) = Pin.scoped { pin =>
+          // stage 0 observes its input, which its filter reads once;
+          // later stages know their rows_in
+          val (in, inRows) = rowsIn.fold(counted(cur))(n => (cur, () => n))
+          val (dataDir, schema, rowsOut) = Pin.scoped { pin =>
             val out = f(pin, in)
             val (id, dataDir, _) = Snapshots.stage(tableDir)
             require(id == i,
               s"stage $name expected snapshot $i, got $id — manifest gap")
-            if (name == "renumber")
+            val rowsOut = if (name == "renumber")
               // renumber keeps every row, so rows_in sizes the files
               graft.sources.CorpusSource.writeBatched(
-                out, dataDir.toString, "ord", recordsPerFile,
-                numFiles = math.max(1, (rowsIn.get / recordsPerFile).toInt),
-                rows = Some(obsOut))
-            else out.observe(obsOut, count(lit(1)).as("rows"))
-              .write.mode("overwrite").parquet(dataDir.toString)
-            (dataDir, out.schema)
+                out, dataDir.toString, "ord", recordsPerFile, inRows())
+            else {
+              val (written, outRows) = counted(out)
+              written.write.mode("overwrite").parquet(dataDir.toString)
+              outRows()
+            }
+            (dataDir, out.schema, rowsOut)
           }
-          // with the written schema given, the re-read runs no inference
-          // job (the file source reads it as nullable, as inferred)
+          // the written schema spares the re-read an inference job
           cur = spark.read.schema(schema).parquet(dataDir.toString)
-          def rows(o: Observation) = o.get("rows").asInstanceOf[Long]
-          val rowsOut = rows(obsOut)
           val m = Snapshots.commit(tableDir, i.toLong,
-            Map("rows_in" -> rowsIn.getOrElse(rows(obsIn)),
-                "rows_out" -> rowsOut, "params_fp" -> paramsFp),
+            Map("rows_in" -> inRows(), "rows_out" -> rowsOut,
+                "params_fp" -> paramsFp),
             lineage = s"corpus stage=$name")
           rowsIn = Some(rowsOut)
           m
       }
     }
+  }
+
+  /** `df` with its row count observed, and the count once it has run. */
+  private def counted(df: DataFrame): (DataFrame, () => Long) = {
+    val o = Observation()
+    (df.observe(o, count(lit(1)).as("rows")), () => o.get("rows").asInstanceOf[Long])
   }
 }

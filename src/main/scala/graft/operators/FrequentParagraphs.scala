@@ -268,13 +268,9 @@ object FrequentParagraphs {
   /** A4: remove frequent paragraphs. `docs` needs (domain, ord, spans,
     * pbands); its other columns pass through. `frequents`/`oldFrequents`
     * as produced by `collect` (domain, pdata_id, bands). Returns docs with
-    * spans filtered, re-offset, and empty-text docs dropped.
-    *
-    * The frequents (`__k` = 0, by pdata_id) and the docs (`__k` = 1, by
-    * ord) shuffle together by domain, as `collect`'s bootstrap rows do;
-    * the stage ends on that one AQE-coalesced shuffle. A null domain
-    * matches nothing. Docs sharing one (domain, ord) count as one doc and
-    * drop their merged hits. A doc with a null ord fails loudly.
+    * spans filtered, re-offset, and empty-text docs dropped. A null
+    * domain matches nothing. Docs sharing one (domain, ord) count as one
+    * doc and drop their merged hits. A doc with a null ord fails loudly.
     */
   def filterFrequent(docs: DataFrame, frequents: DataFrame,
                      oldFrequents: Option[DataFrame] = None,
@@ -291,26 +287,21 @@ object FrequentParagraphs {
       lit(1).as("__k"), col("ord").cast(LongType).as("__o"),
       lit(false).as("__old"), lit(null).cast(bandsT).as("__fb"),
       struct(cols.map(col): _*).as("__doc"))
-    val spanT = outT("spans").dataType.asInstanceOf[ArrayType]
-      .elementType.asInstanceOf[StructType]
-    val (pbandsAt, spansAt) = (outT.fieldIndex("pbands"), outT.fieldIndex("spans"))
-    val (kindAt, offsetAt) = (spanT.fieldIndex("kind"), spanT.fieldIndex("offset"))
     (docRows +: freqRows(frequents, old = false) +:
       oldFrequents.map(freqRows(_, old = true)).toSeq)
       .reduce(_ unionByName _)
       .repartition(col("domain"))
       .sortWithinPartitions(col("domain"), col("__k"), col("__o"))
-      .mapPartitions(filterPass(_, minFreq, pbandsAt, spansAt, kindAt, offsetAt))(
-        Encoders.row(outT))
+      .mapPartitions(filterPass(_, minFreq))(Encoders.row(outT))
   }
 
   /** `filterFrequent`'s pass over one sorted partition: per domain, the
     * frequents build the (band, bhash) → min pdata_id index and the old
     * band set, then the domain's docs stream through it in ord order.
     */
-  private def filterPass(rows: Iterator[Row], minFreq: Long, pbandsAt: Int,
-                         spansAt: Int, kindAt: Int, offsetAt: Int): Iterator[Row] = {
-    def bandKeys(bands: collection.Seq[java.lang.Long]): Iterator[(Int, Long)] =
+  private def filterPass(rows: Iterator[Row], minFreq: Long): Iterator[Row] = {
+    type Bands = collection.Seq[java.lang.Long]
+    def bandKeys(bands: Bands): Iterator[(Int, Long)] =
       bands.iterator.zipWithIndex.collect {
         case (h, j) if h != null => (j, h.longValue)
       }
@@ -326,9 +317,8 @@ object FrequentParagraphs {
     def drops(group: collection.Seq[Row]): collection.Set[Long] = {
       val oldHit = mutable.HashSet.empty[Long]
       val freqOf = mutable.HashMap.empty[Long, Long] // p_id -> min pdata_id
-      for (r <- group; doc = r.getStruct(5) if !doc.isNullAt(pbandsAt);
-           (bands, i) <- doc.getSeq[collection.Seq[java.lang.Long]](pbandsAt)
-             .zipWithIndex if bands != null;
+      for (r <- group; pbands = r.getStruct(5).getAs[collection.Seq[Bands]]("pbands")
+           if pbands != null; (bands, i) <- pbands.zipWithIndex if bands != null;
            key <- bandKeys(bands)) {
         if (old.contains(key)) oldHit += i + 1L
         index.get(key).foreach { f =>
@@ -346,17 +336,17 @@ object FrequentParagraphs {
     // the doc without its dropped paragraphs, re-offset; None if no
     // paragraph is left
     def kept(doc: Row, drop: collection.Set[Long]): Option[Row] = {
-      if (doc.isNullAt(spansAt)) return None
+      def isP(s: Row) = s.getAs[String]("kind") == "p"
+      if (doc.getAs[AnyRef]("spans") == null) return None
       var pIdx = 0L
-      val spans = doc.getSeq[Row](spansAt).filter { s =>
-        val isP = s.getString(kindAt) == "p"
-        if (isP) pIdx += 1
-        !(isP && drop.contains(pIdx))
+      val spans = doc.getAs[collection.Seq[Row]]("spans").filter { s =>
+        if (isP(s)) pIdx += 1
+        !(isP(s) && drop.contains(pIdx))
       }
-      if (!spans.exists(_.getString(kindAt) == "p")) None
-      else Some(Row.fromSeq(doc.toSeq.updated(spansAt,
+      if (!spans.exists(isP)) None
+      else Some(Row.fromSeq(doc.toSeq.updated(doc.fieldIndex("spans"),
         spans.zipWithIndex.map { case (s, i) =>
-          Row.fromSeq(s.toSeq.updated(offsetAt, i)) })))
+          Row.fromSeq(s.toSeq.updated(s.fieldIndex("offset"), i)) })))
     }
 
     in.flatMap { r =>
@@ -366,7 +356,7 @@ object FrequentParagraphs {
       }
       if (r.getInt(1) == 0) {
         if (domain != null && !r.isNullAt(4))
-          bandKeys(r.getSeq[java.lang.Long](4)).foreach { key =>
+          bandKeys(r.getAs[Bands](4)).foreach { key =>
             if (r.getBoolean(3)) old += key
             // a new frequent without a pdata_id is never the min hit
             else if (!r.isNullAt(2))

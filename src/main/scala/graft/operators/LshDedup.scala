@@ -96,11 +96,10 @@ object LshDedup {
     // checkpoint loop (~6 jobs/iteration) with ONE job; above the
     // threshold the distributed min-label/pointer-jump loop runs.
     // Labels match the loop exactly: component = min member ord.
-    // The edges are pinned first, so either solve reads the pin instead
-    // of re-running the edge chain; the edge count rides on the pin job
-    // as an Observation. The local solve's lazy result still reads the
-    // pin, so it is left to the context cleaner there; the loop below
-    // releases it.
+    // The edges are pinned first (their count observed on the pin job),
+    // so either solve reads the pin instead of re-running the edge chain.
+    // The local solve's lazy result still reads the pin, so it is left
+    // to the context cleaner there; the loop below releases it.
     val obsEdges = Observation("cc_edges")
     val pinned = Pin(edges.observe(obsEdges, count(lit(1)).as("n")))
     val nEdges = obsEdges.get("n").asInstanceOf[Long]

@@ -170,25 +170,21 @@ object CorpusSource {
     * the order column plus a per-file record cap: file numbering equals
     * ordering, sizes are even.
     *
-    * When the caller passes `numFiles`, no count runs; otherwise one
-    * `count()` job sizes the files at `recordsPerFile` rows. `rows`, when
-    * given, receives the written row count as metric `rows`. It is
-    * observed above the range exchange: RangePartitioner's sampling job
-    * runs the plan below it, where rows could be counted twice.
+    * `rows`, the frame's known row count, sizes the files, so no count
+    * job runs. Returns the written row count, observed above the range
+    * exchange (RangePartitioner's sampling job runs the plan below it).
     */
   def writeBatched(df: DataFrame, path: String, ordCol: String,
-                   recordsPerFile: Long = 2500,
-                   numFiles: Int = 0,
-                   rows: Option[Observation] = None): Unit = {
-    val n = if (numFiles > 0) numFiles
-    else math.max(1, (df.count() / recordsPerFile).toInt)
-    val sorted = df.repartitionByRange(n, col(ordCol))
+                   recordsPerFile: Long, rows: Long): Long = {
+    val written = Observation()
+    df.repartitionByRange(math.max(1, (rows / recordsPerFile).toInt), col(ordCol))
       .sortWithinPartitions(ordCol)
-    rows.fold(sorted)(o => sorted.observe(o, count(lit(1)).as("rows")))
+      .observe(written, count(lit(1)).as("rows"))
       .write
       .option("maxRecordsPerFile", recordsPerFile)
       .mode("overwrite")
       .parquet(path)
+    written.get("rows").asInstanceOf[Long]
   }
 
   /** O8: seeded deterministic shuffle — the producer/consumer TSV

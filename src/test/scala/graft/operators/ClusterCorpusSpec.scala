@@ -90,7 +90,8 @@ class ClusterCorpusSpec extends AnyFunSuite {
   test("O7 batched sink: even files, ordering preserved") {
     val dir = java.nio.file.Files.createTempDirectory("batched").toString
     val df  = spark.range(1000).select($"id", ($"id" * 7 % 1000).as("v"))
-    CorpusSource.writeBatched(df, s"$dir/out", "id", recordsPerFile = 100)
+    assert(CorpusSource.writeBatched(df, s"$dir/out", "id",
+      recordsPerFile = 100, rows = 1000) == 1000)
     val files = new java.io.File(s"$dir/out").listFiles()
       .filter(_.getName.endsWith(".parquet"))
     assert(files.length >= 10, s"got ${files.length} files")
