@@ -127,9 +127,6 @@ object Bench {
     }
   }
 
-  private def minOf(trials: Int)(f: => Double): Double =
-    (1 to trials).map(_ => f).min
-
   /** Render the ONE stdout metric line, sized for the driver's
     * 2000-char tail window (line + sbt "[info] " prefix + epilogue must
     * fit, so the budget is ~1900). Query keys drop their "q_" prefix;

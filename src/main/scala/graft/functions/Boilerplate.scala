@@ -402,8 +402,6 @@ object Boilerplate {
     blocks.zip(fin).collect { case (b, "good") => b.text }
   }
 
-  val extractGoodUdf = udf((html: String) => extractLocal(html))
-
   /** Per-document multi-chunk form (content conversion may emit several
     * HTML chunks per record — DocPipeline.convertChunks).
     */

@@ -168,14 +168,6 @@ object Mimes {
   def normalizeContent(bytes: Array[Byte]): String =
     normalizeContent(bytes, null)
 
-  val sniffUdf            = org.apache.spark.sql.functions.udf(sniff _)
-  val simplifyUdf         = org.apache.spark.sql.functions.udf(simplify _)
-  val normalizeContentUdf =
-    org.apache.spark.sql.functions.udf((b: Array[Byte]) => normalizeContent(b))
-  val normalizeContentCtUdf =
-    org.apache.spark.sql.functions.udf(
-      (b: Array[Byte], ct: String) => normalizeContent(b, ct))
-
   /** Column form — pure `functions._` chain, stays in codegen. */
   def normalizeCol(mime: Column): Column = {
     val stripped = regexp_replace(

@@ -345,5 +345,4 @@ object TextAnalysis {
   }
 
   val simhashUdf        = udf(simhash64 _)
-  val minShingleHashUdf = udf((t: String) => minShingleHash(t))
 }

@@ -118,10 +118,10 @@ object ClusterIndex {
               pattern: String): DataFrame = {
     val pruned = pruneClusters(parse(clusterIdx), pattern)
     val lines = pruned.join(cdxFiles, "file_name")
-      .select(explode(split(rtrim(
+      .select(explode(split(regexp_replace(
         decode(graft.sources.WarcGzip.gzipMemberAtUdf(
           col("bytes"), col("offset"), col("length")), "UTF-8"),
-        "\n"), "\n")).as("line"))
+        "\n+\\z", ""), "\n")).as("line"))
     lines.select(
         split(col("line"), "\t").getItem(0).as("surt_path"),
         split(col("line"), "\t").getItem(1)

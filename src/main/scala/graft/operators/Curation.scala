@@ -535,10 +535,12 @@ object Curation {
     * internal (keys near u→1 collapse to ±0 under display rounding —
     * emitting them invites sign-of-zero drift); the ranking uses the
     * raw double, which both engines derive from the same exact
-    * integers, with the id as tie-break. The rank is a global window
-    * over rows — at corpus scale swap in the per-partition top-k +
-    * merge decomposition (samplePerGroup's discipline); the semantics
-    * here are the contract.
+    * integers, with the id as tie-break.
+    *
+    * Edge keys: the winners attach back by `keyCol` equality, so a row
+    * whose key is null is never kept (not even when k exceeds the row
+    * count), and a winning key keeps every row that has it — with
+    * repeated keys the kept count can exceed k.
     *
     * Output: df + kept.
     */

@@ -83,106 +83,41 @@ object Frontier {
     }
   }
 
-  /** Exact per-host rank with NO per-host task, all codegen: global
-    * range sort on (host, priority...) gives each row a contiguous
-    * global ord (the ordByPartitionOffsets idiom — a mega-host
-    * SPREADS across range partitions since boundaries fall inside the
-    * host, the opposite of a host-partitioned window); then
-    * wave = ord − min(ord per host) + 1. The per-host minimum is a
-    * partial-aggregated groupBy (map-side combine ⇒ skew-free) and the
-    * join back is AQE territory: broadcast when the host table is small,
-    * skew-split sort-merge when it is not — either way no single task
-    * ever owns a whole mega-host. An earlier mapPartitions
-    * streaming-counter variant computed the same thing but paid ~45%
-    * wall (full-row object deser/ser ×2, task GC ×2 at 8M URLs on this
-    * box) versus this plan's staying inside Tungsten end-to-end.
-    *
-    * Ties in `priorityCols` order get arbitrary-but-deterministic waves
-    * (same caveat as row_number over a non-total order).
+  /** Exact per-host rank with no per-host task: a global range sort on
+    * (host, priority...) gives each row a contiguous ord
+    * (UrlDedup.ordByPartitionOffsets, which spreads a mega-host across
+    * range partitions), and wave = ord − min(ord per host) + 1. The
+    * per-host minimum is map-side combined, and AQE picks the join back:
+    * broadcast when the host table is small, skew-split sort-merge when
+    * it is not. Wave is LongType: this path exists for mega-hosts, where
+    * an Int would wrap past 2^31 candidates. Ties in `priorityCols` get
+    * arbitrary-but-deterministic waves.
     */
   private[graft] def politenessRankUnbounded(
       candidates: DataFrame,
       hostCol: String,
       priorityCols: Seq[Column]): (DataFrame, Seq[DataFrame]) = {
-    val mask = lit((1L << 33) - 1)
-    // Pin the sort INPUT first: a range sort runs its boundary-sampling
-    // pass over its child before the shuffle, and here the child is the
-    // whole parse→anti-join→winner chain — unpinned, that chain executes
-    // TWICE (sampling + sort), which measured ~+30% per batch at 8
-    // cores. The legacy window paid no sampling (hash exchange); this
-    // pin buys the same single-execution property back for one
-    // pass through the block manager.
+    // the range sort samples its child before it shuffles it; pinned, the
+    // candidates' chain runs once for both (unpinned: ~+30% per batch at
+    // 8 cores), and is free once the eager sorted pin holds the rows
     val pre = Pin(candidates)
-    val sorted = Pin(pre
-      .orderBy((col(hostCol).asc +: priorityCols): _*)
-      .withColumn("__mid", monotonically_increasing_id()))
-    // ONE auxiliary scan of the sorted pin feeds both partition offsets
-    // and per-host minimum: group to (partition, host) — host-scale, with
-    // map-side combine — then derive each from that small frame
-    val aux = Pin(sorted
-      .groupBy(shiftright(col("__mid"), 33).as("__pid"), col(hostCol))
-      .agg(count(lit(1)).as("__cnt"), min(col("__mid")).as("__minmid")),
-      eager = false)
-    val offsets = aux
-      .groupBy(col("__pid")).agg(sum(col("__cnt")).as("__cnt"))
-      .withColumn("__offset",
-        coalesce(
-          sum(col("__cnt")).over(
-            org.apache.spark.sql.expressions.Window.orderBy(asc("__pid"))
-              .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)),
-          lit(0L)))
-      .select(col("__pid"), col("__offset"))
-    // per-host global first ord; tiny per-host groups (<= one row per
-    // partition the host touches), so the agg cannot skew
-    val firsts = aux
-      .join(broadcast(offsets), Seq("__pid"))
-      .withColumn("__mord", col("__offset") + col("__minmid").bitwiseAND(mask))
-      .groupBy(col(hostCol)).agg(min(col("__mord")).as("__h0"))
-    val ranked = sorted
-      .withColumn("__pid", shiftright(col("__mid"), 33))
-      .join(broadcast(offsets), Seq("__pid"))
-      // host-keyed join: AQE picks broadcast when the host table is
-      // small, skew-split sort-merge when it is not — no single task
-      // ever owns a whole mega-host
-      .join(firsts, Seq(hostCol))
-      // wave stays LongType here: this path exists precisely for
-      // mega-hosts, where an Int cast would wrap past 2^31 candidates
-      // (and the quota filter would then keep negative waves). The
-      // window path's wave is IntegerType but is quota-bounded by
-      // construction, so the narrower type is safe there.
-      .withColumn("wave",
-        col("__offset") + col("__mid").bitwiseAND(mask)
-          - col("__h0") + 1L)
-      .drop("__pid", "__mid", "__offset", "__h0")
-    (ranked, Seq(pre, sorted, aux))
+    val ord = UrlDedup.ordByPartitionOffsets(pre,
+      col(hostCol).asc +: priorityCols, "__ord")
+    Pin.release(pre)
+    val firsts = ord.groupBy(col(hostCol)).agg(min(col("__ord")).as("__h0"))
+    val ranked = ord.join(firsts, Seq(hostCol))
+      .withColumn("wave", col("__ord") - col("__h0") + 1L)
+      .drop("__ord", "__h0")
+    (ranked, Seq(ord))
   }
 
   /** Exact per-host politeness rank for the frontier's own priority
-    * order (file_ord, line_ord) — ONE hash shuffle, no range sort, no
-    * checkpoint. The decomposition: line_ord is unique within a file,
-    * so
-    *
-    *   wave = Σ_{f' < file_ord} count(host, f')            (cum table)
-    *        + row_number within (host, file_ord) by line_ord
-    *
-    * Skew: the window task group is (host, file_ord) — bounded by a
-    * host's lines in ONE index shard, which the FORMAT caps (cdx/cluster
-    * shards are fixed-size, cc_corpus/index.py shard layout), not by how
-    * popular the host is: a mega-host spreads across shards. The cum
-    * table is one narrow row per distinct (host, file) — ≤ input rows,
-    * ~40 bytes each, map-side combined — and its per-host running sum
-    * windows over ≤ files-per-dump rows. The final join's big side needs
-    * NO re-exchange: the window already hash-partitioned it on exactly
-    * the join keys (host, file) and sorted by a (host, file) prefix, so
-    * only the narrow cum side shuffles.
-    *
-    * Versus politenessRankUnbounded this eliminates, per batch: the
-    * range-sort boundary-sampling pass, the full-width sorted pin
-    * (write + 2 reads through the block manager), and
-    * the aux/firsts join chain — the wave column is a deterministic
-    * function of the data (no monotonically_increasing_id), so repeated
-    * consumers recompute consistently without pinning. Output wave is
-    * LongType (mega-host ranks can exceed Int).
+    * order (file_ord, line_ord): one hash shuffle, no range sort, no
+    * pin. Since line_ord is unique within a file, the rank decomposes
+    * per (host, index file) — UrlDedup.ordByGroupCounts restarted per
+    * host — so the window task unit is a host's lines in one index
+    * shard, capped by the format, not by the host's size. Output wave is
+    * LongType, 1-based.
     *
     * Requires: lineCol unique within (hostCol, fileCol) — true for
     * index lines by construction. For arbitrary priority columns use
@@ -191,25 +126,11 @@ object Frontier {
   def politenessRankByFile(candidates: DataFrame,
                            hostCol: String,
                            fileCol: String = "file_ord",
-                           lineCol: String = "line_ord"): DataFrame = {
-    val wGrp = Window.partitionBy(col(hostCol), col(fileCol))
-      .orderBy(asc(lineCol))
-    val cum = candidates
-      .groupBy(col(hostCol), col(fileCol))
-      .agg(count(lit(1)).as("__c"))
-      .withColumn("__cum",
-        coalesce(
-          sum(col("__c")).over(
-            Window.partitionBy(col(hostCol)).orderBy(asc(fileCol))
-              .rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-      .select(col(hostCol), col(fileCol), col("__cum"))
-    candidates
-      .withColumn("__rn", row_number().over(wGrp))
-      .join(cum, Seq(hostCol, fileCol))
-      .withColumn("wave", col("__cum") + col("__rn"))
-      .drop("__rn", "__cum")
-  }
+                           lineCol: String = "line_ord"): DataFrame =
+    UrlDedup.ordByGroupCounts(candidates, groupCol = fileCol,
+        innerSort = Seq(asc(lineCol)), ordCol = "wave",
+        within = Seq(hostCol))
+      .withColumn("wave", col("wave") + 1L)
 
   /** Politeness schedule: earliest-fetch epoch second per candidate —
     * wave w of a host fetches no earlier than t0 + (w-1) * its

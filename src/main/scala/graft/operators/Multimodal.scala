@@ -4,7 +4,6 @@ import graft.Pin
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal column plumbing: media payloads ride as opaque `binary`
   * columns with typed metadata next to the interleaved span table
@@ -14,15 +13,6 @@ import org.apache.spark.sql.types._
   * same signature (no codec library in the JDK).
   */
 object Multimodal {
-
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_ref", StringType, nullable = false),
-    StructField("mime", StringType),
-    StructField("bytes", BinaryType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("duration_ms", LongType)
-  ))
 
   /** REAL image decode via javax.imageio: returns (width, height,
     * 16-bin luminance histogram), or None when the payload is not a
@@ -278,9 +268,6 @@ object Multimodal {
           .cast(org.apache.spark.sql.types.LongType).as("dist"))
       .filter(col("dist") <= maxDist)
   }
-
-  val resizeImageUdf = udf((b: Array[Byte], maxDim: Int) =>
-    resizeImage(b, maxDim))
 
   /** Real image feature extraction: (decoded_w, decoded_h, 16-bin
     * luminance histogram) per row for decodable payloads; undecodable

@@ -92,33 +92,11 @@ object UrlDedup {
                    spark: SparkSession): DataFrame =
     entries.join(seenUrls.select("url"), Seq("url"), "left_anti")
 
-  /** O3 crawl order with NO range sort and NO checkpoint — the r6
-    * production path. The global rank by (warc, offset, url, file_ord,
-    * line_ord) decomposes per WARC file, because warc is the leading
-    * sort key:
-    *
-    *   ord = Σ_{w' < warc} count(w')                (cum table)
-    *       + row_number within warc by (offset, url, file_ord, line_ord)
-    *       - 1
-    *
-    * This replaces the range exchange (plus its boundary-sampling pass
-    * over the child) with one hash exchange, and — since every column
-    * is a deterministic function of the data, no
-    * monotonically_increasing_id — the full-width pin of the sorted
-    * frame (ordByPartitionOffsets) disappears entirely:
-    * repeated consumers recompute identical rows.
-    *
-    * Skew: the window task unit is ONE warc's records — bounded by WARC
-    * file size (~1 GB / ~10^5 records, a format constant), never by
-    * host or URL skew. The cum table is one narrow row per warc
-    * (~10^5/dump at CC scale); its running sum is a single-partition
-    * window over that tiny frame — the same shape as the partition-
-    * offsets idiom below. The join back needs no exchange on the big
-    * side (the rank window already hash-partitioned it by warc).
-    *
-    * Identical tie semantics to the range-sort form: exact duplicate
-    * rows receive distinct-but-arbitrary adjacent ords; the (ord, row)
-    * multiset is deterministic.
+  /** O3 crawl order with no range sort and no pin: warc is the leading
+    * sort key of (warc, offset, url, file_ord, line_ord), so the global
+    * rank decomposes per WARC file (ordByGroupCounts). Exact duplicate
+    * rows get distinct adjacent ords in an arbitrary order, as under a
+    * range sort; the (ord, row) multiset is deterministic.
     */
   def crawlOrderByWarc(kept: DataFrame,
                        countFrom: Option[DataFrame] = None): DataFrame =
@@ -126,11 +104,27 @@ object UrlDedup {
       Seq(asc("offset"), asc("url"), asc("file_ord"), asc("line_ord")),
       "ord", countFrom)
 
-  /** The group-count global-rank idiom behind crawlOrderByWarc,
-    * parameterized: groups ordered by `groupCol` asc, rows within a
-    * group by `innerSort`; contiguous 0-based `ordCol`. Use when group
-    * cardinality is large (the per-group window is the parallel unit)
-    * and per-group size is bounded by construction.
+  /** Global rank by group counts: groups ordered by `groupCol` asc, rows
+    * within a group by `innerSort`; contiguous 0-based `ordCol`.
+    *
+    *   ord = Σ_{g' < g} count(g')           (cum table)
+    *       + row_number within g by innerSort − 1
+    *
+    * `within` restarts the running sum, and so the ord, per distinct
+    * value of those columns (politenessRankByFile ranks per host this
+    * way, with index files as the groups).
+    *
+    * Skew: the window task unit is one (within, group), so use it where
+    * the format caps group size — one WARC file (~10^5 records), a
+    * host's lines in one fixed-size index shard — never host or URL
+    * popularity; a mega-host spreads across shards. The cum table is one
+    * narrow, map-side-combined row per group, and its running sum
+    * windows over that small frame. The join back re-exchanges only the
+    * cum side: the rank window already hash-partitioned the big side on
+    * the join keys. Against ordByPartitionOffsets this saves the range
+    * sort's sampling pass and the full-width sorted pin; every column is
+    * a function of the data, so repeated consumers recompute the same
+    * ords without a pin.
     *
     * `countFrom`: an alternative frame to count groups over — pass a
     * pinned upstream frame with the same row multiset (e.g. the input
@@ -139,19 +133,21 @@ object UrlDedup {
     */
   def ordByGroupCounts(df: DataFrame, groupCol: String,
                        innerSort: Seq[Column], ordCol: String,
-                       countFrom: Option[DataFrame] = None): DataFrame = {
-    val wIn = Window.partitionBy(col(groupCol)).orderBy(innerSort: _*)
+                       countFrom: Option[DataFrame] = None,
+                       within: Seq[String] = Nil): DataFrame = {
+    val keys = within :+ groupCol
+    val wIn = Window.partitionBy(keys.map(col): _*).orderBy(innerSort: _*)
     val cum = countFrom.getOrElse(df)
-      .groupBy(col(groupCol)).agg(count(lit(1)).as("__c"))
+      .groupBy(keys.map(col): _*).agg(count(lit(1)).as("__c"))
       .withColumn("__goff",
         coalesce(
           sum(col("__c")).over(
-            Window.orderBy(asc(groupCol))
+            Window.partitionBy(within.map(col): _*).orderBy(asc(groupCol))
               .rowsBetween(Window.unboundedPreceding, -1)),
           lit(0L)))
-      .select(col(groupCol), col("__goff"))
+      .select((keys :+ "__goff").map(col): _*)
     df.withColumn("__grn", row_number().over(wIn))
-      .join(cum, Seq(groupCol))
+      .join(cum, keys)
       .withColumn(ordCol, col("__goff") + col("__grn") - 1L)
       .drop("__grn", "__goff")
   }
@@ -162,6 +158,13 @@ object UrlDedup {
     * (partition << 33 | row-in-partition); the per-partition row counts
     * are one row per partition, so each partition's global offset is a
     * running sum over that small frame, broadcast back.
+    *
+    * Skew: range boundaries fall inside a hot key, so its rows spread
+    * over several tasks; no task ever owns a whole mega-group (the
+    * opposite of a key-partitioned window). A mapPartitions streaming
+    * counter computing the same ords was measured ~45% slower at 8M URLs
+    * (full-row object deserialization, serialization and task GC, twice)
+    * than this plan, which stays inside Tungsten.
     *
     * The sorted frame is pinned: the offsets aggregate and the join back
     * must see the same partitioning and row order, and the chain above

@@ -892,8 +892,6 @@ object TextQueries {
                               ELSE 0 END) AS BIGINT) AS bucket
          FROM dots GROUP BY 1)"""
 
-  private val docIdNonNull = "doc_id IS NOT NULL"
-
   /** One unrolled k-means iteration: cents `$in(cid, idx, w)` →
     * `$out(cid, idx, w)`; assignment = rounded-argmin, mean rounded 6dp,
     * empty clusters carry the previous centroid.

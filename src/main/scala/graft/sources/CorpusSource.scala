@@ -119,8 +119,6 @@ object CorpusSource {
     sb.toString
   }
 
-  val formatSemiXmlUdf = udf(formatSemiXmlDoc _)
-
   val jsonlSchema: StructType = StructType(Seq(
     StructField("id", StringType, nullable = false),
     StructField("meta", MapType(StringType, StringType)),

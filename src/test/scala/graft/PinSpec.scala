@@ -6,7 +6,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import graft.fixtures.CrawlFixtures
-import graft.operators.{FrontierJob, HostRank, LshDedup, Spectral}
+import graft.operators.{Frontier, FrontierJob, HostRank, LshDedup, Spectral}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.logging.log4j.LogManager
@@ -132,6 +132,22 @@ class PinSpec extends AnyFunSuite with Eventually {
     eventually(patience) {
       val leaked = live -- before
       assert(leaked.isEmpty, s"pins left by the failed batch: $leaked")
+    }
+  }
+
+  test("releasing politenessRankEx's pins after an unbounded call frees them all") {
+    val cand = (0 until 2000).map { i =>
+      val h = if (i % 2 == 0) "mega.example.com" else s"h${i % 37}.example.com"
+      (h, s"u$i", i.toLong)
+    }.toDF("host_key", "url", "pri").repartition(8)
+    val before = live
+    val (ranked, pins) = Frontier.politenessRankEx(cand, "host_key",
+      Seq(col("pri").asc), quota = Int.MaxValue)
+    assert(ranked.count() == 2000)
+    Pin.release(pins: _*)
+    eventually(patience) {
+      val leaked = live -- before
+      assert(leaked.isEmpty, s"pins left by the unbounded rank: $leaked")
     }
   }
 

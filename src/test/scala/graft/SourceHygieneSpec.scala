@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * places (Sessions.local, Bench.session, Main.clusterSession); it pins
   * and frees intermediates only through graft.Pin; it names SQL functions
   * only in functions.Registry and turns expressions into Columns only in
-  * the ExpressionBridge; and every source is text.
+  * the ExpressionBridge; Frontier computes global ranks only through
+  * UrlDedup; and every source is text.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -78,6 +79,17 @@ class SourceHygieneSpec extends AnyFunSuite {
       finally walk.close()
     val hits = files.filter(f => Files.readAllBytes(f).contains(0: Byte))
     assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("Frontier ranks only through UrlDedup's ordinals") {
+    // the running-sum window and the partition-offset mask of the two
+    // global-rank idioms (ordByGroupCounts, ordByPartitionOffsets)
+    val hits = lines(root.resolve("graft/operators")).filter { case (f, _, l) =>
+      f.getFileName.toString == "Frontier.scala" &&
+        (l.contains("unboundedPreceding, -1") || l.contains("1L << 33"))
+    }
+    assert(hits.isEmpty,
+      hits.map { case (f, n, l) => s"$f:$n: ${l.trim}" }.mkString("\n"))
   }
 
   test("src/main frees pins only through Pin") {

@@ -8,6 +8,21 @@ class ClusterIndexSpec extends AnyFunSuite {
 
   private def spark = TestSpark.spark
 
+  test("acquire's trailing-newline strip equals the two-argument rtrim") {
+    val s = spark
+    import s.implicits._
+    // \z, not $: Java's $ also matches before a final line terminator,
+    // so "\n+$" would also strip the \n before "\r\n" in the last input
+    val in = Seq[String](null, "", "\n", "a", "a\n\n", "a\nb\n", "a\n\r\n")
+      .toDF("c")
+    val got = in.select(col("c"), regexp_replace(col("c"), "\n+\\z", "").as("re"),
+        rtrim(col("c"), "\n").as("rt"))
+      .as[(String, String, String)].collect()
+    got.foreach { case (c, re, rt) => assert(re == rt, s"on ${String.valueOf(c)}") }
+    assert(got.map(_._2).toSeq ==
+      Seq(null, "", "", "a", "a", "a\nb", "a\n\r"))
+  }
+
   test("buildIndex round-trips through parse/prune/ranged-decode") {
     val s = spark
     import s.implicits._

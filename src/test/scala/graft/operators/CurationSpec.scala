@@ -416,6 +416,28 @@ class CurationSpec extends AnyFunSuite {
     assert(heavy > 60, s"expected heavy rows to dominate, got $heavy/80")
   }
 
+  test("sampleWeighted: a null key is never kept, a duplicated winning " +
+      "key keeps every row that has it") {
+    val s = spark
+    import s.implicits._
+    def kept(rows: Seq[(String, Double, Int)], k: Int): Seq[Int] = {
+      val out = Curation.sampleWeighted(rows.toDF("key", "w", "row"),
+          "key", "w", k)
+        .select("row", "kept").as[(Int, Boolean)].collect()
+      assert(out.map(_._1).sorted.toSeq == rows.map(_._3).sorted,
+        "one output row per input row")
+      out.filter(_._2).map(_._1).sorted.toSeq
+    }
+    // k above the row count puts the null key among the winners, but
+    // it is still not kept
+    assert(kept(Seq((null, 1e12, 0), ("a", 1.0, 1), ("b", 1.0, 2)), 10) ==
+      Seq(1, 2))
+    // the heavy "d" row takes the only slot; its light twin, which
+    // ranks last on its own, is kept with it
+    assert(kept(Seq(("a", 1.0, 1), ("b", 1.0, 2), ("d", 1e12, 4),
+      ("d", 1e-6, 5)), 1) == Seq(4, 5))
+  }
+
   test("chunkWithStride: coverage, overlap, short tails, sub-window " +
       "docs") {
     val s = spark

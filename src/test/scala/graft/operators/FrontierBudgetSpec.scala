@@ -7,10 +7,10 @@ import graft.fixtures.CrawlFixtures
 import graft.operators.PlanBudget.{actions, exchanges, tally, windows}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Plan budget of the polite frontier path: the robots parser runs in
-  * one narrow pass, and one polite batch stays within its root actions
-  * and shuffle exchanges. A change that adds one fails here with the
-  * numbers.
+/** Plan budget of the frontier paths: the robots parser runs in one
+  * narrow pass, and one polite or fast-path batch stays within its root
+  * actions and shuffle exchanges. A change that adds one fails here with
+  * the numbers.
   */
 class FrontierBudgetSpec extends AnyFunSuite {
 
@@ -47,5 +47,19 @@ class FrontierBudgetSpec extends AnyFunSuite {
     val (nActions, nEx, numbers) = tally(actions(spark)(run(d2, "d2")))
     info(numbers)
     assert(nActions <= 5 && nEx <= 8, numbers)
+  }
+
+  test("a fast-path runBatch stays within 4 root actions and 8 exchanges") {
+    val p = CrawlFixtures.Params(nRecords = 2000, nUrls = 1000, nHosts = 25)
+    val (d1, d2) = CrawlFixtures.rawLines(p).partition(_.file_ord < 3)
+    val table = Files.createTempDirectory("frontier-budget-fast").toString
+    def run(lines: Seq[graft.model.RawIndexLine], id: String) =
+      FrontierJob.runBatch(spark, lines.toDF(), table, robots = None,
+        politenessQuota = Int.MaxValue, dumpId = id)
+    run(d1, "d1") // the second dump runs against committed seen state
+
+    val (nActions, nEx, numbers) = tally(actions(spark)(run(d2, "d2")))
+    info(numbers)
+    assert(nActions <= 4 && nEx <= 8, numbers)
   }
 }
