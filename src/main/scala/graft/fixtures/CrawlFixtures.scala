@@ -19,13 +19,8 @@ object CrawlFixtures {
 
   val Seed = 42L
 
-  /** splitmix64 — deterministic 64-bit mixer. */
-  def mix(x0: Long): Long = {
-    var x = x0 + 0x9e3779b97f4a7c15L
-    x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e9b5L
-    x = (x ^ (x >>> 27)) * 0x94d049bb133111ebL
-    x ^ (x >>> 31)
-  }
+  /** splitmix64 — deterministic 64-bit mixer (the state package's). */
+  def mix(x0: Long): Long = graft.state.CuckooFilter.mix(x0)
 
   /** k-th deterministic draw for record i, in [0, bound). */
   def draw(i: Long, k: Long, bound: Long): Long = {

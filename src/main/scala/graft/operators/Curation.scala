@@ -540,7 +540,8 @@ object Curation {
     * Edge keys: the winners attach back by `keyCol` equality, so a row
     * whose key is null is never kept (not even when k exceeds the row
     * count), and a winning key keeps every row that has it — with
-    * repeated keys the kept count can exceed k.
+    * repeated keys the kept count can exceed k. Every input row comes
+    * out exactly once, however many of its key's rows rank in the top k.
     *
     * Output: df + kept.
     */
@@ -557,7 +558,7 @@ object Curation {
     // sample unit (unique per the ES scheme), so the kept set equals
     // the old rank <= k set, attached back as a broadcast semi-join
     val top = scored.orderBy(col("__es").desc, col(keyCol)).limit(k)
-      .select(col(keyCol).as("__sw_key"))
+      .select(col(keyCol).as("__sw_key")).distinct()
     scored
       .join(broadcast(top), col(keyCol) === col("__sw_key"), "left")
       .withColumn("kept", col("__sw_key").isNotNull)

@@ -178,30 +178,15 @@ object FrontierJob {
       .parquet(batchesPath)
     val batches = spark.read.parquet(batchesPath)
 
-    // Seen delta: exactly one row per winner URL. When nothing below the
-    // winner window dropped rows, the just-written batches parquet holds
-    // exactly the winner set — the delta is a single-COLUMN re-read of it
-    // (parquet prunes to `url`), not another full-width pass over the
-    // crawl-order chain. Only the robots/quota path still pays a pass
-    // over `kept` (its pin).
-    val winnerSrc = if (keptIsOrdered) batches else kept
-    winnerSrc.select("url").write.mode("overwrite").parquet(dataDir.toString)
-    // downstream state updates read the narrow seen-delta parquet, never
-    // the full-width intermediates again
-    val deltaHashes = spark.read.parquet(dataDir.toString)
-      .select(xxhash64(col("url")).as("h"))
-
-    // cuckoo partitions: distributed update (shuffle by state partition,
-    // one task per blob, untouched blobs carried forward)
-    val prevStateDir = prev
-      .map(m => Paths.get(tableDir, m.statePath))
-      .filter(java.nio.file.Files.isDirectory(_))
     // State partition count is a property of the TABLE, not the session:
     // resume derives it from the existing blobs (routing must match the
     // layout they were written under); a fresh table sizes to the core
     // count so the per-blob update tasks don't cap parallelism at 16 on
     // wider machines (measured: the update phase was wall-flat 8→32
     // cores with 16 fixed blobs).
+    val prevStateDir = prev
+      .map(m => Paths.get(tableDir, m.statePath))
+      .filter(java.nio.file.Files.isDirectory(_))
     val stateParts = prevStateDir
       .map { d =>
         // close the listing stream (Snapshots.stage's Files.walk
@@ -216,19 +201,28 @@ object FrontierJob {
       }
       .getOrElse(math.min(256,
         math.max(16, spark.sparkContext.defaultParallelism)))
-    val perPartInserts = UrlSeenState.updateDistributed(
-      spark, deltaHashes,
-      prevStateDir, stateDir, partitions = stateParts,
-      capacityPerPartition = 1 << 16)
+
+    // Seen delta and cuckoo state in one job (updateDistributed): one row
+    // per winner URL, written partitioned and hash-sorted, each state
+    // chain sized by its keys. When nothing below the winner window
+    // dropped rows, the just-written batches parquet holds exactly the
+    // winner set and the pass reads only its `url` column, not another
+    // full-width pass over the crawl-order chain; only the robots/quota
+    // path reads `kept` (its pin).
+    val winnerSrc = if (keptIsOrdered) batches else kept
+    val perPartInserts = UrlSeenState.updateDistributed(spark, winnerSrc,
+      prevStateDir.map(_.toString), stateDir.toString, stateParts,
+      deltaDir = dataDir.toString)
     // FP-rate bound: a chain that has grown past 2 segments gets rebuilt
-    // into one right-sized filter from the authoritative seen set (old
-    // chain ∪ this batch's winners). Grow-cycles are logarithmic in total
-    // inserts, so this full pass amortizes to ~O(1) per batch.
+    // into one filter sized for twice its keys, from the authoritative
+    // seen set (old chain ∪ this batch's narrow seen-delta parquet).
+    // Grow-cycles are logarithmic in total inserts, so this full pass
+    // amortizes to ~O(1) per batch.
     if (perPartInserts.values.exists(_.segments > 2)) {
-      val allSeen = seenUrls.select(xxhash64(col("url")).as("h"))
-        .union(deltaHashes)
-      UrlSeenState.compactDistributed(spark, allSeen, stateDir,
-        partitions = stateParts, capacityPerPartition = 1 << 16)
+      val allSeen = seenUrls.select("url")
+        .union(spark.read.parquet(dataDir.toString).select("url"))
+      UrlSeenState.compactDistributed(spark, allSeen, stateDir.toString,
+        partitions = stateParts)
     }
 
     val nKept    = obsBatch.get("n_scheduled").asInstanceOf[Long]

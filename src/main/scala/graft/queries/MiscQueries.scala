@@ -204,9 +204,10 @@ object MiscQueries {
       val est = graft.operators.Sketches.kmvOverlap(sk, "event_type", K)
       val d = ev.distinct()
       val cnts = d.groupBy("event_type").agg(count(lit(1)).as("n"))
-      val x = d.select(col("event_type").as("g_a"), col("u"))
-      val y = d.select(col("event_type").as("g_b"), col("u"))
-      val inter = x.join(y, x("u") === y("u") && col("g_a") < col("g_b"))
+      val x = d.select(col("event_type").as("g_a"), col("u").as("u_a"))
+      val y = d.select(col("event_type").as("g_b"), col("u").as("u_b"))
+      val inter = x
+        .join(y, col("u_a") === col("u_b") && col("g_a") < col("g_b"))
         .groupBy("g_a", "g_b").agg(count(lit(1)).as("__i"))
       est
         .join(inter, Seq("g_a", "g_b"), "left")

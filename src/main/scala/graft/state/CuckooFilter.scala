@@ -222,7 +222,13 @@ object CuckooFilter {
   private[state] val LegacyMagic = Magic
   private val MaxKicks = 500
 
-  def mix(x0: Long): Long = graft.fixtures.CrawlFixtures.mix(x0)
+  /** splitmix64 finalizer: the bucket, kick and partition mixer. */
+  def mix(x0: Long): Long = {
+    var x = x0 + 0x9e3779b97f4a7c15L
+    x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e9b5L
+    x = (x ^ (x >>> 27)) * 0x94d049bb133111ebL
+    x ^ (x >>> 31)
+  }
 
   def nextPow2(n: Int): Int = {
     var p = 1

@@ -2,16 +2,29 @@ package graft.state
 
 import java.nio.file.Path
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.ExpressionBridge.{column, expression}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.functions.{col, xxhash64}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
 
 /** Partitioned cuckoo-filter state for the live frontier (scheduled /
   * in-flight URL hashes): exact-ish membership with delete support so a
   * URL can be retired and become eligible for recrawl — the operation a
-  * bloom filter cannot do. Partitions are growable chains (CuckooChain):
-  * capacityPerPartition sizes the first segment only, overflow appends
-  * doubled segments — no silent insert failures at any scale. Partition = bits of the url hash, pinned in
-  * the serialized form (SURVEY.md §7.4 risk 5: P is part of the state).
+  * bloom filter cannot do. Partitions are growable chains (CuckooChain)
+  * sized by what they hold: a partition's first segment is sized for
+  * twice its first batch's inserts, overflow appends doubled segments
+  * (no silent insert failures at any scale), and compaction rebuilds a
+  * long chain to twice its keys — so state bytes track the seen URLs, a
+  * few bytes each, not a fixed capacity per partition. Partition = bits
+  * of the url hash (`partitionOf`), pinned in the serialized form
+  * (SURVEY.md §7.4 risk 5: P is part of the state).
   *
   * Role split in the frontier (north rule "bloom/cuckoo URL-seen"):
   * the *url_seen table*'s distributed anti-join is the cross-batch
@@ -74,6 +87,35 @@ object UrlSeenState {
   def partitionOf(h: Long, numParts: Int): Int =
     (CuckooFilter.mix(h) & (numParts - 1)).toInt
 
+  /** `partitionOf` as a native column over a long hash column, the one
+    * routing of rows to state partitions (update and compaction).
+    */
+  def partitionCol(h: Column, numParts: Int): Column = {
+    require((numParts & (numParts - 1)) == 0 && numParts > 0,
+            "partition count must be a power of two")
+    column(StatePartition(expression(h), numParts))
+  }
+
+  private case class StatePartition(child: Expression, numParts: Int)
+      extends UnaryExpression {
+    override def checkInputDataTypes(): TypeCheckResult =
+      if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
+      else TypeCheckResult.TypeCheckFailure(
+        s"graft_state_partition needs a long input, got ${child.dataType}")
+    override def dataType: DataType = IntegerType
+    override def prettyName: String = "graft_state_partition"
+
+    override def nullSafeEval(h: Any): Any =
+      partitionOf(h.asInstanceOf[Long], numParts)
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      defineCodeGen(ctx, ev, h =>
+        s"graft.state.UrlSeenState.partitionOf($h, $numParts)")
+
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+  }
+
   private def blobName(i: Int) = f"cuckoo-$i%05d.bin"
 
   private def readBlob(fs: FileSystem, p: HPath): Array[Byte] = {
@@ -110,104 +152,116 @@ object UrlSeenState {
   /** Per-partition lineage stats from a distributed state update. */
   case class PartStats(inserted: Long, segments: Int)
 
-  /** Distributed state update: shuffle the new hashes to their state
-    * partition, each group loads its previous blob, inserts, writes the
-    * next blob — no driver-side collect, one task per partition. Blobs
-    * untouched by this batch are carried forward. Returns per-partition
-    * inserted counts + segment-chain lengths (lineage metrics; a caller
-    * seeing segments > 2 should schedule `compactDistributed`).
+  /** The seen-delta pass: writes the batch's seen urls to `deltaDir` and
+    * the next cuckoo state to `outDir` in one job. Each url's state key
+    * is its xxhash64; rows are routed to their state partition
+    * (`partitionCol`) and sorted by (partition, key); for each partition
+    * id, the task holding it loads the previous chain from `prevDir`,
+    * inserts the keys in key order and writes the next blob while the
+    * rows stream on to the parquet write. The delta therefore lands partitioned and
+    * key-sorted, and a blob is a pure function of its previous blob and
+    * the batch (a retried task rewrites identical bytes). No driver-side
+    * collect; blobs untouched by this batch are carried forward.
+    *
+    * Sizing follows the data: a partition with no previous keys starts
+    * at twice its inserts; a full chain appends a doubled segment. The
+    * result holds per-partition inserted counts and segment-chain
+    * lengths, from a result-stage accumulator (each task's update counts
+    * once); a caller seeing segments > 2 should schedule
+    * `compactDistributed`.
     *
     * Dirs are Hadoop-FS URIs (plain paths resolve as `file:`); executors
     * and driver must see the same filesystem (`hdfs:`/`s3a:` on a
     * cluster, any path on a single box).
     */
-  def updateDistributed(spark: org.apache.spark.sql.SparkSession,
-                        hashes: org.apache.spark.sql.DataFrame,
+  def updateDistributed(spark: SparkSession, urls: DataFrame,
                         prevDir: Option[String], outDir: String,
-                        partitions: Int, capacityPerPartition: Long)
+                        partitions: Int, deltaDir: String)
       : Map[Int, PartStats] = {
-    import spark.implicits._
     val p = CuckooFilter.nextPow2(partitions)
     val conf = spark.sessionState.newHadoopConf()
     val outPath = new HPath(outDir)
-    outPath.getFileSystem(conf).mkdirs(outPath)
-    val bConf   = spark.sparkContext.broadcast(new SerConf(conf))
-    val prevStr = prevDir
-    val outStr  = outDir
-    val cap     = capacityPerPartition
-    val partUdf = org.apache.spark.sql.functions.udf(
-      (h: Long) => partitionOf(h, p))
-    val touched = hashes
-      .select(partUdf(hashes.col(hashes.columns.head)).as("pid"),
-              hashes.col(hashes.columns.head).as("h"))
-      .as[(Int, Long)]
-      .groupByKey(_._1)
-      .mapGroups { (pid, it) =>
-        val c = bConf.value.value
-        val filter = prevStr.map(d => new HPath(d, blobName(pid)))
-          .filter(b => b.getFileSystem(c).exists(b))
-          .map(b => CuckooChain.fromBytes(readBlob(b.getFileSystem(c), b)))
-          .getOrElse(CuckooChain.forCapacity(cap))
-        var n = 0L
-        it.foreach { case (_, h) => if (filter.insert(h)) n += 1 }
-        val out = new HPath(outStr, blobName(pid))
-        writeBlob(out.getFileSystem(c), out, filter.toBytes)
-        (pid, n, filter.numSegments)
-      }
-      .collect().map { case (pid, n, segs) => pid -> PartStats(n, segs) }
-      .toMap
-    // carry forward untouched partitions (driver-side, same FS API)
     val fs = outPath.getFileSystem(conf)
-    (0 until p).foreach { pid =>
-      val out = new HPath(outPath, blobName(pid))
-      if (!fs.exists(out)) {
-        prevDir.map(d => new HPath(d, blobName(pid)))
-          .filter(prev => prev.getFileSystem(conf).exists(prev)) match {
-          case Some(prev) =>
-            writeBlob(fs, out, readBlob(prev.getFileSystem(conf), prev))
-          case None =>
-            writeBlob(fs, out, CuckooChain.forCapacity(cap).toBytes)
+    fs.mkdirs(outPath)
+    val bConf = spark.sparkContext.broadcast(new SerConf(conf))
+    val stats = spark.sparkContext.collectionAccumulator[(Int, PartStats)]
+    // one task per core at most: each blob costs a fixed file-IO overhead,
+    // which one size-coalesced task would pay serially for every partition
+    val tasks = math.min(p, spark.sparkContext.defaultParallelism)
+    urls
+      .select(col("url"), xxhash64(col("url")).as("h"))
+      .withColumn("pid", partitionCol(col("h"), p))
+      .repartition(tasks, col("pid"))
+      .sortWithinPartitions("pid", "h")
+      .mapPartitions { it =>
+        val c = bConf.value.value
+        val keys = new scala.collection.mutable.ArrayBuilder.ofLong
+        var pid = -1
+        // one pid group done: previous chain (or a fresh one at twice the
+        // group's inserts) + the group's keys, in key order
+        def finish(): Unit = if (pid >= 0) {
+          val hs = keys.result()
+          val chain = prevDir.map(d => new HPath(d, blobName(pid)))
+            .filter(b => b.getFileSystem(c).exists(b))
+            .map(b => CuckooChain.fromBytes(readBlob(b.getFileSystem(c), b)))
+            .filter(_.size > 0)
+            .getOrElse(CuckooChain.forCapacity(2L * hs.length))
+          var n = 0L
+          hs.foreach(x => if (chain.insert(x)) n += 1)
+          val out = new HPath(outDir, blobName(pid))
+          writeBlob(out.getFileSystem(c), out, chain.toBytes)
+          stats.add(pid -> PartStats(n, chain.numSegments))
+          keys.clear()
+          pid = -1
         }
+        new Iterator[String] {
+          def hasNext: Boolean = it.hasNext || { finish(); false }
+          def next(): String = {
+            val r = it.next()
+            if (r.getInt(2) != pid) { finish(); pid = r.getInt(2) }
+            keys += r.getLong(1)
+            r.getString(0)
+          }
+        }
+      }(Encoders.STRING)
+      .toDF("url")
+      .write.mode("overwrite").parquet(deltaDir)
+    val touched = stats.value.asScala.toMap
+    // carry forward untouched partitions (driver-side, same FS API)
+    (0 until p).filterNot(touched.contains).foreach { pid =>
+      val out = new HPath(outPath, blobName(pid))
+      prevDir.map(d => new HPath(d, blobName(pid)))
+        .filter(prev => prev.getFileSystem(conf).exists(prev)) match {
+        case Some(prev) =>
+          writeBlob(fs, out, readBlob(prev.getFileSystem(conf), prev))
+        case None =>
+          writeBlob(fs, out, CuckooChain.forCapacity(0).toBytes)
       }
     }
     touched
   }
 
-  def updateDistributed(spark: org.apache.spark.sql.SparkSession,
-                        hashes: org.apache.spark.sql.DataFrame,
-                        prevDir: Option[Path], outDir: Path,
-                        partitions: Int, capacityPerPartition: Long)
-      (implicit d: DummyImplicit): Map[Int, PartStats] =
-    updateDistributed(spark, hashes, prevDir.map(_.toString), outDir.toString,
-                      partitions, capacityPerPartition)
-
   /** Segment-chain compaction at snapshot commit: rebuild each partition's
-    * chain as ONE right-sized filter from the authoritative seen-hash set
-    * (the url_seen table — the cuckoo state is a derived accelerator, so
-    * the table is the source of truth to rebuild from). Bounds the
-    * false-positive rate, which otherwise grows linearly with segment
-    * count. One task per partition, blob overwritten in place in the
+    * chain as ONE filter sized for twice its keys, from the authoritative
+    * seen set `urls` (the url_seen table — the cuckoo state is a derived
+    * accelerator, so the table is the source of truth to rebuild from).
+    * Bounds the false-positive rate, which otherwise grows linearly with
+    * segment count, and leaves the next batches room to insert into one
+    * segment. One task per partition, blob overwritten in place in the
     * still-uncommitted snapshot state dir. Keys are sorted before insert
     * so the rebuilt blob is byte-deterministic for a given seen set.
     * Returns per-partition rebuilt segment counts (1 except at
     * pathological load).
     */
-  def compactDistributed(spark: org.apache.spark.sql.SparkSession,
-                         allHashes: org.apache.spark.sql.DataFrame,
-                         outDir: String,
-                         partitions: Int, capacityPerPartition: Long)
-      : Map[Int, Int] = {
+  def compactDistributed(spark: SparkSession, urls: DataFrame,
+                         outDir: String, partitions: Int): Map[Int, Int] = {
     import spark.implicits._
     val p = CuckooFilter.nextPow2(partitions)
-    val bConf  = spark.sparkContext.broadcast(
+    val bConf = spark.sparkContext.broadcast(
       new SerConf(spark.sessionState.newHadoopConf()))
-    val outStr = outDir
-    val cap    = capacityPerPartition
-    val partUdf = org.apache.spark.sql.functions.udf(
-      (h: Long) => partitionOf(h, p))
-    allHashes
-      .select(partUdf(allHashes.col(allHashes.columns.head)).as("pid"),
-              allHashes.col(allHashes.columns.head).as("h"))
+    urls
+      .select(xxhash64(col("url")).as("h"))
+      .select(partitionCol(col("h"), p).as("pid"), col("h"))
       // Dedup before rebuild: a caller unioning overlapping snapshot sets
       // would otherwise insert duplicate fingerprints — count drift plus
       // phantom membership after one delete. Cheap relative to the rebuild
@@ -220,20 +274,12 @@ object UrlSeenState {
         it.foreach(kv => b += kv._2)
         val keys = b.result()
         java.util.Arrays.sort(keys)
-        val chain = CuckooChain.forCapacity(math.max(cap, keys.length))
+        val chain = CuckooChain.forCapacity(2L * keys.length)
         keys.foreach(chain.insert)
-        val out = new HPath(outStr, blobName(pid))
+        val out = new HPath(outDir, blobName(pid))
         writeBlob(out.getFileSystem(bConf.value.value), out, chain.toBytes)
         (pid, chain.numSegments)
       }
       .collect().toMap
   }
-
-  def compactDistributed(spark: org.apache.spark.sql.SparkSession,
-                         allHashes: org.apache.spark.sql.DataFrame,
-                         outDir: Path,
-                         partitions: Int, capacityPerPartition: Long)
-      (implicit d: DummyImplicit): Map[Int, Int] =
-    compactDistributed(spark, allHashes, outDir.toString,
-                       partitions, capacityPerPartition)
 }

@@ -436,6 +436,9 @@ class CurationSpec extends AnyFunSuite {
     // ranks last on its own, is kept with it
     assert(kept(Seq(("a", 1.0, 1), ("b", 1.0, 2), ("d", 1e12, 4),
       ("d", 1e-6, 5)), 1) == Seq(4, 5))
+    // both "d" rows rank in the top k: each still comes out once
+    assert(kept(Seq(("a", 1.0, 1), ("d", 1.0, 4), ("d", 1.0, 5)), 3) ==
+      Seq(1, 4, 5))
   }
 
   test("chunkWithStride: coverage, overlap, short tails, sub-window " +

@@ -33,7 +33,7 @@ class FrontierBudgetSpec extends AnyFunSuite {
       s"robotsRules: $nEx exchanges, $nWin windows in\n$plan")
   }
 
-  test("a polite runBatch stays within 5 root actions and 8 exchanges") {
+  test("a polite runBatch stays within 4 root actions and 8 exchanges") {
     val p = CrawlFixtures.Params(nRecords = 2000, nUrls = 1000, nHosts = 25)
     val (d1, d2) = CrawlFixtures.rawLines(p).partition(_.file_ord < 3)
     val rules = (0L until p.nHosts).map(h =>
@@ -46,10 +46,10 @@ class FrontierBudgetSpec extends AnyFunSuite {
 
     val (nActions, nEx, numbers) = tally(actions(spark)(run(d2, "d2")))
     info(numbers)
-    assert(nActions <= 5 && nEx <= 8, numbers)
+    assert(nActions <= 4 && nEx <= 8, numbers)
   }
 
-  test("a fast-path runBatch stays within 4 root actions and 8 exchanges") {
+  test("a fast-path runBatch stays within 3 root actions and 8 exchanges") {
     val p = CrawlFixtures.Params(nRecords = 2000, nUrls = 1000, nHosts = 25)
     val (d1, d2) = CrawlFixtures.rawLines(p).partition(_.file_ord < 3)
     val table = Files.createTempDirectory("frontier-budget-fast").toString
@@ -60,6 +60,6 @@ class FrontierBudgetSpec extends AnyFunSuite {
 
     val (nActions, nEx, numbers) = tally(actions(spark)(run(d2, "d2")))
     info(numbers)
-    assert(nActions <= 4 && nEx <= 8, numbers)
+    assert(nActions <= 3 && nEx <= 8, numbers)
   }
 }

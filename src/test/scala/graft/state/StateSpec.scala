@@ -2,10 +2,13 @@ package graft.state
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import graft.TestSpark
 import graft.fixtures.CrawlFixtures
 import graft.model.RawIndexLine
 import graft.operators.FrontierJob
+import org.apache.spark.sql.functions.{col, input_file_name}
 import org.scalatest.funsuite.AnyFunSuite
 
 class StateSpec extends AnyFunSuite {
@@ -135,62 +138,78 @@ class StateSpec extends AnyFunSuite {
     assert(got("n_domains") == 9L)
   }
 
+  private def urls(from: Int, until: Int): Seq[String] =
+    (from until until).map(i => s"https://h${i % 97}.example.com/p/$i")
+
   test("distributed cuckoo IO goes through the Hadoop FS API (file: URI)") {
-    // exercises the String/URI entry points end-to-end: update with no
-    // previous state, carry-forward + update from a previous URI dir,
-    // load and compact through the same `file:` filesystem. On a cluster
-    // the same code paths address hdfs:/s3a: via the session Hadoop conf.
+    // exercises the URI entry points end-to-end: update with no previous
+    // state, carry-forward + update from a previous URI dir, load and
+    // compact through the same `file:` filesystem. On a cluster the same
+    // code paths address hdfs:/s3a: via the session Hadoop conf.
     val spark = TestSpark.spark
     import spark.implicits._
     val dir = Files.createTempDirectory("cuckoo-hfs").toString
     val uri = "file://" + dir
-    val hashes = (0L until 5000L).map(CrawlFixtures.mix)
+    val first = urls(0, 5000)
     val stats = UrlSeenState.updateDistributed(
-      spark, hashes.toDF("h"), None: Option[String], s"$uri/s1",
-      partitions = 4, capacityPerPartition = 1 << 12)
+      spark, first.toDF("url"), None, s"$uri/s1", partitions = 4,
+      deltaDir = s"$uri/d1")
     assert(stats.values.map(_.inserted).sum == 5000L)
-    val more = (5000L until 6000L).map(CrawlFixtures.mix)
+    val more = urls(5000, 6000)
     UrlSeenState.updateDistributed(
-      spark, more.toDF("h"), Some(s"$uri/s1"), s"$uri/s2",
-      partitions = 4, capacityPerPartition = 1 << 12)
+      spark, more.toDF("url"), Some(s"$uri/s1"), s"$uri/s2", partitions = 4,
+      deltaDir = s"$uri/d2")
     val loaded = UrlSeenState.load(s"$uri/s2")
-    assert((hashes ++ more).forall(loaded.contains))
+    assert((first ++ more).forall(u => loaded.contains(xxhash(u))))
+    // the delta holds the batch's urls, each partition's rows in one file
+    // and sorted by key
+    val delta = spark.read.parquet(s"$uri/d1")
+      .select(col("url"), input_file_name())
+      .as[(String, String)].collect().toSeq
+    assert(delta.map(_._1).sorted == first.sorted)
+    val byFile = delta.groupBy(_._2).values.map(_.map { case (u, _) =>
+      val h = xxhash(u); (UrlSeenState.partitionOf(h, 4), h) })
+    byFile.foreach(rows => assert(rows == rows.sorted, "delta file not key-sorted"))
+    assert(byFile.toSeq.flatMap(_.map(_._1).distinct).size == 4,
+      "a partition's rows span two files")
     // compact in place through the URI as well; membership preserved
     val segs = UrlSeenState.compactDistributed(
-      spark, (hashes ++ more).toDF("h"), s"$uri/s2",
-      partitions = 4, capacityPerPartition = 1 << 12)
+      spark, (first ++ more).toDF("url"), s"$uri/s2", partitions = 4)
     assert(segs.values.forall(_ == 1))
     val compacted = UrlSeenState.load(s"$uri/s2")
-    assert((hashes ++ more).forall(compacted.contains))
+    assert((first ++ more).forall(u => compacted.contains(xxhash(u))))
   }
 
   test("compactDistributed rebuilds grown chains to one segment, " +
        "membership preserved") {
     val spark = TestSpark.spark
     import spark.implicits._
-    val dir1 = Files.createTempDirectory("cuckoo-u").toString
-    val dir2 = Files.createTempDirectory("cuckoo-c").toString
-    val hashes = (0L until 40000L).map(CrawlFixtures.mix)
-    // tiny per-partition capacity forces multi-segment chains
-    val stats = UrlSeenState.updateDistributed(
-      spark, hashes.toDF("h"), None, Paths.get(dir1),
-      partitions = 4, capacityPerPartition = 256)
+    val dir = Files.createTempDirectory("cuckoo-u").toString
+    val all = urls(0, 40000)
+    // a small first batch sizes each chain for ~500 keys; a second batch
+    // 40x larger forces multi-segment chains
+    val (first, second) = all.splitAt(1000)
+    UrlSeenState.updateDistributed(spark, first.toDF("url"), None,
+      s"$dir/s0", partitions = 4, deltaDir = s"$dir/d0")
+    val stats = UrlSeenState.updateDistributed(spark, second.toDF("url"),
+      Some(s"$dir/s0"), s"$dir/s1", partitions = 4, deltaDir = s"$dir/d1")
     assert(stats.values.exists(_.segments > 2), s"need grown chains: $stats")
-    val loaded = UrlSeenState.load(Paths.get(dir1))
-    assert(hashes.forall(loaded.contains))
+    assert(stats.values.map(_.inserted).sum == second.size.toLong)
+    val loaded = UrlSeenState.load(s"$dir/s1")
+    assert(all.forall(u => loaded.contains(xxhash(u))))
 
-    // compact from the authoritative key set into the same layout
-    java.nio.file.Files.list(Paths.get(dir1)).forEach(p =>
-      Files.copy(p, Paths.get(dir2).resolve(p.getFileName.toString)))
+    // compact from the authoritative url set into the same layout
+    Files.createDirectory(Paths.get(dir, "s2"))
+    Files.list(Paths.get(dir, "s1")).forEach(p =>
+      Files.copy(p, Paths.get(dir, "s2").resolve(p.getFileName.toString)))
     val segs = UrlSeenState.compactDistributed(
-      spark, hashes.toDF("h"), Paths.get(dir2),
-      partitions = 4, capacityPerPartition = 256)
+      spark, all.toDF("url"), s"$dir/s2", partitions = 4)
     assert(segs.values.forall(_ == 1), s"compaction must right-size: $segs")
-    val compacted = UrlSeenState.load(Paths.get(dir2))
-    assert(hashes.forall(compacted.contains), "compaction lost a key")
+    val compacted = UrlSeenState.load(s"$dir/s2")
+    assert(all.forall(u => compacted.contains(xxhash(u))), "compaction lost a key")
     assert(compacted.parts.map(_.numSegments).forall(_ == 1))
     // FP rate materially better than the grown chain's
-    val fresh = (1000000L until 1040000L).map(CrawlFixtures.mix)
+    val fresh = urls(1000000, 1040000).map(xxhash)
     val fpGrown   = fresh.count(loaded.contains)
     val fpCompact = fresh.count(compacted.contains)
     assert(fpCompact * 2 < fpGrown + 100,
@@ -278,10 +297,7 @@ class StateSpec extends AnyFunSuite {
     val state = UrlSeenState.load(
       Paths.get(table, Snapshots.latest(table).get.statePath))
     val hashes = (scheduled1 ++ scheduled2).toSeq
-    val present = hashes.count(u => state.contains(
-      org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
-        org.apache.spark.unsafe.types.UTF8String.fromString(u),
-        org.apache.spark.sql.types.StringType, 42L)))
+    val present = hashes.count(u => state.contains(xxhash(u)))
     assert(present == hashes.size, "cuckoo state must contain all winners")
   }
 
@@ -294,5 +310,107 @@ class StateSpec extends AnyFunSuite {
     val rows = r.batches.orderBy("ord")
       .select("warc", "offset").as[(String, Long)].collect()
     assert(rows.toSeq == rows.sortBy(x => (x._1, x._2)).toSeq)
+  }
+
+  private def xxhash(u: String): Long =
+    org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
+      org.apache.spark.unsafe.types.UTF8String.fromString(u),
+      org.apache.spark.sql.types.StringType, 42L)
+
+  /** (file name, bytes) of every file in `dir`, sorted by name. */
+  private def files(dir: java.nio.file.Path): Seq[(String, Seq[Byte])] = {
+    val st = Files.list(dir)
+    try st.iterator().asScala.toSeq
+      .map(f => f.getFileName.toString -> Files.readAllBytes(f).toSeq)
+      .sortBy(_._1)
+    finally st.close()
+  }
+
+  private def statePath(table: String) =
+    Paths.get(table, Snapshots.latest(table).get.statePath)
+
+  test("partitionCol routes every hash as partitionOf does") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val hs = Seq(0L, -1L, Long.MinValue, Long.MaxValue) ++
+      Seq.fill(10000)(rnd.nextLong())
+    val df = hs.toDF("h")
+    Seq(4, 16, 256).foreach { p =>
+      val got = df.select(col("h"), UrlSeenState.partitionCol(col("h"), p))
+        .as[(Long, Int)].collect()
+      assert(got.length == hs.length)
+      val bad = got.filter { case (h, q) => q != UrlSeenState.partitionOf(h, p) }
+      assert(bad.isEmpty, s"P=$p: ${bad.take(5).toSeq}")
+    }
+  }
+
+  test("state dir holds at most 16 B per seen URL plus a per-blob header") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val table = Files.createTempDirectory("frontier-bytes").toString
+    val p = CrawlFixtures.Params(nRecords = 1200, nUrls = 500, nHosts = 20)
+    val (day1, day2) = CrawlFixtures.rawLines(p).partition(_.file_ord < 3)
+    FrontierJob.runBatch(spark, day1.toDF(), table, dumpId = "d1")
+    val m = FrontierJob.runBatch(spark, day2.toDF(), table, dumpId = "d2")
+      .manifest
+    val nSeen = m.metrics("n_seen_urls")
+    val st = files(statePath(table))
+    val blobs = st.count(_._1.startsWith("cuckoo-"))
+    val bytes = st.map(_._2.length.toLong).sum
+    // a one-segment chain blob carries 48 B of headers; the FS may keep
+    // a checksum file per blob (8 B + 4 B per 512 B), so each blob gets
+    // 64 B of fixed overhead besides its table
+    val bound = 16 * nSeen + 64L * blobs
+    info(s"$bytes B for $nSeen seen URLs in $blobs blobs (bound $bound)")
+    assert(nSeen > 0 && bytes <= bound, s"$bytes B > $bound B")
+  }
+
+  test("one batch run into two fresh tables gives byte-identical blobs") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val lines = CrawlFixtures.rawLines(
+      CrawlFixtures.Params(nRecords = 1200, nUrls = 500, nHosts = 20)).toDF()
+    def blobs() = {
+      val table = Files.createTempDirectory("frontier-det").toString
+      FrontierJob.runBatch(spark, lines, table, dumpId = "d1")
+      files(statePath(table)).filter(_._1.startsWith("cuckoo-"))
+    }
+    val a = blobs()
+    assert(a.nonEmpty)
+    assert(a == blobs(), "same batch, same state bytes")
+  }
+
+  test("a table with legacy fixed-capacity blobs resumes with every " +
+       "winner present") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val table = Files.createTempDirectory("frontier-legacy").toString
+    val p = CrawlFixtures.Params(nRecords = 1200, nUrls = 500, nHosts = 20)
+    val (day1, day2) = CrawlFixtures.rawLines(p).partition(_.file_ord < 3)
+    // the winners of each committed snapshot: its seen delta
+    def won(): Seq[String] = spark.read
+      .parquet(s"$table/${Snapshots.latest(table).get.dataPath}")
+      .as[String].collect().toSeq
+    FrontierJob.runBatch(spark, day1.toDF(), table, dumpId = "d1")
+    val won1 = won()
+    // rewrite snapshot 0's state as the old writer did: every partition
+    // one chain of fixed capacity 1 << 16, whatever it holds
+    val dir = statePath(table)
+    val nParts = files(dir).count(_._1.startsWith("cuckoo-"))
+    val legacy = UrlSeenState.create(nParts, 1 << 16)
+    won1.foreach(u => legacy.insert(xxhash(u)))
+    legacy.save(dir)
+    assert(files(dir).filter(_._1.startsWith("cuckoo-"))
+      .forall(_._2.length > (1 << 16)), "legacy blobs are fixed-size")
+
+    FrontierJob.runBatch(spark, day2.toDF(), table, dumpId = "d2")
+    val won2 = won()
+    assert(won1.nonEmpty && won2.nonEmpty)
+    val state = UrlSeenState.load(statePath(table))
+    assert(state.parts.length == nParts)
+    val missing = (won1 ++ won2).filterNot(u => state.contains(xxhash(u)))
+    assert(missing.isEmpty, s"winners missing from the state: $missing")
+    assert(state.size == (won1 ++ won2).size.toLong)
   }
 }
