@@ -1,9 +1,5 @@
 package graft.operators
 
-import java.nio.file.Paths
-
-import scala.jdk.CollectionConverters._
-
 import graft.Pin
 import graft.functions.Urls
 import graft.state.{Snapshots, UrlSeenState}
@@ -66,15 +62,9 @@ object FrontierJob {
 
     // the seen set is append-only: each snapshot's dataPath holds only
     // that batch's winners; the reader unions the manifest chain
-    val prev      = Snapshots.latest(tableDir)
-    val seenPaths = Snapshots.chain(tableDir).map(m => s"$tableDir/${m.dataPath}")
-    val seenUrls =
-      if (seenPaths.nonEmpty) spark.read.parquet(seenPaths: _*)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField(
-            "url", org.apache.spark.sql.types.StringType))))
+    val chain    = Snapshots.chain(tableDir)
+    val prev     = chain.headOption
+    val seenUrls = UrlSeenState.seenUrls(spark, tableDir, chain)
 
     // 1. parse + filter (F1–F5; raw order as processing order — no
     // per-file re-sort shuffle on the hot path), then project to the
@@ -178,52 +168,15 @@ object FrontierJob {
       .parquet(batchesPath)
     val batches = spark.read.parquet(batchesPath)
 
-    // State partition count is a property of the TABLE, not the session:
-    // resume derives it from the existing blobs (routing must match the
-    // layout they were written under); a fresh table sizes to the core
-    // count so the per-blob update tasks don't cap parallelism at 16 on
-    // wider machines (measured: the update phase was wall-flat 8→32
-    // cores with 16 fixed blobs).
-    val prevStateDir = prev
-      .map(m => Paths.get(tableDir, m.statePath))
-      .filter(java.nio.file.Files.isDirectory(_))
-    val stateParts = prevStateDir
-      .map { d =>
-        // close the listing stream (Snapshots.stage's Files.walk
-        // discipline) — the iterator path leaked one directory fd per
-        // resumed batch on the driver
-        val st = java.nio.file.Files.list(d)
-        val n =
-          try st.iterator().asScala
-            .count(_.getFileName.toString.startsWith("cuckoo-"))
-          finally st.close()
-        math.max(n, 1)
-      }
-      .getOrElse(math.min(256,
-        math.max(16, spark.sparkContext.defaultParallelism)))
-
-    // Seen delta and cuckoo state in one job (updateDistributed): one row
-    // per winner URL, written partitioned and hash-sorted, each state
-    // chain sized by its keys. When nothing below the winner window
-    // dropped rows, the just-written batches parquet holds exactly the
-    // winner set and the pass reads only its `url` column, not another
-    // full-width pass over the crawl-order chain; only the robots/quota
-    // path reads `kept` (its pin).
+    // Seen delta and cuckoo state in one job (UrlSeenState.advance). When
+    // nothing below the winner window dropped rows, the just-written
+    // batches parquet holds exactly the winner set and the pass reads
+    // only its `url` column, not another full-width pass over the
+    // crawl-order chain; only the robots/quota path reads `kept` (its pin).
     val winnerSrc = if (keptIsOrdered) batches else kept
-    val perPartInserts = UrlSeenState.updateDistributed(spark, winnerSrc,
-      prevStateDir.map(_.toString), stateDir.toString, stateParts,
+    val perPartInserts = UrlSeenState.advance(spark, winnerSrc, seenUrls,
+      prev.map(m => s"$tableDir/${m.statePath}"), stateDir.toString,
       deltaDir = dataDir.toString)
-    // FP-rate bound: a chain that has grown past 2 segments gets rebuilt
-    // into one filter sized for twice its keys, from the authoritative
-    // seen set (old chain ∪ this batch's narrow seen-delta parquet).
-    // Grow-cycles are logarithmic in total inserts, so this full pass
-    // amortizes to ~O(1) per batch.
-    if (perPartInserts.values.exists(_.segments > 2)) {
-      val allSeen = seenUrls.select("url")
-        .union(spark.read.parquet(dataDir.toString).select("url"))
-      UrlSeenState.compactDistributed(spark, allSeen, stateDir.toString,
-        partitions = stateParts)
-    }
 
     val nKept    = obsBatch.get("n_scheduled").asInstanceOf[Long]
     val nBatches = obsBatch.get("max_batch").asInstanceOf[Long] + 1

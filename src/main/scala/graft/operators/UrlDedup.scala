@@ -1,10 +1,10 @@
 package graft.operators
 
 import graft.Pin
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** URL-seen set construction + frontier dedup (SURVEY.md §2.4 A0, §2.3
   * J2/J3, §2.5 O3) — the reference's single-process bottleneck
@@ -119,12 +119,12 @@ object UrlDedup {
     * host's lines in one fixed-size index shard — never host or URL
     * popularity; a mega-host spreads across shards. The cum table is one
     * narrow, map-side-combined row per group, and its running sum
-    * windows over that small frame. The join back re-exchanges only the
-    * cum side: the rank window already hash-partitioned the big side on
-    * the join keys. Against ordByPartitionOffsets this saves the range
-    * sort's sampling pass and the full-width sorted pin; every column is
-    * a function of the data, so repeated consumers recompute the same
-    * ords without a pin.
+    * folds over that small frame, one task per `within` value. The
+    * join back re-exchanges only the cum side: the rank window already
+    * hash-partitioned the big side on the join keys. Against
+    * ordByPartitionOffsets this saves the range sort's sampling pass and
+    * the full-width sorted pin; every column is a function of the data,
+    * so repeated consumers recompute the same ords without a pin.
     *
     * `countFrom`: an alternative frame to count groups over — pass a
     * pinned upstream frame with the same row multiset (e.g. the input
@@ -137,15 +137,9 @@ object UrlDedup {
                        within: Seq[String] = Nil): DataFrame = {
     val keys = within :+ groupCol
     val wIn = Window.partitionBy(keys.map(col): _*).orderBy(innerSort: _*)
-    val cum = countFrom.getOrElse(df)
+    val counts = countFrom.getOrElse(df)
       .groupBy(keys.map(col): _*).agg(count(lit(1)).as("__c"))
-      .withColumn("__goff",
-        coalesce(
-          sum(col("__c")).over(
-            Window.partitionBy(within.map(col): _*).orderBy(asc(groupCol))
-              .rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-      .select((keys :+ "__goff").map(col): _*)
+    val cum = runningOffsets(counts, within, groupCol, "__c", "__goff")
     df.withColumn("__grn", row_number().over(wIn))
       .join(cum, keys)
       .withColumn(ordCol, col("__goff") + col("__grn") - 1L)
@@ -176,21 +170,46 @@ object UrlDedup {
     val mask = lit((1L << 33) - 1)
     val sorted = Pin(df.orderBy(sortCols: _*)
       .withColumn("__mid", monotonically_increasing_id()))
-    val offsets = sorted
-      .groupBy(shiftright(col("__mid"), 33).as("__pid"))
-      .agg(count(lit(1)).as("__cnt"))
-      .withColumn("__offset",
-        coalesce(
-          sum(col("__cnt")).over(
-            Window.orderBy(asc("__pid"))
-              .rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-      .select(col("__pid"), col("__offset"))
+    val offsets = runningOffsets(
+      sorted.groupBy(shiftright(col("__mid"), 33).as("__pid"))
+        .agg(count(lit(1)).as("__cnt")),
+      Nil, "__pid", "__cnt", "__offset")
     sorted
       .withColumn("__pid", shiftright(col("__mid"), 33))
       .join(broadcast(offsets), Seq("__pid"))
       .withColumn(ordCol, col("__offset") + col("__mid").bitwiseAND(mask))
       .drop("__pid", "__mid", "__offset")
+  }
+
+  /** (`within`…, `key`, `off`): exclusive running sums of the long `cnt`
+    * in `key` order (nulls first) over one row per (`within`, `key`),
+    * restarting per `within` value. Rows are routed by `within` (to one
+    * task when it is empty) and folded there; an unpartitioned window
+    * would make Spark warn on every plan.
+    */
+  private def runningOffsets(counts: DataFrame, within: Seq[String],
+                             key: String, cnt: String,
+                             off: String): DataFrame = {
+    val keys = within :+ key
+    val schema = StructType(keys.map(counts.schema(_)) :+
+                            StructField(off, LongType, nullable = false))
+    val routed =
+      if (within.isEmpty) counts.repartition(1)
+      else counts.repartition(within.map(col): _*)
+    val w = within.size
+    routed.select((keys :+ cnt).map(col): _*)
+      .sortWithinPartitions(keys.map(asc): _*)
+      .mapPartitions { it =>
+        var group: Seq[Any] = null
+        var acc = 0L
+        it.map { r =>
+          val g = (0 until w).map(r.get)
+          if (g != group) { group = g; acc = 0L }
+          val o = acc
+          acc += r.getLong(w + 1)
+          Row.fromSeq((0 to w).map(r.get) :+ o)
+        }
+      }(Encoders.row(schema))
   }
 
   /** Kept for the benchmark harness under perfbench/, which compiles

@@ -2,11 +2,10 @@ package graft.state
 
 /** Bucketized cuckoo filter with partial-key cuckoo hashing (Fan et al.,
   * "Cuckoo Filter: Practically Better Than Bloom", CoNEXT'14): 4-slot
-  * buckets, 16-bit fingerprints, delete support. This is the exact-pass
-  * membership structure of the URL-seen set (SURVEY.md §7.1 item 2): the
-  * broadcast bloom filter screens definitely-new URLs cheaply; cuckoo
-  * partitions answer the maybe-seen sliver exactly and support frontier
-  * retirement (deletes) — which a bloom filter cannot.
+  * buckets, 16-bit fingerprints, delete support. One chain of these
+  * (CuckooChain) per partition makes the URL-seen state (UrlSeenState,
+  * SURVEY.md §7.1 item 2); deletes are what would let the frontier
+  * retire a URL, which a bloom filter cannot do.
   *
   * Deterministic: no randomness; eviction choice derives from an
   * instance counter, so identical insert sequences produce identical

@@ -81,37 +81,35 @@ object Snapshots {
     )
   }
 
-  /** Latest committed snapshot, if any. */
-  def latest(table: String): Option[Manifest] = {
+  /** Committed snapshot ids, ascending: the one listing of `_snapshots/`. */
+  private def committedIds(table: String): Seq[Long] = {
     val dir = snapDir(table)
-    if (!Files.isDirectory(dir)) return None
-    val ids = Files.list(dir).iterator().asScala
+    if (!Files.isDirectory(dir)) return Nil
+    val st = Files.list(dir)
+    try st.iterator().asScala
       .map(_.getFileName.toString)
       .collect { case s if s.matches("v\\d+\\.json") =>
         s.stripPrefix("v").stripSuffix(".json").toLong }
-      .toSeq
-    ids.sorted.lastOption.map(id =>
-      parse(Files.readString(manifestPath(table, id))))
+      .toSeq.sorted
+    finally st.close()
   }
+
+  private def read(table: String, id: Long): Manifest =
+    parse(Files.readString(manifestPath(table, id)))
+
+  /** Latest committed snapshot, if any. */
+  def latest(table: String): Option[Manifest] =
+    committedIds(table).lastOption.map(read(table, _))
 
   /** Manifest chain from the latest snapshot back to the root (newest
     * first) — the reader's view of an append-only table is the union of
     * every snapshot's delta `dataPath`.
     */
   def chain(table: String): Seq[Manifest] = {
-    val byId = {
-      val dir = snapDir(table)
-      if (!Files.isDirectory(dir)) Map.empty[Long, Manifest]
-      else Files.list(dir).iterator().asScala
-        .map(_.getFileName.toString)
-        .collect { case s if s.matches("v\\d+\\.json") =>
-          s.stripPrefix("v").stripSuffix(".json").toLong }
-        .map(id => id -> parse(Files.readString(manifestPath(table, id))))
-        .toMap
-    }
-    Iterator.iterate(byId.values.toSeq.sortBy(_.snapshotId).lastOption) {
-      cur => cur.flatMap(m => byId.get(m.parentId))
-    }.takeWhile(_.isDefined).map(_.get).toSeq
+    val ids = committedIds(table)
+    val byId = ids.map(id => id -> read(table, id)).toMap
+    Iterator.iterate(ids.lastOption.map(byId))(_.flatMap(m => byId.get(m.parentId)))
+      .takeWhile(_.isDefined).map(_.get).toSeq
   }
 
   /** Time travel: the manifest chain exactly as a reader saw it right

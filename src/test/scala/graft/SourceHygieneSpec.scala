@@ -13,7 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * and frees intermediates only through graft.Pin; it names SQL functions
   * only in functions.Registry and turns expressions into Columns only in
   * the ExpressionBridge; Frontier computes global ranks only through
-  * UrlDedup; and every source is text.
+  * UrlDedup; only graft/state knows the URL-seen state's blob names and
+  * segment bound; and every source is text.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -98,6 +99,16 @@ class SourceHygieneSpec extends AnyFunSuite {
     val call = "releaseOrderCache|releasePins".r
     val hits = lines(root).filter { case (_, _, l) =>
       call.findFirstIn(l).isDefined && !l.contains("def releaseOrderCache(")
+    }
+    assert(hits.isEmpty,
+      hits.map { case (f, n, l) => s"$f:$n: ${l.trim}" }.mkString("\n"))
+  }
+
+  test("only graft/state names state blobs or bounds chain segments") {
+    val state = root.resolve("graft/state")
+    val hits = lines(root).filter { case (f, _, l) =>
+      !f.startsWith(state) &&
+        (l.contains("\"cuckoo-") || l.contains("segments > 2"))
     }
     assert(hits.isEmpty,
       hits.map { case (f, n, l) => s"$f:$n: ${l.trim}" }.mkString("\n"))

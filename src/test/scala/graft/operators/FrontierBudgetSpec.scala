@@ -5,6 +5,7 @@ import java.nio.file.Files
 import graft.TestSpark
 import graft.fixtures.CrawlFixtures
 import graft.operators.PlanBudget.{actions, exchanges, tally, windows}
+import graft.state.UrlSeenState
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan budget of the frontier paths: the robots parser runs in one
@@ -61,5 +62,22 @@ class FrontierBudgetSpec extends AnyFunSuite {
     val (nActions, nEx, numbers) = tally(actions(spark)(run(d2, "d2")))
     info(numbers)
     assert(nActions <= 3 && nEx <= 8, numbers)
+  }
+
+  test("a forced compaction runs as one root action with one exchange") {
+    val dir = Files.createTempDirectory("compact-budget").toString
+    val urls = (0 until 6000).map(i => s"https://h${i % 31}.example.com/c/$i")
+    UrlSeenState.updateDistributed(spark, urls.take(100).toDF("url"), None,
+      s"$dir/s0", partitions = 4, deltaDir = s"$dir/d0")
+    val grown = UrlSeenState.updateDistributed(spark, urls.toDF("url"),
+      Some(s"$dir/s0"), s"$dir/s1", partitions = 4, deltaDir = s"$dir/d1")
+    assert(grown.values.forall(_.segments > 1))
+
+    val (nActions, nEx, numbers) = tally(actions(spark) {
+      UrlSeenState.compactDistributed(spark, urls.toDF("url"), s"$dir/s1",
+        partitions = 4)
+    })
+    info(numbers)
+    assert(nActions == 1 && nEx == 1, numbers)
   }
 }

@@ -8,6 +8,7 @@ import graft.TestSpark
 import graft.fixtures.CrawlFixtures
 import graft.model.RawIndexLine
 import graft.operators.FrontierJob
+import graft.state.StateBatches.{advance, growBatches, update}
 import org.apache.spark.sql.functions.{col, input_file_name}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -189,10 +190,7 @@ class StateSpec extends AnyFunSuite {
     // a small first batch sizes each chain for ~500 keys; a second batch
     // 40x larger forces multi-segment chains
     val (first, second) = all.splitAt(1000)
-    UrlSeenState.updateDistributed(spark, first.toDF("url"), None,
-      s"$dir/s0", partitions = 4, deltaDir = s"$dir/d0")
-    val stats = UrlSeenState.updateDistributed(spark, second.toDF("url"),
-      Some(s"$dir/s0"), s"$dir/s1", partitions = 4, deltaDir = s"$dir/d1")
+    val stats = growBatches(dir, Seq(first, second))(update(4)).last
     assert(stats.values.exists(_.segments > 2), s"need grown chains: $stats")
     assert(stats.values.map(_.inserted).sum == second.size.toLong)
     val loaded = UrlSeenState.load(s"$dir/s1")
@@ -214,6 +212,32 @@ class StateSpec extends AnyFunSuite {
     val fpCompact = fresh.count(compacted.contains)
     assert(fpCompact * 2 < fpGrown + 100,
            s"fp not reduced: $fpCompact vs $fpGrown")
+  }
+
+  test("advance compacts a chain grown past 2 segments from seen ∪ delta") {
+    val dir = Files.createTempDirectory("cuckoo-advance").toString
+    val all = urls(0, 40000)
+    val (first, second) = all.splitAt(1000)
+    val stats = growBatches(dir, Seq(first, second))(advance).last
+    assert(stats.values.exists(_.segments > 2), s"no growth: $stats")
+    val state = UrlSeenState.load(s"$dir/s1")
+    assert(state.parts.forall(_.numSegments == 1), "state was not compacted")
+    assert(state.size == all.size.toLong)
+    assert(all.forall(u => state.contains(xxhash(u))))
+  }
+
+  test("an update inserts each distinct key once") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val dir = Files.createTempDirectory("cuckoo-dup").toString
+    val us = urls(0, 2000)
+    val stats = UrlSeenState.updateDistributed(spark,
+      (us ++ us.take(300)).toDF("url"), None, s"$dir/s0", partitions = 4,
+      deltaDir = s"$dir/d0")
+    assert(stats.values.map(_.inserted).sum == 2000L)
+    assert(UrlSeenState.load(s"$dir/s0").size == 2000L)
+    assert(spark.read.parquet(s"$dir/d0").count() == 2300L,
+      "the delta keeps every row")
   }
 
   test("snapshot log: stage/commit/latest/parent chain + commit race") {
