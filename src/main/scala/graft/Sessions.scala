@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+import java.util.Comparator
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session and table-loading helpers shared by SparkEntry / Verify /
@@ -43,20 +46,24 @@ object Sessions {
   private val exitDeletes =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** Recursively delete `path` on JVM exit (idempotent per path). For
-    * scratch artifacts that must outlive a query but not the process.
+  /** Delete `path` and everything under it (no-op if absent); throws on
+    * the first file it cannot delete.
+    */
+  def deleteTree(path: Path): Unit =
+    if (Files.exists(path)) {
+      val walk = Files.walk(path)
+      try walk.sorted(Comparator.reverseOrder()).forEach(f => Files.deleteIfExists(f))
+      finally walk.close()
+    }
+
+  /** Recursively delete `path` on JVM exit (idempotent per path), errors
+    * ignored. For scratch artifacts that must outlive a query but not the
+    * process.
     */
   def deleteOnExit(path: String): Unit =
     if (exitDeletes.add(path)) {
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        val p = java.nio.file.Paths.get(path)
-        if (java.nio.file.Files.exists(p)) {
-          val walk = java.nio.file.Files.walk(p)
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => java.nio.file.Files.deleteIfExists(f))
-          catch { case scala.util.control.NonFatal(_) => () }
-          finally walk.close()
-        }
-      }))
+      Runtime.getRuntime.addShutdownHook(new Thread(() =>
+        try deleteTree(Paths.get(path))
+        catch { case scala.util.control.NonFatal(_) => () }))
     }
 }

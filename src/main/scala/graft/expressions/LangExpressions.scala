@@ -10,8 +10,9 @@ import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native single-node language-ID expression. The Column-algebra scorer
-  * (TextAnalysis.langIdCol) is ~700 expression nodes at 22 languages (more at 124)
-  * (44 padded-replace counters + argmax chain); at ~100 µs/row of tree
+  * (the test reference graft.ref.RefLangId) is ~700 expression nodes at
+  * 22 languages, more at 124 (44 padded-replace counters + argmax
+  * chain); at ~100 µs/row of tree
   * overhead it dominated q_lang_paragraphs (4–10 s for 65k paragraph
   * evaluations). This expression computes the identical value — the
   * same non-overlapping " marker " occurrence counts (indexOf advancing

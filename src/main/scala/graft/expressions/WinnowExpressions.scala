@@ -14,8 +14,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * ONE codegen'd kernel: normalize → k-gram base-131 hashes → w-window
   * rightmost-min selection → first-occurrence-deduped
   * array<struct<pos,fp>>. Semantics are exactly the column chain in
-  * operators.Winnowing (gramCodes → gramHashesFromCodes → winnowSelect),
-  * which this replaces on the hot path: those are higher-order-function
+  * the test reference graft.ref.RefWinnowing (gramCodes →
+  * gramHashesFromCodes → winnowSelect), which this replaces on the hot
+  * path: those are higher-order-function
   * columns, and HOFs are CodegenFallback — per document they built a
   * char array, a gram-hash array, then per window a slice + reverse +
   * array_position, all interpreted with per-element boxing. Here it is

@@ -35,7 +35,8 @@ object TextAnalysis {
       / needle.length).cast("long")
   }
 
-  /** Stopword-score language ID: argmax of per-language function-word
+  /** Markers of the stopword-score language ID
+    * (expressions.LangExpressions): argmax of per-language function-word
     * counts, fixed priority on ties (seq order), 'unk' when all scores
     * are zero. Deterministic heuristic per the builder brief (the
     * reference uses cld2 over ~100 languages, filter_corpus.py:95–147);
@@ -204,14 +205,6 @@ object TextAnalysis {
     LangMarkers.toMap.apply(lang)
       .map(wordCountCol(text, _))
       .reduce(_ + _)
-
-  def langIdCol(text: Column): Column = {
-    val scores = LangMarkers.map { case (l, _) => l -> langScoreCol(text, l) }
-    val maxAll = scores.map(_._2).reduce(greatest(_, _))
-    scores.foldRight(lit("unk"): Column) { case ((l, s), elseC) =>
-      when(s === maxAll && s > 0, lit(l)).otherwise(elseC)
-    }
-  }
 
   /** The language-ID scorer as generated ANSI SQL over a text expression
     * — the oracle is GENERATED from the same LangMarkers table the

@@ -138,7 +138,7 @@ object CorpusJob {
             s"run has params_fp=$paramsFp — refusing to resume a " +
             "pipeline with different parameters (langs/minTokens/" +
             "simThreshold/seenMh/minFreq/recordsPerFile)")
-          cur = spark.read.parquet(s"$tableDir/${m.dataPath}")
+          cur = Snapshots.readData(spark, tableDir, Seq(m))
           rowsIn = m.metrics.get("rows_out")
           m
         case None =>

@@ -30,16 +30,14 @@ object FrontierJob {
     // What is pinned (see Pin for why a pin and what a lost block does),
     // so that each chain with two consumers runs once; every pin is freed
     // when the batch returns or throws:
-    //  - the gated winners, whenever the quota is effectively unbounded
-    //    (politenessRankByFile: its cum-count aggregate and its rank
-    //    window both read them). On the fast path (no robots, unlimited
-    //    quota) the written batches parquet then feeds the seen delta, so
-    //    `kept` is never pinned there.
-    //  - on the polite path (robots or a finite quota): `kept` (the robots
-    //    gate and the seen-delta write both read it) and, for a small
-    //    quota, the ranked frame out of politenessRank (crawlOrderByWarc's
-    //    per-warc window and per-warc count both read it; unpinned, the
-    //    robots gate and the salted rank window ran once per consumer).
+    //  - the winners with their host key, `kept`, on every path: the
+    //    robots gate or the rank, and the seen-delta write, read it (for
+    //    an unbounded quota politenessRankByFile's cum-count aggregate
+    //    and rank window are its two consumers);
+    //  - for a small quota, the ranked frame out of politenessRank
+    //    (crawlOrderByWarc's per-warc window and per-warc count both read
+    //    it; unpinned, the robots gate and the salted rank window ran once
+    //    per consumer).
     // Pinned rather than persisted, `kept` measured per polite batch on a
     // 4-core box (15k lines, 400 hosts, quota 4, robots): 318 -> 28
     // tasks, 4.2 -> 2.0 s executor CPU, and 4.9 -> 2.8 s for the pins,
@@ -83,34 +81,24 @@ object FrontierJob {
       .observe(obsNew, count(lit(1)).as("n_new_entries"))
 
     // 3. A0+J3 fused: the winner LINE per URL in one window shuffle (the
-    // groupBy + semi-join pair re-shuffled the full index twice). kept
-    // feeds the order chain and the seen-delta/cuckoo/count branch. When
-    // neither robots nor the quota can drop rows, the written batches
-    // hold exactly the winner rows — the seen delta reads them instead
-    // of materializing kept twice (one full pass through the memory
-    // subsystem per batch saved).
-    val keptIsOrdered = robots.isEmpty && politenessQuota == Int.MaxValue
-    // winners count rides as an Observation on the kept frame when the
-    // robots/quota path can drop rows downstream — the metrics collect
-    // during the pin job instead of a dedicated count job
-    val obsWin  = Observation()
-    val winners = UrlDedup.winnersKept(fresh, keep)
-    val kept =
-      if (keptIsOrdered) winners
-      else pin(winners.observe(obsWin, count(lit(1)).as("n_winners")))
+    // groupBy + semi-join pair re-shuffled the full index twice). The
+    // winners count rides as an Observation on the pin, so the metrics
+    // collect during the pin job instead of a dedicated count job.
+    val obsWin = Observation()
+    val kept = pin(UrlDedup.winnersKept(fresh, keep)
+      .withColumn("host_key", Urls.hostCol(col("url")))
+      .observe(obsWin, count(lit(1)).as("n_winners")))
 
     // 4. J8 robots gate on (host_key, path): each candidate joins its
     // host's rule list (one exchange over the rules only; AQE picks the
     // join) and a per-row kernel keeps it or not — no per-URL shuffle
     val gated = robots match {
       case Some(r) =>
-        val cand = kept
-          .withColumn("host_key", Urls.hostCol(col("url")))
-          .withColumn("path",
-            coalesce(regexp_extract(col("url"), "^[a-z]+://[^/]*(/.*)$", 1),
-                     lit("/")))
+        val cand = kept.withColumn("path",
+          coalesce(regexp_extract(col("url"), "^[a-z]+://[^/]*(/.*)$", 1),
+                   lit("/")))
         Frontier.robotsGate(cand, r).drop("path")
-      case None => kept.withColumn("host_key", Urls.hostCol(col("url")))
+      case None => kept
     }
 
     // 5. politeness waves (per-host quota), then O3 crawl order + batches.
@@ -118,10 +106,10 @@ object FrontierJob {
     // The frontier's priority IS (file_ord, line_ord), so the rank
     // decomposes per index file (politenessRankByFile): one hash
     // shuffle, no range sort, no full-width sorted checkpoint — r6 cut
-    // of the batch's block-manager traffic. The input is pinned once
-    // (the cum-count aggregate and the rank window are two consumers of
-    // the parse→anti-join→winner chain); a small quota still routes to
-    // the salted window path, which prunes losers before they shuffle.
+    // of the batch's block-manager traffic. Its two consumers of the
+    // parse→anti-join→winner chain read the `kept` pin; a small quota
+    // still routes to the salted window path, which prunes losers
+    // before they shuffle.
     val useByFile = politenessQuota >= Int.MaxValue / 16
     // Measured alternatives to this pin, both slower: no pin, relying on
     // ReuseExchange to share the winner-window shuffle (4M URLs,
@@ -130,17 +118,14 @@ object FrontierJob {
     // compressed columnar cache in place of the pin.
     val (ranked, warcCountSrc) =
       if (useByFile) {
-        val pinned = pin(gated)
-        val r = Frontier.politenessRankByFile(pinned, "host_key")
-        val limited =
-          if (politenessQuota < Int.MaxValue)
-            r.filter(col("wave") <= politenessQuota)
-          else r
+        val r = Frontier.politenessRankByFile(gated, "host_key")
         // the wave join preserves the row multiset only when the quota
         // cannot drop rows — only then may the crawl-order count branch
-        // read the pin instead of the ranked chain
-        val cntSrc = if (politenessQuota < Int.MaxValue) None else Some(pinned)
-        (limited, cntSrc)
+        // read `gated` (without robots, the pin itself) instead of the
+        // ranked chain
+        if (politenessQuota < Int.MaxValue)
+          (r.filter(col("wave") <= politenessQuota), None)
+        else (r, Some(gated))
       } else {
         // crawlOrderByWarc reads its input twice (per-warc window and
         // per-warc count); the salted pre-prune's row-id salt keeps the
@@ -163,26 +148,20 @@ object FrontierJob {
     // returned frame re-read the written parquet instead of re-running
     // the sort chain.
     val (snapId, dataDir, stateDir) = Snapshots.stage(tableDir)
-    val batchesPath = dataDir.resolveSibling(s"snap-$snapId-batches").toString
+    val batchesPath = s"$dataDir-batches"
     batches0.write.mode("overwrite").option("compression", "snappy")
       .parquet(batchesPath)
     val batches = spark.read.parquet(batchesPath)
 
-    // Seen delta and cuckoo state in one job (UrlSeenState.advance). When
-    // nothing below the winner window dropped rows, the just-written
-    // batches parquet holds exactly the winner set and the pass reads
-    // only its `url` column, not another full-width pass over the
-    // crawl-order chain; only the robots/quota path reads `kept` (its pin).
-    val winnerSrc = if (keptIsOrdered) batches else kept
-    val perPartInserts = UrlSeenState.advance(spark, winnerSrc, seenUrls,
-      prev.map(m => s"$tableDir/${m.statePath}"), stateDir.toString,
+    // Seen delta and cuckoo state in one job (UrlSeenState.advance),
+    // reading the winners' urls from the `kept` pin.
+    val perPartInserts = UrlSeenState.advance(spark, kept.select("url"),
+      seenUrls, prev.map(m => s"$tableDir/${m.statePath}"), stateDir.toString,
       deltaDir = dataDir.toString)
 
     val nKept    = obsBatch.get("n_scheduled").asInstanceOf[Long]
     val nBatches = obsBatch.get("max_batch").asInstanceOf[Long] + 1
-    val nWinners =
-      if (keptIsOrdered) nKept
-      else obsWin.get("n_winners").asInstanceOf[Long]
+    val nWinners = obsWin.get("n_winners").asInstanceOf[Long]
     val metrics = Map(
       "n_new_entries" -> obsNew.get("n_new_entries").asInstanceOf[Long],
       "n_winners"     -> nWinners,

@@ -88,8 +88,8 @@ object UnigramLm {
 
   /** Viterbi segmentation of a word column against a literal cost map:
     * returns struct(seg array<string>, cost_micro bigint). The word
-    * column MUST be a plain attribute (see Winnowing.gramCodes on
-    * higher-order argument re-evaluation).
+    * column MUST be a plain attribute: higher-order lambdas evaluate
+    * their argument subtree once per element.
     */
   def segmentCol(word: Column, vocab: Seq[Piece]): Column = {
     val vmap = typedlit(vocab.map(p => p.piece -> p.costMicro).toMap)

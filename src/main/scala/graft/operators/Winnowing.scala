@@ -30,63 +30,12 @@ object Winnowing {
   val K = 5 // k-gram length (chars, after normalization)
   val W = 4 // winnowing window (grams)
 
-  /** Char-code array of the normalized text. MUST be materialized as
-    * its own projection column before feeding [[gramHashesFromCodes]]:
-    * higher-order lambdas evaluate their argument subtree per element,
-    * so inlining this regex+split chain into the per-gram element_at
-    * sites would re-run the regex O(n·k) times per row (measured: a
-    * 500-doc batch went from minutes to milliseconds after staging).
-    * CollapseProject keeps the stage: the expression is non-cheap and
-    * multiply-referenced downstream.
-    */
-  def gramCodes(text: Column): Column =
-    transform(
-      filter(split(regexp_replace(lower(text), "[^a-z0-9]", ""), ""),
-        c => length(c) > 0),
-      c => ascii(c).cast("long"))
-
-  /** Gram-hash array from a MATERIALIZED char-code array column: one
-    * base-131/mix hash per k-gram, empty when fewer than k codes.
-    */
-  def gramHashesFromCodes(codes: Column, k: Int = K): Column = {
-    val n = (size(codes) - k + 1).cast("long")
-    // polynomial over the k char codes at 1-based gram start i
-    def poly(i: Column): Column =
-      (0 until k).foldLeft(lit(0L).cast("long")) { (acc, j) =>
-        acc * 131 + element_at(codes, (i + lit(j)).cast("int"))
-      }
-    when(n >= 1,
-      transform(sequence(lit(1L), n),
-        i => pmod(poly(i) * 1000003L, lit(2147483647L))))
-      .otherwise(array().cast("array<bigint>"))
-  }
-
-  /** Winnowing selection over an arbitrary hash array: returns the
-    * distinct array<struct<pos,fp>> of selected fingerprints, pos =
-    * 1-based index into `hashes`, rightmost-min per window. Factored so
-    * specs can drive it with literal hash sequences (the MOSS paper's
-    * worked example) independent of the hashing.
-    */
-  def winnowSelect(hashes: Column, w: Int = W): Column = {
-    val n = size(hashes).cast("long")
-    val sel = transform(sequence(lit(1L), n - w + 1), { j =>
-      val win  = slice(hashes, j, lit(w))
-      val minv = array_min(win)
-      // rightmost occurrence: position from the right end, mirrored
-      val pos = j + lit(w.toLong) - array_position(reverse(win), minv)
-      struct(pos.as("pos"), minv.as("fp"))
-    })
-    when(n >= w, array_distinct(sel))
-      .otherwise(array().cast("array<struct<pos:bigint,fp:bigint>>"))
-  }
-
   /** Per-document fingerprint table: (idCol, pos, fp) — one row per
-    * selected gram, distinct within a doc. Hot path runs the fused
-    * codegen kernel (expressions.WinnowExpressions) — semantically the
-    * gramCodes → gramHashesFromCodes → winnowSelect column chain below,
-    * which stays as the spec'd reference formulation (those are
-    * higher-order functions, i.e. CodegenFallback: measured ~5× slower
-    * than the kernel at sf0.1).
+    * selected gram, distinct within a doc. Runs the fused codegen kernel
+    * (expressions.WinnowExpressions) — semantically the higher-order
+    * column chain kept as the test reference (graft.ref.RefWinnowing),
+    * which is CodegenFallback and measured ~5× slower than the kernel
+    * at sf0.1.
     */
   def fingerprints(docs: DataFrame, k: Int = K, w: Int = W,
                    idCol: String = "doc_id",

@@ -301,17 +301,11 @@ object PipelineQueries {
       // invocation would otherwise resume (a no-op masquerading as a
       // timed run), and a SIGKILLed predecessor's snapshots could be
       // inherited by a pid-reusing successor as stale query results
-      val tp = java.nio.file.Paths.get(tbl)
-      if (java.nio.file.Files.isDirectory(tp)) {
-        val walk = java.nio.file.Files.walk(tp)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => java.nio.file.Files.deleteIfExists(f))
-        finally walk.close()
-      }
+      graft.Sessions.deleteTree(java.nio.file.Paths.get(tbl))
       graft.Sessions.deleteOnExit(tbl)
       val ms = graft.operators.CorpusJob.runPipeline(
         s, docs, tbl, langs = None, minTokens = 2, simThreshold = 0.9)
-      s.read.parquet(s"$tbl/${ms.last.dataPath}")
+      graft.state.Snapshots.readData(s, tbl, Seq(ms.last))
         .select(col("doc_id"), col("ord"))
     },
 

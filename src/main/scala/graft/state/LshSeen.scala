@@ -1,5 +1,7 @@
 package graft.state
 
+import java.nio.file.Path
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -58,7 +60,7 @@ object LshSeen {
   private def readSegments(spark: SparkSession, table: String,
                            segs: Seq[Snapshots.Manifest]): DataFrame = {
     require(segs.nonEmpty, s"lsh-seen table $table has no committed segments")
-    spark.read.parquet(segs.map(m => s"$table/${m.dataPath}"): _*)
+    Snapshots.readData(spark, table, segs)
   }
 
   /** The distinct (band, bhash) set cross-dedup queries. One live
@@ -92,7 +94,7 @@ object LshSeen {
       .distinct()
       .withColumn("dump_ord", lit(id))
       .write.mode("overwrite").parquet(dataDir.toString)
-    commitWithGrowth(spark, table, id, s"lsh-seen append dump=$dumpId")
+    commitWithGrowth(spark, table, id, dataDir, s"lsh-seen append dump=$dumpId")
   }
 
   /** Fold all live segments into one distinct segment (max dump_ord per
@@ -103,7 +105,7 @@ object LshSeen {
     val folded = seenBandsWithDump(spark, table)
     val (id, dataDir, _) = Snapshots.stage(table)
     folded.write.mode("overwrite").parquet(dataDir.toString)
-    commitWithGrowth(spark, table, id, s"$RebasePrefix compact")
+    commitWithGrowth(spark, table, id, dataDir, s"$RebasePrefix compact")
   }
 
   /** Compact AND drop bands whose latest occurrence predates
@@ -116,17 +118,18 @@ object LshSeen {
       .filter(col("dump_ord") >= minDumpOrd)
     val (id, dataDir, _) = Snapshots.stage(table)
     kept.write.mode("overwrite").parquet(dataDir.toString)
-    commitWithGrowth(spark, table, id, s"$RebasePrefix retire min=$minDumpOrd")
+    commitWithGrowth(spark, table, id, dataDir,
+      s"$RebasePrefix retire min=$minDumpOrd")
   }
 
   /** Commit snapshot `id` with the growth metrics read back from the
-    * just-written parquet (count of the new segment; live fan-in after
-    * this commit). The count reads the narrow written file, not the
-    * upstream plan.
+    * segment just written to its `dataDir` (count of the new segment;
+    * live fan-in after this commit). The count reads the narrow written
+    * file, not the upstream plan.
     */
   private def commitWithGrowth(spark: SparkSession, table: String, id: Long,
-                               lineage: String): Snapshots.Manifest = {
-    val nBands = spark.read.parquet(s"$table/data/snap-$id").count()
+                               dataDir: Path, lineage: String): Snapshots.Manifest = {
+    val nBands = spark.read.parquet(dataDir.toString).count()
     // fan-in AFTER this commit: segments after the last rebase, where
     // this commit itself rebases when its lineage says so
     val priorLive =

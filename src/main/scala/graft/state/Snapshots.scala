@@ -1,8 +1,14 @@
 package graft.state
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
+import scala.collection.immutable.SortedMap
 import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.json4s.{DefaultFormats, Formats}
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods.{compact, parse => parseJson}
 
 /** Minimal Iceberg-style snapshot/manifest log over Parquet directories
   * (SURVEY.md §7.1 item 1). No Iceberg runtime ships in this environment
@@ -13,6 +19,13 @@ import scala.jdk.CollectionConverters._
   *     state/snap-<id>/...         opaque state blobs (cuckoo partitions)
   *     _snapshots/v<id>.json       manifest: parent id, data paths,
   *                                 per-partition metrics, lineage note
+  *
+  * This object is the only code that knows that layout: `stage` hands
+  * out a snapshot's data/state dirs (callers derive siblings from them,
+  * as the frontier's `<data dir>-batches`), `commit` and the readers
+  * encode and parse manifests (compact JSON through the json4s codec
+  * Spark ships; every valid JSON manifest loads, the earlier pretty
+  * form included), and `readData` reads a manifest list's parquet.
   *
   * Commit = write data under an uncommitted snap dir, then atomically
   * move the manifest into place (create-new semantics — a concurrent
@@ -36,49 +49,24 @@ object Snapshots {
   private def manifestPath(table: String, id: Long): Path =
     snapDir(table).resolve(s"v$id.json")
 
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
+  /** The manifest as compact JSON through json4s (bundled with Spark):
+    * header fields in a fixed order, metric keys sorted.
+    */
+  private def render(m: Manifest): String = compact(
+    ("snapshot_id" -> m.snapshotId) ~ ("parent_id" -> m.parentId) ~
+      ("data_path" -> m.dataPath) ~ ("state_path" -> m.statePath) ~
+      ("metrics" -> SortedMap(m.metrics.toSeq: _*)) ~ ("lineage" -> m.lineage))
 
-  private def render(m: Manifest): String = {
-    val metrics = m.metrics.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""${esc(k)}": $v""" }.mkString("{", ", ", "}")
-    s"""{
-       |  "snapshot_id": ${m.snapshotId},
-       |  "parent_id": ${m.parentId},
-       |  "data_path": "${esc(m.dataPath)}",
-       |  "state_path": "${esc(m.statePath)}",
-       |  "metrics": $metrics,
-       |  "lineage": "${esc(m.lineage)}"
-       |}""".stripMargin
-  }
-
-  private val FieldRe = """"(\w+)"\s*:\s*(?:"((?:[^"\\]|\\.)*)"|(-?\d+))""".r
-
+  /** Any valid manifest JSON, compact or pretty (the earlier writer's
+    * format); a missing `lineage` reads as "".
+    */
   private def parse(json: String): Manifest = {
-    val fields = FieldRe.findAllMatchIn(json).map { m =>
-      m.group(1) -> Option(m.group(2)).getOrElse(m.group(3))
-    }.toList
-    val top = fields.toMap
-    // metrics keys are the numeric fields that aren't the known header
-    val known = Set("snapshot_id", "parent_id", "data_path", "state_path",
-                    "lineage")
-    val metrics = fields.collect {
-      case (k, v) if !known.contains(k) && v.matches("-?\\d+") => k -> v.toLong
-    }.toMap
-    Manifest(
-      top("snapshot_id").toLong,
-      top("parent_id").toLong,
-      top("data_path"),
-      top("state_path"),
-      metrics,
-      top.getOrElse("lineage", "").replace("\\\"", "\"").replace("\\\\", "\\")
-    )
+    implicit val formats: Formats = DefaultFormats
+    val j = parseJson(json)
+    Manifest((j \ "snapshot_id").extract[Long], (j \ "parent_id").extract[Long],
+      (j \ "data_path").extract[String], (j \ "state_path").extract[String],
+      (j \ "metrics").extract[Map[String, Long]],
+      (j \ "lineage").extractOrElse[String](""))
   }
 
   /** Committed snapshot ids, ascending: the one listing of `_snapshots/`. */
@@ -94,12 +82,12 @@ object Snapshots {
     finally st.close()
   }
 
-  private def read(table: String, id: Long): Manifest =
+  private def manifest(table: String, id: Long): Manifest =
     parse(Files.readString(manifestPath(table, id)))
 
   /** Latest committed snapshot, if any. */
   def latest(table: String): Option[Manifest] =
-    committedIds(table).lastOption.map(read(table, _))
+    committedIds(table).lastOption.map(manifest(table, _))
 
   /** Manifest chain from the latest snapshot back to the root (newest
     * first) — the reader's view of an append-only table is the union of
@@ -107,7 +95,7 @@ object Snapshots {
     */
   def chain(table: String): Seq[Manifest] = {
     val ids = committedIds(table)
-    val byId = ids.map(id => id -> read(table, id)).toMap
+    val byId = ids.map(id => id -> manifest(table, id)).toMap
     Iterator.iterate(ids.lastOption.map(byId))(_.flatMap(m => byId.get(m.parentId)))
       .takeWhile(_.isDefined).map(_.get).toSeq
   }
@@ -124,15 +112,20 @@ object Snapshots {
     asOf
   }
 
+  /** The one read of snapshot data: the union of the `dataPath` parquet
+    * of every manifest in `ms` (a chain, a live-segment list, or one
+    * snapshot). The caller decides what an empty list means.
+    */
+  def readData(spark: SparkSession, table: String, ms: Seq[Manifest]): DataFrame =
+    spark.read.parquet(ms.map(m => s"$table/${m.dataPath}"): _*)
+
   /** Union read of the append-only table as of snapshot `id` — the
     * debugging/audit read behind "what did the frontier know when batch
     * `id` was scheduled?". Same delta-union contract as a latest read,
     * truncated at `id`.
     */
-  def readAsOf(spark: org.apache.spark.sql.SparkSession, table: String,
-               id: Long): org.apache.spark.sql.DataFrame =
-    spark.read.parquet(
-      chainAsOf(table, id).map(m => s"$table/${m.dataPath}"): _*)
+  def readAsOf(spark: SparkSession, table: String, id: Long): DataFrame =
+    readData(spark, table, chainAsOf(table, id))
 
   /** Roll the table back to snapshot `id`: every later manifest is
     * removed, so `latest` resolves to `id` and the next `stage()` hands
@@ -166,14 +159,7 @@ object Snapshots {
     val next = latest(table).map(_.snapshotId + 1).getOrElse(0L)
     val d = Paths.get(table, "data", s"snap-$next")
     val s = Paths.get(table, "state", s"snap-$next")
-    Seq(d, s).foreach { p =>
-      if (Files.isDirectory(p)) {
-        val walk = Files.walk(p)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => Files.deleteIfExists(f))
-        finally walk.close()
-      }
-    }
+    Seq(d, s).foreach(graft.Sessions.deleteTree)
     Files.createDirectories(d)
     Files.createDirectories(s)
     (next, d, s)

@@ -13,6 +13,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.{col, xxhash64}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
+import org.apache.spark.util.SerializableConfiguration
 
 /** Partitioned cuckoo-filter state for the live frontier (scheduled /
   * in-flight URL hashes): exact-ish membership with delete support so a
@@ -34,12 +35,18 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
   * the loadable point-lookup and retirement (delete) structure over the
   * same set, and no bloom pre-pass sits in front of the anti-join.
   *
+  * The url_seen table is the snapshot chain's data deltas, read through
+  * `Snapshots.readData` (`seenUrls`); Snapshots owns the table layout.
+  * This object owns what is inside a snapshot's state dir: the blob
+  * names, the partition count and the 2-segment bound.
+  *
   * All blob IO goes through the Hadoop FileSystem API resolved from the
   * directory URI, so state dirs work identically on `file:`, `hdfs:` and
-  * `s3a:`. This is what makes the "one task per partition, no driver
-  * collect" design hold on a real cluster: executors write the SHARED
-  * filesystem the driver commits, not node-local disks (which a plain
-  * java.nio path would silently hit).
+  * `s3a:`; tasks get the Hadoop conf through Spark's
+  * SerializableConfiguration broadcast. This is what makes the "one task
+  * per partition, no driver collect" design hold on a real cluster:
+  * executors write the SHARED filesystem the driver commits, not
+  * node-local disks (which a plain java.nio path would silently hit).
   */
 final class UrlSeenState private[state] (val parts: Array[CuckooChain])
     extends Serializable {
@@ -144,23 +151,6 @@ object UrlSeenState {
     try out.write(bytes) finally out.close()
   }
 
-  /** Hadoop Configuration is not java-serializable; ship it to tasks via
-    * its own writable form (same trick as Spark's internal
-    * SerializableConfiguration, which is not public API).
-    */
-  private final class SerConf(@transient var value: Configuration)
-      extends Serializable {
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      out.defaultWriteObject()
-      value.write(out)
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      in.defaultReadObject()
-      value = new Configuration(false)
-      value.readFields(in)
-    }
-  }
-
   /** Per-partition lineage stats from a distributed state update. */
   case class PartStats(inserted: Long, segments: Int)
 
@@ -169,7 +159,7 @@ object UrlSeenState {
     */
   def seenUrls(spark: SparkSession, table: String,
                chain: Seq[Snapshots.Manifest]): DataFrame =
-    if (chain.nonEmpty) spark.read.parquet(chain.map(m => s"$table/${m.dataPath}"): _*)
+    if (chain.nonEmpty) Snapshots.readData(spark, table, chain)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
                                StructType.fromDDL("url STRING"))
 
@@ -217,7 +207,7 @@ object UrlSeenState {
                     prevDir: Option[String], outDir: String, p: Int)
                    (write: Dataset[String] => Unit): Map[Int, PartStats] = {
     val bConf = spark.sparkContext.broadcast(
-      new SerConf(spark.sessionState.newHadoopConf()))
+      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
     val stats = spark.sparkContext.collectionAccumulator[(Int, PartStats)]
     // one task per core at most: each blob costs a fixed file-IO overhead,
     // which one size-coalesced task would pay serially for every partition

@@ -14,7 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * only in functions.Registry and turns expressions into Columns only in
   * the ExpressionBridge; Frontier computes global ranks only through
   * UrlDedup; only graft/state knows the URL-seen state's blob names and
-  * segment bound; and every source is text.
+  * segment bound, and the snapshot table layout; src/main has one
+  * recursive delete and hand-escapes JSON only where a byte format is
+  * pinned; and every source is text.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -112,5 +114,32 @@ class SourceHygieneSpec extends AnyFunSuite {
     }
     assert(hits.isEmpty,
       hits.map { case (f, n, l) => s"$f:$n: ${l.trim}" }.mkString("\n"))
+  }
+
+  test("only graft/state builds snapshot table paths") {
+    val state = root.resolve("graft/state")
+    val hits = lines(root).filter { case (f, _, l) =>
+      !f.startsWith(state) &&
+        Seq("_snapshots", "\"snap-", "data/snap").exists(l.contains)
+    }
+    assert(hits.isEmpty,
+      hits.map { case (f, n, l) => s"$f:$n: ${l.trim}" }.mkString("\n"))
+  }
+
+  test("src/main walks a file tree only in the shared recursive delete") {
+    val hits = outside("Files.walk(", "Sessions.scala")
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("src/main hand-escapes JSON only in Bench and CrawlFixtures") {
+    // Bench's result line and the crawl fixtures' input bytes pin their
+    // own formats; everything else writes JSON through json4s
+    val escape = "\"\\\\\\\"\""
+    val hits = lines(root).collect {
+      case (f, n, l) if l.contains(escape) &&
+          !Set("Bench.scala", "CrawlFixtures.scala")
+            .contains(f.getFileName.toString) => s"$f:$n: ${l.trim}"
+    }
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

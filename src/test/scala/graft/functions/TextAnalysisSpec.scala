@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.ref.RefLangId
 import org.scalatest.funsuite.AnyFunSuite
 
 class TextAnalysisSpec extends AnyFunSuite {
@@ -183,14 +184,14 @@ class TextAnalysisSpec extends AnyFunSuite {
       "cv" -> "вăл тата килет пулать тата каять пулать",
       "os" -> "æмæ уыцы лæг æмæ уыцы сывæллон")
     val got = samples.map(_._2).toDF("text")
-      .select(TextAnalysis.langIdCol(col("text")).as("lang"))
+      .select(RefLangId.langIdCol(col("text")).as("lang"))
       .as[String].collect().toSeq
     val want = samples.map(_._1)
     assert(got == want, samples.map(_._1).zip(got)
       .filter { case (w, g) => w != g }.mkString(", "))
     // no markers at all -> unk
     val unk = Seq("zzz qqq xxx").toDF("text")
-      .select(TextAnalysis.langIdCol(col("text")).as("lang"))
+      .select(RefLangId.langIdCol(col("text")).as("lang"))
       .as[String].head()
     assert(unk == "unk")
   }
@@ -209,7 +210,7 @@ class TextAnalysisSpec extends AnyFunSuite {
       (0 until 50).map(i => s"w$i the a${" der" * (i % 3)} x ${i % 7}")
     val df = texts.toDF("text")
     val both = df.select(
-        TextAnalysis.langIdCol(col("text")).as("portable"),
+        RefLangId.langIdCol(col("text")).as("portable"),
         graft.expressions.LangExpressions.langIdCol(col("text")).as("native"))
       .as[(String, String)].collect()
     both.zip(texts).foreach { case ((p, n), t) =>

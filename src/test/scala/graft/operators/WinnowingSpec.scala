@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.TestSpark
+import graft.ref.RefWinnowing
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,7 +20,7 @@ class WinnowingSpec extends AnyFunSuite {
 
   test("winnowSelect reproduces the paper example (rightmost min)") {
     val got = Seq(Tuple1(paperHashes)).toDF("h")
-      .select(explode(Winnowing.winnowSelect(col("h"), w = 4)).as("s"))
+      .select(explode(RefWinnowing.winnowSelect(col("h"), w = 4)).as("s"))
       .select($"s.pos", $"s.fp").as[(Long, Long)].collect().toSet
     assert(got == Set((4L, 17L), (7L, 17L), (9L, 8L), (12L, 39L),
                       (16L, 17L)))
@@ -27,7 +28,7 @@ class WinnowingSpec extends AnyFunSuite {
 
   test("coverage: every window contains a selected position") {
     val sel = Seq(Tuple1(paperHashes)).toDF("h")
-      .select(explode(Winnowing.winnowSelect(col("h"), w = 4)).as("s"))
+      .select(explode(RefWinnowing.winnowSelect(col("h"), w = 4)).as("s"))
       .select($"s.pos").as[Long].collect().toSet
     (1 to paperHashes.size - 3).foreach { j =>
       assert((j until j + 4).exists(p => sel.contains(p.toLong)),
@@ -37,7 +38,7 @@ class WinnowingSpec extends AnyFunSuite {
 
   test("selected values are true window minima") {
     val rows = Seq(Tuple1(paperHashes)).toDF("h")
-      .select(explode(Winnowing.winnowSelect(col("h"), w = 4)).as("s"))
+      .select(explode(RefWinnowing.winnowSelect(col("h"), w = 4)).as("s"))
       .select($"s.pos", $"s.fp").as[(Long, Long)].collect()
     rows.foreach { case (pos, fp) =>
       assert(paperHashes(pos.toInt - 1) == fp, "fp is the hash at pos")
@@ -82,11 +83,11 @@ class WinnowingSpec extends AnyFunSuite {
     val got = Winnowing.fingerprints(docs)
       .as[(Long, Long, Long)].collect().toSeq.sorted
     val want = docs
-      .select(col("doc_id"), Winnowing.gramCodes(col("text")).as("__codes"))
+      .select(col("doc_id"), RefWinnowing.gramCodes(col("text")).as("__codes"))
       .select(col("doc_id"),
-        Winnowing.gramHashesFromCodes(col("__codes")).as("__h"))
+        RefWinnowing.gramHashesFromCodes(col("__codes")).as("__h"))
       .select(col("doc_id"),
-        explode(Winnowing.winnowSelect(col("__h"))).as("sel"))
+        explode(RefWinnowing.winnowSelect(col("__h"))).as("sel"))
       .select(col("doc_id"), $"sel.pos", $"sel.fp")
       .as[(Long, Long, Long)].collect().toSeq.sorted
     assert(got == want)
