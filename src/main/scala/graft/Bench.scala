@@ -53,6 +53,7 @@ object Bench {
       // (ParallelGC churn was 18-34% of task time at 16g heap)
       .config("spark.memory.offHeap.enabled", "true")
       .config("spark.memory.offHeap.size", "8g")
+      .config(Sessions.LocalFsConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

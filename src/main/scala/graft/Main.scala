@@ -31,6 +31,7 @@ object Main {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      .config(Sessions.LocalFsConf)
     // only force a master when NOTHING supplied one (bare `java -cp`
     // runs); spark-submit / SPARK_MASTER always win
     val withMaster =

@@ -13,9 +13,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - `Main.clusterSession`: spark-submit and the perfbench harness (the
   *     master and executor sizing come from the submit conf).
   * Settings follow the scale guidance: AQE on, shuffle partitions sized to
-  * the core count rather than the 200 default.
+  * the core count rather than the 200 default. All three install
+  * `LocalFsConf`.
   */
 object Sessions {
+
+  /** `file:` paths through `LocalFs`, which starts no `chmod` process per
+    * file and directory it creates. Hadoop caches one file system per
+    * scheme and user, so this holds only when the session's conf is the
+    * first to resolve `file:` in the JVM. Code that calls
+    * `FileSystem.get` on a `file:` path before the session is built, or
+    * spark-submit resolving local `--jars`, caches the stock class
+    * instead: outputs are the same, but each created file and directory
+    * starts a `chmod` process again (without the native Hadoop library).
+    */
+  val LocalFsConf: Map[String, Any] =
+    Map("spark.hadoop.fs.file.impl" -> classOf[LocalFs].getName)
 
   /** Local session for tests & ad-hoc runs. `cores` mirrors executor
     * parallelism; shuffle partitions follow it so small-SF runs don't pay
@@ -34,6 +47,7 @@ object Sessions {
       // pipelines (see Bench.session) — same default for library users
       .config("spark.memory.offHeap.enabled", "true")
       .config("spark.memory.offHeap.size", "4g")
+      .config(LocalFsConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

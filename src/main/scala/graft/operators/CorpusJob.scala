@@ -156,7 +156,7 @@ object CorpusJob {
                 out, dataDir.toString, "ord", recordsPerFile, inRows())
             else {
               val (written, outRows) = counted(out)
-              written.write.mode("overwrite").parquet(dataDir.toString)
+              Snapshots.writeData(written, dataDir.toString)
               outRows()
             }
             (dataDir, out.schema, rowsOut)

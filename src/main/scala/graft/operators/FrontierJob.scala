@@ -145,13 +145,14 @@ object FrontierJob {
 
     // 6. snapshot commit: new url_seen = old ∪ winners, partition metrics.
     // batches are computed exactly once (the write); metrics and the
-    // returned frame re-read the written parquet instead of re-running
-    // the sort chain.
+    // returned frame re-read the written parquet, with the schema it was
+    // written with, instead of re-running the sort chain. Each file is
+    // sorted by `ord`, so a batches file read in file order is in crawl
+    // order (a local sort: no exchange).
     val (snapId, dataDir, stateDir) = Snapshots.stage(tableDir)
     val batchesPath = s"$dataDir-batches"
-    batches0.write.mode("overwrite").option("compression", "snappy")
-      .parquet(batchesPath)
-    val batches = spark.read.parquet(batchesPath)
+    Snapshots.writeData(batches0.sortWithinPartitions("ord"), batchesPath)
+    val batches = spark.read.schema(batches0.schema).parquet(batchesPath)
 
     // Seen delta and cuckoo state in one job (UrlSeenState.advance),
     // reading the winners' urls from the `kept` pin.

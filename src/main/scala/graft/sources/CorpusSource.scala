@@ -169,19 +169,19 @@ object CorpusSource {
     * ordering, sizes are even.
     *
     * `rows`, the frame's known row count, sizes the files, so no count
-    * job runs. Returns the written row count, observed above the range
-    * exchange (RangePartitioner's sampling job runs the plan below it).
+    * job runs. The files are written as snapshot data
+    * (`Snapshots.writeData`). Returns the written row count, observed
+    * above the range exchange (RangePartitioner's sampling job runs the
+    * plan below it).
     */
   def writeBatched(df: DataFrame, path: String, ordCol: String,
                    recordsPerFile: Long, rows: Long): Long = {
     val written = Observation()
-    df.repartitionByRange(math.max(1, (rows / recordsPerFile).toInt), col(ordCol))
-      .sortWithinPartitions(ordCol)
-      .observe(written, count(lit(1)).as("rows"))
-      .write
-      .option("maxRecordsPerFile", recordsPerFile)
-      .mode("overwrite")
-      .parquet(path)
+    graft.state.Snapshots.writeData(
+      df.repartitionByRange(math.max(1, (rows / recordsPerFile).toInt), col(ordCol))
+        .sortWithinPartitions(ordCol)
+        .observe(written, count(lit(1)).as("rows")),
+      path, Some(recordsPerFile))
     written.get("rows").asInstanceOf[Long]
   }
 

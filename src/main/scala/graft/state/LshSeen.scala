@@ -89,11 +89,11 @@ object LshSeen {
   def append(spark: SparkSession, table: String,
              survivorsMh: DataFrame, dumpId: String): Snapshots.Manifest = {
     val (id, dataDir, _) = Snapshots.stage(table)
-    survivorsMh
+    val segment = survivorsMh
       .select(posexplode(col("bands")).as(Seq("band", "bhash")))
       .distinct()
       .withColumn("dump_ord", lit(id))
-      .write.mode("overwrite").parquet(dataDir.toString)
+    Snapshots.writeData(segment, dataDir.toString)
     commitWithGrowth(spark, table, id, dataDir, s"lsh-seen append dump=$dumpId")
   }
 
@@ -104,7 +104,7 @@ object LshSeen {
   def compact(spark: SparkSession, table: String): Snapshots.Manifest = {
     val folded = seenBandsWithDump(spark, table)
     val (id, dataDir, _) = Snapshots.stage(table)
-    folded.write.mode("overwrite").parquet(dataDir.toString)
+    Snapshots.writeData(folded, dataDir.toString)
     commitWithGrowth(spark, table, id, dataDir, s"$RebasePrefix compact")
   }
 
@@ -117,7 +117,7 @@ object LshSeen {
     val kept = seenBandsWithDump(spark, table)
       .filter(col("dump_ord") >= minDumpOrd)
     val (id, dataDir, _) = Snapshots.stage(table)
-    kept.write.mode("overwrite").parquet(dataDir.toString)
+    Snapshots.writeData(kept, dataDir.toString)
     commitWithGrowth(spark, table, id, dataDir,
       s"$RebasePrefix retire min=$minDumpOrd")
   }

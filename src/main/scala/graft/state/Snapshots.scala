@@ -6,6 +6,7 @@ import scala.collection.immutable.SortedMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 import org.json4s.{DefaultFormats, Formats}
 import org.json4s.JsonDSL._
 import org.json4s.jackson.JsonMethods.{compact, parse => parseJson}
@@ -25,7 +26,8 @@ import org.json4s.jackson.JsonMethods.{compact, parse => parseJson}
   * as the frontier's `<data dir>-batches`), `commit` and the readers
   * encode and parse manifests (compact JSON through the json4s codec
   * Spark ships; every valid JSON manifest loads, the earlier pretty
-  * form included), and `readData` reads a manifest list's parquet.
+  * form included), `writeData` writes snapshot parquet and `readData`
+  * reads a manifest list's parquet.
   *
   * Commit = write data under an uncommitted snap dir, then atomically
   * move the manifest into place (create-new semantics — a concurrent
@@ -112,12 +114,28 @@ object Snapshots {
     asOf
   }
 
+  /** The one write of snapshot data: `df` as zstd parquet (the
+    * reference's gzip-compressed stage files, at about half snappy's
+    * bytes on the corpus stages) replacing whatever is at `dir`, with
+    * at most `maxRecordsPerFile` rows per file if given. The only place
+    * that names a codec; parquet records the codec per column chunk, so
+    * tables committed under another codec still read.
+    */
+  def writeData(df: DataFrame, dir: String,
+                maxRecordsPerFile: Option[Long] = None): Unit = {
+    val w = df.write.mode("overwrite").option("compression", "zstd")
+    maxRecordsPerFile.fold(w)(w.option("maxRecordsPerFile", _)).parquet(dir)
+  }
+
   /** The one read of snapshot data: the union of the `dataPath` parquet
     * of every manifest in `ms` (a chain, a live-segment list, or one
-    * snapshot). The caller decides what an empty list means.
+    * snapshot). The caller decides what an empty list means. A `schema`
+    * the data was written with spares the read its inference job.
     */
-  def readData(spark: SparkSession, table: String, ms: Seq[Manifest]): DataFrame =
-    spark.read.parquet(ms.map(m => s"$table/${m.dataPath}"): _*)
+  def readData(spark: SparkSession, table: String, ms: Seq[Manifest],
+               schema: Option[StructType] = None): DataFrame =
+    schema.fold(spark.read)(spark.read.schema)
+      .parquet(ms.map(m => s"$table/${m.dataPath}"): _*)
 
   /** Union read of the append-only table as of snapshot `id` — the
     * debugging/audit read behind "what did the frontier know when batch

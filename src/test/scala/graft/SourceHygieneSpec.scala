@@ -14,7 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * only in functions.Registry and turns expressions into Columns only in
   * the ExpressionBridge; Frontier computes global ranks only through
   * UrlDedup; only graft/state knows the URL-seen state's blob names and
-  * segment bound, and the snapshot table layout; src/main has one
+  * segment bound, the snapshot table layout and the parquet codec;
+  * only Sessions installs the local file system; src/main has one
   * recursive delete and hand-escapes JSON only where a byte format is
   * pinned; and every source is text.
   */
@@ -124,6 +125,21 @@ class SourceHygieneSpec extends AnyFunSuite {
     }
     assert(hits.isEmpty,
       hits.map { case (f, n, l) => s"$f:$n: ${l.trim}" }.mkString("\n"))
+  }
+
+  test("only graft/state chooses a parquet codec") {
+    val state = root.resolve("graft/state")
+    val codec = "(?i)option\\(\"compression\"|\"(snappy|zstd|gzip|lz4|lz4_raw|lzo|brotli|uncompressed)\"".r
+    val hits = lines(root).filter { case (f, _, l) =>
+      !f.startsWith(state) && codec.findFirstIn(l).isDefined
+    }
+    assert(hits.isEmpty,
+      hits.map { case (f, n, l) => s"$f:$n: ${l.trim}" }.mkString("\n"))
+  }
+
+  test("only Sessions sets the file: file system") {
+    val hits = outside("fs.file.impl", "Sessions.scala")
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 
   test("src/main walks a file tree only in the shared recursive delete") {
